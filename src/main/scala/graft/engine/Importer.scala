@@ -1,17 +1,89 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Result of a keyed merge: the full updated target relation plus the
   * number of target rows that matched a delta row (the reference's
   * `row_count_updated`, `importer.py:359`) and, when the insert leg
   * ran, the number of unmatched delta rows appended.
+  *
+  * The counts are a by-product of executing the merge, as `cur.rowcount`
+  * is of the reference's one UPDATE: the [[MergeSink]] that writes the
+  * merge settles them, from the write's own pass or from the database's
+  * statement row counts. Read before any sink ran, they cost one
+  * aggregate over the marked relation, memoized.
   */
-final case class MergeResult(
-    updated: DataFrame,
-    rowCountUpdated: Long,
-    rowCountInserted: Long = 0L)
+final class MergeResult private (
+    val updated: DataFrame,
+    marked: Option[DataFrame],
+    private var counts: Option[(Long, Long)]) {
+
+  def rowCountUpdated: Long = settled._1
+  def rowCountInserted: Long = settled._2
+
+  private def settled: (Long, Long) = synchronized {
+    counts.getOrElse {
+      val r = marked.get
+        .agg(MergeResult.countCols.head, MergeResult.countCols.tail: _*).head()
+      settle(r.getLong(0), r.getLong(1))
+      counts.get
+    }
+  }
+
+  private[engine] def settle(updated: Long, inserted: Long): Unit =
+    synchronized { counts = Some((updated, inserted)) }
+
+  /** [[updated]] carrying both counts as metrics of `obs`: whichever
+    * action runs it first fulfils `obs` in the same pass.
+    */
+  private[graft] def observed(obs: Observation): DataFrame = marked.fold(updated)(
+    _.observe(obs, MergeResult.countCols.head, MergeResult.countCols.tail: _*)
+      .drop(MergeResult.Matched, MergeResult.Inserted))
+
+  /** Runs `write` over a fresh observed copy of the merge and settles
+    * the counts from that pass. The copy is the sink's own, so a
+    * caller's partial action on [[updated]] cannot fulfil it early. The
+    * metrics arrive on the listener bus after the write returns, hence
+    * the blocking `get`.
+    */
+  private[engine] def writeObserved(write: DataFrame => Unit): Unit = {
+    val obs = Observation()
+    write(observed(obs))
+    if (marked.isDefined) {
+      val m = obs.get
+      settle(m("updated").asInstanceOf[Long], m("inserted").asInstanceOf[Long])
+    }
+  }
+}
+
+object MergeResult {
+
+  /** A result whose counts are already known. */
+  def apply(updated: DataFrame, rowCountUpdated: Long,
+      rowCountInserted: Long = 0L): MergeResult =
+    new MergeResult(updated, None, Some((rowCountUpdated, rowCountInserted)))
+
+  /** A planned merge: `marked` is the merged relation with the two
+    * row [[flags]] appended; its counts are unsettled.
+    */
+  private[engine] def planned(marked: DataFrame): MergeResult =
+    new MergeResult(marked.drop(Matched, Inserted), Some(marked), None)
+
+  /** The row flags of a marked relation: whether the row is a target
+    * row that took a delta row's values, and whether it is an unmatched
+    * delta row appended by the insert leg.
+    */
+  private[engine] def flags(matched: Column, inserted: Column): Seq[Column] =
+    Seq(matched.as(Matched), inserted.as(Inserted))
+
+  private val Matched = "__merge_matched"
+  private val Inserted = "__merge_inserted"
+
+  private val countCols: Seq[Column] = Seq(
+    count_if(col(Matched)).as("updated"),
+    count_if(col(Inserted)).as("inserted"))
+}
 
 /** The core operator of the engine: a bulk keyed UPDATE, re-expressed
   * Spark-first. The reference stages a pandas frame into a temp table
@@ -29,9 +101,12 @@ final case class MergeResult(
   * (it is the small side by construction — a user-supplied update set),
   * so the target table is never shuffled; the plan is a single
   * BroadcastHashJoin over the target scan. Key-uniqueness validation
-  * (V10) is a partial-aggregate existence probe on the delta only, and
-  * `rowCountUpdated` is a broadcast left-semi join count — no
-  * driver-side materialization of data rows anywhere.
+  * (V10) is a partial-aggregate existence probe on the delta only.
+  * [[run]] and [[merge]] only plan: each row of the merged relation
+  * carries a matched/inserted flag, and the sink that writes it counts
+  * the flags in the same pass (`rowCountUpdated` is no longer a
+  * semi-join count of its own). No driver-side materialization of data
+  * rows anywhere.
   *
   * @param target     the table being updated
   * @param dataMaster the delta / update set ("data" in the reference)
@@ -202,7 +277,10 @@ final class Importer private (
     * unambiguous even when the delta is derived from the target itself
     * (a self-merge) — no reliance on dataset-id disambiguation.
     */
-  def updated: DataFrame = {
+  def updated: DataFrame = merge().updated
+
+  /** [[updated]] plus the row flags of [[MergeResult.planned]]. */
+  private def markedUpdate: DataFrame = {
     val u = delta.select(
       (joinOn ++ subset).map(c => col(c).as(s"__u_$c")): _*)
     // Delta join keys are non-null after the P3 drop, so a non-null
@@ -213,24 +291,20 @@ final class Importer private (
       if (subset.contains(c)) when(matched, col(s"__u_$c")).otherwise(col(c)).as(c)
       else col(c)
     }
-    target.join(u, cond, "left").select(outCols: _*)
+    target.join(u, cond, "left")
+      .select(outCols ++ MergeResult.flags(matched, lit(false)): _*)
   }
 
-  /** A4 — affected-row count: cardinality of the matched target set,
-    * as a broadcast left-semi join count (`cur.rowcount` analogue,
-    * `importer.py:359`).
-    */
-  def rowCountUpdated: Long = {
-    val keys = delta.select(joinOn.map(c => col(c).as(s"__u_$c")): _*)
-    val cond = joinOn.map(k => col(k) === col(s"__u_$k")).reduce(_ && _)
-    target.join(keys, cond, "left_semi").count()
-  }
+  /** The target untouched, flagged as neither matched nor inserted. */
+  private def markedTarget: DataFrame =
+    target.select(tableCols.map(col) ++ MergeResult.flags(lit(false), lit(false)): _*)
 
   /** The WHEN NOT MATCHED THEN INSERT leg: delta rows whose keys match
     * no target row, shaped as target rows — joinOn ∪ subset columns
     * from the delta, every other target column null (cast to the
-    * target's type). Key-uniqueness of the whole delta (V10) already
-    * guards this side — staged-side validation is reused, not redone.
+    * target's type) — and flagged as inserted. Key-uniqueness of the
+    * whole delta (V10) already guards this side — staged-side
+    * validation is reused, not redone.
     *
     * Shape at scale: a MERGE needs matched-key knowledge on both legs.
     * To keep every join broadcast-from-the-delta (the target is never
@@ -241,7 +315,7 @@ final class Importer private (
     * the right trade at 100 TB. A naive `delta ANTI JOIN target` would
     * put the corpus on the build side.
     */
-  private def insertedRows: DataFrame = {
+  private def markedInserts: DataFrame = {
     // delta keys renamed pre-join, like [[updated]] — keeps self-merge
     // plans unambiguous without dataset-id disambiguation
     val dk = delta.select(joinOn.map(c => col(c).as(s"__k_$c")): _*)
@@ -256,22 +330,19 @@ final class Importer private (
       if (joinOn.contains(c) || subset.contains(c)) col(c)
       else lit(null).cast(target.schema(c).dataType).as(c)
     }
-    unmatched.select(outCols: _*)
+    unmatched.select(outCols ++ MergeResult.flags(lit(false), lit(true)): _*)
   }
 
-  /** UPDATE + INSERT legs combined: [[updated]] plus [[insertedRows]]
-    * appended — the full `MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED
-    * INSERT` relation.
+  /** UPDATE + INSERT legs combined: [[updated]] plus the unmatched delta
+    * rows appended — the full `MERGE WHEN MATCHED UPDATE / WHEN NOT
+    * MATCHED INSERT` relation.
     */
-  def upserted: DataFrame = updated.unionByName(insertedRows)
+  def upserted: DataFrame = run(update = true, insert = true).updated
 
-  /** Inserted-row count: unmatched delta rows (keys unique per V10). */
-  def rowCountInserted: Long = insertedRows.count()
-
-  /** E2 `run(update=True)` analogue: produce the merged relation and
-    * the affected-row count.
+  /** E2 `run(update=True)` analogue: plan the merged relation; its
+    * affected-row count is settled by the sink that writes it.
     */
-  def merge(): MergeResult = MergeResult(updated, rowCountUpdated)
+  def merge(): MergeResult = MergeResult.planned(markedUpdate)
 
   /** Full `run` contract (`importer.py:293-310`): V11 requires at
     * least one action. The reference DECLARES the insert action and
@@ -279,17 +350,15 @@ final class Importer private (
     * `README.md:5-6`); this engine completes it as the natural
     * MERGE-upsert extension of S9/J1: insert alone appends unmatched
     * delta rows to an untouched target, update+insert is the full
-    * upsert.
+    * upsert. Plans only: no Spark job runs here.
     */
   def run(update: Boolean = true, insert: Boolean = false): MergeResult = {
     if (!update && !insert)
       throw new IllegalArgumentException("at least one action must be performed")
     (update, insert) match {
       case (true, false) => merge()
-      case (true, true) =>
-        MergeResult(upserted, rowCountUpdated, rowCountInserted)
-      case _ =>
-        MergeResult(target.unionByName(insertedRows), 0L, rowCountInserted)
+      case (true, true)  => MergeResult.planned(markedUpdate.unionByName(markedInserts))
+      case _             => MergeResult.planned(markedTarget.unionByName(markedInserts))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.sql.{Connection, PreparedStatement}
+import java.sql.{Connection, PreparedStatement, Statement}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, spark_partition_id}
@@ -37,8 +37,12 @@ final case class MergeSpec(
   * MergeSink is the terminal operator that materializes the effect —
   * either by rewriting the table in the lake ([[ParquetMergeSink]]) or
   * by pushing the UPDATE to the origin database ([[JdbcMergeSink]] /
-  * [[JdbcParallelMergeSink]]). Returns the affected-row count (A4,
-  * `cur.rowcount` analogue).
+  * [[JdbcParallelMergeSink]]).
+  *
+  * Contract: `write` returns the affected count (A4, `cur.rowcount`
+  * analogue: updated plus inserted rows) and settles the result's
+  * `rowCountUpdated`/`rowCountInserted` from the same execution, so
+  * reading them afterwards runs no Spark job.
   */
 trait MergeSink {
   def write(merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long
@@ -47,13 +51,14 @@ trait MergeSink {
 /** Data-lake sink: materialize the merged relation and rewrite the
   * table location with bounded rows per file — the chunk-size contract
   * of the reference's bulk insert carried to file granularity (S8).
+  * The merge's counts are observed in the same pass as the write.
   */
 final class ParquetMergeSink(
     path: String, chunkSize: Int = Staging.ChunkSize
 ) extends MergeSink {
   override def write(
       merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
-    Staging.writeBatched(merge.updated, path, chunkSize)
+    merge.writeObserved(Staging.writeBatched(_, path, chunkSize))
     // affected = both legs: for an upsert result `updated` already IS
     // the upserted relation, so the count mirrors the JDBC sinks'
     // update+insert total
@@ -122,22 +127,12 @@ final class JdbcMergeSink(
             sqlTypes, chunkSize, () => conn.commit())
           finally ps.close()
           val stagingRef = if (dialect == "mssql") temp else s"temp.$temp"
-          // insert-only (updateMatched=false) skips the UPDATE
-          // statement entirely: matched target rows stay untouched
-          var affected =
-            if (spec.updateMatched)
-              st.executeUpdate(
-                JdbcMergeSink.updateSql(dialect, spec, stagingRef)).toLong
-            else 0L
-          // upsert: the INSERT leg runs AFTER the update in the same
-          // transaction — matched staged rows were just applied, so
-          // the NOT EXISTS guard appends exactly the unmatched ones
-          if (spec.insertUnmatched)
-            affected += st.executeUpdate(
-              JdbcMergeSink.insertSql(dialect, spec, stagingRef)).toLong
+          val (updated, inserted) =
+            JdbcMergeSink.applyLegs(st, dialect, spec, stagingRef)
           conn.commit()
+          merge.settle(updated, inserted)
           st.execute(SqlGen.dropTempTable(dialect, temp))
-          affected
+          updated + inserted
         } finally st.close()
       }
     } finally conn.close()
@@ -224,18 +219,12 @@ final class JdbcParallelMergeSink(
               }
             }
 
-          var affected =
-            if (spec.updateMatched)
-              st.executeUpdate(
-                JdbcMergeSink.updateSql(dia, spec, stage)).toLong
-            else 0L
-          if (spec.insertUnmatched)
-            affected += st.executeUpdate(
-              JdbcMergeSink.insertSql(dia, spec, stage)).toLong
+          val (updated, inserted) = JdbcMergeSink.applyLegs(st, dia, spec, stage)
           driverConn.commit()
+          merge.settle(updated, inserted)
           st.execute(SqlGen.dropStagingTable(dia, stage))
           driverConn.commit()
-          affected
+          updated + inserted
         } finally st.close()
       }
     } finally driverConn.close()
@@ -265,6 +254,29 @@ object JdbcMergeSink {
         catch { case s: java.sql.SQLException => t.addSuppressed(s) }
         throw t
     } finally conn.setAutoCommit(prevAuto)
+  }
+
+  /** Runs the UPDATE and INSERT legs `spec` asks for against a filled
+    * staging table. Returns their (updated, inserted) row counts — the
+    * reference's own `cur.rowcount` — which settle the merge's counts
+    * once committed.
+    */
+  private[engine] def applyLegs(st: Statement, dialect: String,
+      spec: MergeSpec, stagingRef: String): (Long, Long) = {
+    // insert-only (updateMatched=false) skips the UPDATE statement
+    // entirely: matched target rows stay untouched
+    val updated =
+      if (spec.updateMatched)
+        st.executeUpdate(updateSql(dialect, spec, stagingRef)).toLong
+      else 0L
+    // upsert: the INSERT leg runs AFTER the update in the same
+    // transaction — matched staged rows were just applied, so the NOT
+    // EXISTS guard appends exactly the unmatched ones
+    val inserted =
+      if (spec.insertUnmatched)
+        st.executeUpdate(insertSql(dialect, spec, stagingRef)).toLong
+      else 0L
+    (updated, inserted)
   }
 
   /** Quoted qualified target, `importer.py:274-276`. */

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.engine.{Importer, Staging}
+import graft.engine.{Importer, MergeSpec, ParquetMergeSink}
 
 /** The engine's keyed UPDATE ([[graft.engine.Importer]], J1/J2) as a
   * continuous operator: a streaming delta merges into a parquet target
@@ -79,14 +79,15 @@ object StreamingMerge {
       // the empty relation Spark hands a fresh foreachBatch sink is
       // unplannable for the merge join; also V1 would reject it
       val target = spark.read.parquet(targetPath)
-      // rowCountUpdated materializes inside merge(), while the target
-      // is still intact on disk
       val result = Importer.merge(target, batch, joinOn, subset)
       fs.delete(stage, true)
-      Staging.writeBatched(result.updated, targetPath + StagingSuffix)
+      // the count is settled by the staging write itself, while the
+      // target is still intact on disk: nothing reads it after the swap
+      val affected = new ParquetMergeSink(targetPath + StagingSuffix).write(
+        result, batch, MergeSpec("target", joinOn, subset))
       fs.delete(dst, true)
       fs.rename(stage, dst)
-      result.rowCountUpdated
+      affected
     }
   }
 }

@@ -324,5 +324,14 @@ class ImporterSpec extends SparkSpec {
     val upPlan = imp.upserted.queryExecution.executedPlan.toString
     assert(!upPlan.contains("SortMergeJoin"), upPlan)
     assert(!upPlan.contains("ShuffledHashJoin"), upPlan)
+    // the observed copy a sink writes keeps that shape: counting the
+    // matched/inserted flags adds no join and no exchange
+    val observed = imp.run(update = true, insert = true)
+      .observed(org.apache.spark.sql.Observation())
+      .queryExecution.executedPlan.toString
+    assert(observed.contains("CollectMetrics"), observed)
+    assert(observed.contains("BroadcastHashJoin"), observed)
+    assert(!observed.contains("SortMergeJoin"), observed)
+    assert(!observed.contains("ShuffledHashJoin"), observed)
   }
 }

@@ -34,6 +34,20 @@ class StreamingMergeSpec extends SparkSpec {
       1L -> ("A", 10L), 2L -> ("b", 20L), 3L -> ("c", 30L)))
   }
 
+  test("applyBatch counts in its staging write: no job reads the target after the swap") {
+    import spark.implicits._
+    val target = freshTarget()
+    val batch = Seq(Delta(1L, "A"), Delta(3L, "C"), Delta(9L, "X")).toDF()
+    val (n, events) = SparkEvents.during(spark)(
+      StreamingMerge.applyBatch(batch, target, Seq("k"), Seq("v")))
+    assert(n == 2L)
+    // the only execution that scans the target is the one writing the
+    // staging snapshot, which runs before the swap deletes the target
+    val scans = events.plans.filter(_.contains(s"file:$target]"))
+    assert(scans.size == 1, events.plans.mkString("\n---\n"))
+    assert(scans.head.contains(s"file:$target${StreamingMerge.StagingSuffix}"), scans.head)
+  }
+
   test("applyBatch is idempotent under at-least-once replay") {
     import spark.implicits._
     val target = freshTarget()

@@ -2,6 +2,8 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL
 in DuckDB over the same parquet tables and diff against the Verify.scala
 parquet dumps (row count, schema names, value hash, order-insensitive).
+Exits non-zero when a query differs or when Verify's failures.json names
+a query that threw.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 """
@@ -57,7 +59,20 @@ def main(sf_dir, out_dir):
              if e.get("hash_match") and e.get("rows_match"))
     print(json.dumps(results, indent=2, default=str))
     print(f"\n{ok}/{len(results)} queries green", file=sys.stderr)
-    return 0 if ok == len(results) else 1
+    failures = verify_failures(out_dir)
+    for name, msg in sorted(failures.items()):
+        print(f"[verify] {name} failed: {msg}", file=sys.stderr)
+    return 0 if ok == len(results) and not failures else 1
+
+
+def verify_failures(out_dir):
+    """Queries Verify recorded as thrown (query -> message); none when
+    the dump predates failures.json."""
+    try:
+        with open(f"{out_dir}/failures.json") as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
 
 
 if __name__ == "__main__":
