@@ -58,14 +58,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // optional comma-separated subset for isolated probes
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // the measured configuration IS the shipped configuration:
     // GraftSession.local is the one session builder every main shares
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // steady-state measurement: absorb one-time session cost (Hadoop
     // FS init, codegen/classloading, parquet reader warmup) before the

@@ -9,7 +9,7 @@ object Explain {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.local("4")
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>

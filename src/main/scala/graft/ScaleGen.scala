@@ -54,7 +54,7 @@ object ScaleGen {
     val out = args.lift(1).getOrElse("/tmp/scale10x")
     val copies = args.lift(2).map(_.toInt).getOrElse(10)
     val overlap = args.lift(3).contains("overlap")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 

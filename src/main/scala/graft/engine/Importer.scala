@@ -97,7 +97,7 @@ object MergeResult {
   * bad arguments throw `IllegalArgumentException` (the reference's
   * `ValueError`), bad data shapes throw [[ImporterException]].
   *
-  * Scale notes (100 TB design): the delta side is broadcast by default
+  * Scale notes (100 TB design): the delta side is always broadcast
   * (it is the small side by construction — a user-supplied update set),
   * so the target table is never shuffled; the plan is a single
   * BroadcastHashJoin over the target scan. Key-uniqueness validation
@@ -129,7 +129,6 @@ final class Importer private (
     joinOnOpt: Option[Seq[String]],
     subsetOpt: Option[Seq[String]],
     dropJoinColsFromSubset: Boolean,
-    broadcastDelta: Boolean,
     eagerValidate: Boolean
 ) {
 
@@ -141,10 +140,9 @@ final class Importer private (
       tablePk: Seq[String] = Nil,
       joinOn: Option[Seq[String]] = None,
       subset: Option[Seq[String]] = None,
-      broadcastDelta: Boolean = true,
       eagerValidate: Boolean = true
   ) = this(target, dataMaster, table, schema, tablePk, joinOn, subset,
-    dropJoinColsFromSubset = true, broadcastDelta, eagerValidate)
+    dropJoinColsFromSubset = true, eagerValidate)
 
   // V1 — `importer.py:63-64`. `isEmpty` is a LIMIT-1 probe, not a scan.
   if (dataMaster.isEmpty)
@@ -252,7 +250,7 @@ final class Importer private (
     */
   def withJoinOn(columns: Seq[String]): Importer =
     new Importer(target, dataMaster, table, schema, tablePk, Some(columns),
-      subsetOpt, dropJoinColsFromSubset, broadcastDelta, eagerValidate)
+      subsetOpt, dropJoinColsFromSubset, eagerValidate)
 
   /** Rebind the update subset (the reference's `subset` setter,
     * `importer.py:118-123`) — unlike the constructor default, an
@@ -260,11 +258,9 @@ final class Importer private (
     */
   def withSubset(columns: Seq[String]): Importer =
     new Importer(target, dataMaster, table, schema, tablePk, joinOnOpt,
-      Some(columns), dropJoinColsFromSubset = false, broadcastDelta,
-      eagerValidate)
+      Some(columns), dropJoinColsFromSubset = false, eagerValidate)
 
-  private def delta: DataFrame =
-    if (broadcastDelta) broadcast(data) else data
+  private def delta: DataFrame = broadcast(data)
 
   /** The merged relation (J1/J2 semantics, lazily planned): every
     * target row; rows whose keys match a delta row take the delta's

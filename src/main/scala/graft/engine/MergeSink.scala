@@ -109,7 +109,7 @@ final class JdbcMergeSink(
   override def write(
       merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
     val cols = spec.joinOn ++ spec.subset
-    val projected = delta.select(cols.map(col): _*)
+    val projected = JdbcMergeSink.staged(delta, spec)
     val sqlTypes = JdbcMergeSink.sqlTypesFor(projected.schema)
     val conn = connect()
     try {
@@ -163,7 +163,7 @@ final class JdbcParallelMergeSink(
   override def write(
       merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
     val cols = spec.joinOn ++ spec.subset
-    val projected = delta.select(cols.map(col): _*)
+    val projected = JdbcMergeSink.staged(delta, spec)
     val sqlTypes = JdbcMergeSink.sqlTypesFor(projected.schema) :+
       java.sql.Types.INTEGER
     // locals so the foreachPartition closure captures values, not
@@ -237,6 +237,15 @@ object JdbcParallelMergeSink {
 }
 
 object JdbcMergeSink {
+
+  /** The delta rows a JDBC sink stages: join keys then subset, rows
+    * with any null join key dropped — the Importer's P3 slice
+    * (`importer.py:228-240`). A null key matches nothing, and staging
+    * it would let the upsert's NOT EXISTS guard insert it.
+    */
+  private[engine] def staged(delta: DataFrame, spec: MergeSpec): DataFrame =
+    delta.select((spec.joinOn ++ spec.subset).map(col): _*)
+      .na.drop("any", spec.joinOn)
 
   /** Explicit-transaction bracket: autocommit off for `body`, restored
     * after. On failure the pending work is ROLLED BACK before the

@@ -36,8 +36,7 @@ object Incremental {
 
   /** Persist the prior snapshot's verdicts (in production this
     * parquet already exists from the last run — fixture setup, not
-    * part of the refresh's marginal cost; RefreshBench times the two
-    * phases separately).
+    * part of the refresh's marginal cost).
     */
   def writePrior(s: SparkSession, dir: String, priorPath: String): Unit =
     Filtering.qualityFilterOf(

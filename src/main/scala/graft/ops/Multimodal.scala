@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: media payloads travel as opaque
@@ -145,31 +145,68 @@ object Multimodal {
   def realMediaTable(s: SparkSession, dir: String): Dataset[MediaRecord] = {
     import s.implicits._
     // parallelism floor — see [[mediaTable]]
-    Par.widen(s.read.parquet(s"$dir/documents.parquet"))
+    mdRows(Par.widen(s.read.parquet(s"$dir/documents.parquet"))) { (id, tok) =>
+      Some((id % 3) match {
+        case 0 =>
+          val gray = Array.tabulate(9 * 8)(i => tok(i).toByte)
+          MediaRecord(id, "image", 9, 8,
+            PerceptualHash.encodeBmp(gray, 9, 8))
+        case 1 =>
+          val pcm = Array.tabulate(65)(i => tok(i).toByte)
+          MediaRecord(id, "audio", 65, 1, PerceptualHash.encodeWav(pcm))
+        case _ =>
+          val frames = (0 until 4).map(f =>
+            Array.tabulate(9 * 8)(i => tok(f * 72 + i).toByte))
+          MediaRecord(id, "video", 9, 8,
+            PerceptualHash.encodeAvi(frames, 9, 8))
+      })
+    }
+  }
+
+  /** The md5 fixture scaffold of every real-codec query: `f(id, tok)`'s
+    * rows for each document of `docs` (a documents scan), where
+    * `tok(i)` is the first md5 byte, unsigned, of token (i mod ntokens)
+    * of the lower-cased text split on whitespace — the derivation the
+    * DuckDB oracles replay. One digest per partition, row-local, no
+    * shuffle.
+    */
+  private def mdRows[T: Encoder](docs: DataFrame)(
+      f: (Long, Int => Int) => IterableOnce[T]): Dataset[T] = {
+    import docs.sparkSession.implicits._
+    docs
       .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
       .as[(Long, Seq[String])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Byte =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-        it.map { case (id, toks) =>
-          (id % 3) match {
-            case 0 =>
-              val gray = Array.tabulate(9 * 8)(i => tokByte(toks, i))
-              MediaRecord(id, "image", 9, 8,
-                PerceptualHash.encodeBmp(gray, 9, 8))
-            case 1 =>
-              val pcm = Array.tabulate(65)(i => tokByte(toks, i))
-              MediaRecord(id, "audio", 65, 1, PerceptualHash.encodeWav(pcm))
-            case _ =>
-              val frames = (0 until 4).map(f =>
-                Array.tabulate(9 * 8)(i => tokByte(toks, f * 72 + i)))
-              MediaRecord(id, "video", 9, 8,
-                PerceptualHash.encodeAvi(frames, 9, 8))
-          }
+        it.flatMap { case (id, toks) =>
+          f(id, i => md.digest(toks(i % toks.size)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff)
         }
       }
+  }
+
+  /** Sum of a gray buffer's unsigned pixel values. */
+  private def graySum(px: Array[Byte]): Long = {
+    var sum = 0L
+    var i = 0
+    while (i < px.length) { sum += px(i) & 0xff; i += 1 }
+    sum
+  }
+
+  /** Mean unsigned pixel value of a gray buffer. */
+  private def grayMean(px: Array[Byte]): Double =
+    graySum(px).toDouble / px.length
+
+  /** (sum, min, max) of the `n` decoded samples `at(0)`..`at(n - 1)`. */
+  private def sampleStats(n: Int)(at: Int => Int): (Long, Int, Int) = {
+    var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
+    var i = 0
+    while (i < n) {
+      val v = at(i)
+      sum += v; if (v < mn) mn = v; if (v > mx) mx = v
+      i += 1
+    }
+    (sum, mn, mx)
   }
 
   /** Partition-local batched feature extraction: decode (stub),
@@ -256,33 +293,17 @@ object Multimodal {
     */
   def colorFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          (md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0): Int) & 0xff
-        it.map { case (id, toks) =>
-          val y = Array.tabulate(8)(i => tokByte(toks, i))
-          val cb = Array.tabulate(2)(i => tokByte(toks, 8 + i))
-          val cr = Array.tabulate(2)(i => tokByte(toks, 10 + i))
-          val d = Jpeg.decodeColor(Jpeg.encodeDc420(y, cb, cr, 2, 1))
-            .getOrElse(throw new IllegalStateException(
-              s"fixture jpeg failed to decode for doc $id"))
-          def mean(p: Jpeg.Plane): Double = {
-            var sum = 0L
-            var i = 0
-            while (i < p.data.length) { sum += p.data(i) & 0xff; i += 1 }
-            sum.toDouble / p.data.length
-          }
-          (id, "jpeg", d.width, d.height,
-            mean(d.planes(0)), mean(d.planes(1)), mean(d.planes(2)))
-        }
-      }
-      .toDF("media_id", "decoder", "width", "height",
-        "y_mean", "cb_mean", "cr_mean")
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val y = Array.tabulate(8)(tok)
+      val cb = Array.tabulate(2)(i => tok(8 + i))
+      val cr = Array.tabulate(2)(i => tok(10 + i))
+      val d = Jpeg.decodeColor(Jpeg.encodeDc420(y, cb, cr, 2, 1))
+        .getOrElse(throw new IllegalStateException(
+          s"fixture jpeg failed to decode for doc $id"))
+      Some((id, "jpeg", d.width, d.height, grayMean(d.planes(0).data),
+        grayMean(d.planes(1).data), grayMean(d.planes(2).data)))
+    }.toDF("media_id", "decoder", "width", "height",
+      "y_mean", "cb_mean", "cr_mean")
   }
 
   /** Fully-oracled sampled-frame relation over [[realMediaTable]]'s
@@ -302,11 +323,7 @@ object Multimodal {
             // frame bytes as stored in the container: padded BGR rows
             val dibLen = ((w * 3 + 3) / 4) * 4 * h
             (0 until grays.length by stride).map { f =>
-              val g = grays(f)
-              var sum = 0L
-              var i = 0
-              while (i < g.length) { sum += g(i) & 0xff; i += 1 }
-              (m.media_id, f, dibLen, sum.toDouble / g.length)
+              (m.media_id, f, dibLen, grayMean(grays(f)))
             }
         }
       }
@@ -329,33 +346,20 @@ object Multimodal {
     */
   def rleFrameFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val inverted = Array.tabulate(256)(i => (255 - i).toByte)
-        def tokByte(toks: Seq[String], i: Int): Byte =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-        it.flatMap { case (id, toks) =>
-          val grid = Array.tabulate(9 * 8)(i => tokByte(toks, i))
-          val flat = Array.fill(9 * 8)(tokByte(toks, 0))
-          val avi = PerceptualHash.encodeRle8Avi(Seq(grid, flat), 9, 8,
-            inverted)
-          val (w, h, grays) = PerceptualHash.aviFrameGrays(avi)
-            .getOrElse(throw new IllegalStateException(
-              s"rle8 fixture failed to decode for doc $id"))
-          grays.zipWithIndex.map { case (g, fi) =>
-            var sum = 0L
-            var i = 0
-            while (i < g.length) { sum += g(i) & 0xff; i += 1 }
-            (id, fi, "rle8", w, h, sum.toDouble / g.length)
-          }
-        }
+    val inverted = Array.tabulate(256)(i => (255 - i).toByte)
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val grid = Array.tabulate(9 * 8)(i => tok(i).toByte)
+      val flat = Array.fill(9 * 8)(tok(0).toByte)
+      val avi = PerceptualHash.encodeRle8Avi(Seq(grid, flat), 9, 8,
+        inverted)
+      val (w, h, grays) = PerceptualHash.aviFrameGrays(avi)
+        .getOrElse(throw new IllegalStateException(
+          s"rle8 fixture failed to decode for doc $id"))
+      grays.zipWithIndex.map { case (g, fi) =>
+        (id, fi, "rle8", w, h, grayMean(g))
       }
-      .toDF("media_id", "frame_idx", "codec", "width", "height",
-        "frame_mean")
+    }.toDF("media_id", "frame_idx", "codec", "width", "height",
+      "frame_mean")
   }
 
   /** Fully-oracled RLE4 feature relation — [[rleFrameFeatures]]' 4bpp
@@ -372,34 +376,21 @@ object Multimodal {
     */
   def rle4FrameFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val inverted = Array.tabulate(16)(i => (255 - 17 * i).toByte)
-        def tokNib(toks: Seq[String], i: Int): Byte =
-          (md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0x0f)
-            .toByte
-        it.flatMap { case (id, toks) =>
-          val grid = Array.tabulate(9 * 8)(i => tokNib(toks, i))
-          val flat = Array.fill(9 * 8)(tokNib(toks, 0))
-          val avi = PerceptualHash.encodeRle4Avi(Seq(grid, flat), 9, 8,
-            inverted)
-          val (w, h, grays) = PerceptualHash.aviFrameGrays(avi)
-            .getOrElse(throw new IllegalStateException(
-              s"rle4 fixture failed to decode for doc $id"))
-          grays.zipWithIndex.map { case (g, fi) =>
-            var sum = 0L
-            var i = 0
-            while (i < g.length) { sum += g(i) & 0xff; i += 1 }
-            (id, fi, "rle4", w, h, sum.toDouble / g.length)
-          }
-        }
+    val inverted = Array.tabulate(16)(i => (255 - 17 * i).toByte)
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      def nib(i: Int): Byte = (tok(i) & 0x0f).toByte
+      val grid = Array.tabulate(9 * 8)(nib)
+      val flat = Array.fill(9 * 8)(nib(0))
+      val avi = PerceptualHash.encodeRle4Avi(Seq(grid, flat), 9, 8,
+        inverted)
+      val (w, h, grays) = PerceptualHash.aviFrameGrays(avi)
+        .getOrElse(throw new IllegalStateException(
+          s"rle4 fixture failed to decode for doc $id"))
+      grays.zipWithIndex.map { case (g, fi) =>
+        (id, fi, "rle4", w, h, grayMean(g))
       }
-      .toDF("media_id", "frame_idx", "codec", "width", "height",
-        "frame_mean")
+    }.toDF("media_id", "frame_idx", "codec", "width", "height",
+      "frame_mean")
   }
 
   /** Fully-oracled MS Video 1 (CRAM) feature relation: each document
@@ -414,57 +405,44 @@ object Multimodal {
     */
   def cramFrameFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        val (w, h) = (8, 8)
-        def paint2(f: Array[Byte], bi: Int, mask: Int, a: Int, b: Int): Unit =
-          (0 until 16).foreach { k =>
-            f(Cram.pixelOffset(bi, k / 4, k % 4, w, h)) =
-              (if (((mask >> k) & 1) == 1) a else b).toByte
-          }
-        def paintSolid(f: Array[Byte], bi: Int, v: Int): Unit =
-          (0 until 16).foreach(k =>
-            f(Cram.pixelOffset(bi, k / 4, k % 4, w, h)) = v.toByte)
-        def paint8(f: Array[Byte], bi: Int, mask: Int,
-            colors: Array[Int]): Unit =
-          (0 until 16).foreach { k =>
-            val r = k / 4; val c = k % 4
-            val q = (if (r >= 2) 2 else 0) + (if (c >= 2) 1 else 0)
-            f(Cram.pixelOffset(bi, r, c, w, h)) =
-              (if (((mask >> k) & 1) == 1) colors(2 * q)
-               else colors(2 * q + 1)).toByte
-          }
-        it.flatMap { case (id, toks) =>
-          val m = Array.tabulate(16)(i => tokByte(toks, i))
-          val f0 = new Array[Byte](w * h)
-          paint2(f0, 0, m(2) * 256 + m(3), m(0), m(1))
-          paintSolid(f0, 1, m(4))
-          paint8(f0, 2, m(13) * 256 + m(14),
-            Array(m(5), m(9), m(6), m(10), m(7), m(11), m(8), m(12)))
-          paint2(f0, 3, m(6) * 256 + m(7), m(15), m(2))
-          val f1 = f0.clone() // blocks 0,1 unchanged -> skip codes
-          paintSolid(f1, 2, m(5))
-          paint2(f1, 3, m(10) * 256 + m(11), m(8), m(9))
-          val avi = PerceptualHash.encodeCramAvi(Seq(f0, f1), w, h)
-          val (dw, dh, grays) = PerceptualHash.aviFrameGrays(avi)
-            .getOrElse(throw new IllegalStateException(
-              s"cram fixture failed to decode for doc $id"))
-          grays.zipWithIndex.map { case (g, fi) =>
-            var sum = 0L
-            var i = 0
-            while (i < g.length) { sum += g(i) & 0xff; i += 1 }
-            (id, fi, "cram", dw, dh, sum.toDouble / g.length)
-          }
-        }
+    val (w, h) = (8, 8)
+    def paint2(f: Array[Byte], bi: Int, mask: Int, a: Int, b: Int): Unit =
+      (0 until 16).foreach { k =>
+        f(Cram.pixelOffset(bi, k / 4, k % 4, w, h)) =
+          (if (((mask >> k) & 1) == 1) a else b).toByte
       }
-      .toDF("media_id", "frame_idx", "codec", "width", "height",
-        "frame_mean")
+    def paintSolid(f: Array[Byte], bi: Int, v: Int): Unit =
+      (0 until 16).foreach(k =>
+        f(Cram.pixelOffset(bi, k / 4, k % 4, w, h)) = v.toByte)
+    def paint8(f: Array[Byte], bi: Int, mask: Int,
+        colors: Array[Int]): Unit =
+      (0 until 16).foreach { k =>
+        val r = k / 4; val c = k % 4
+        val q = (if (r >= 2) 2 else 0) + (if (c >= 2) 1 else 0)
+        f(Cram.pixelOffset(bi, r, c, w, h)) =
+          (if (((mask >> k) & 1) == 1) colors(2 * q)
+           else colors(2 * q + 1)).toByte
+      }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(16)(tok)
+      val f0 = new Array[Byte](w * h)
+      paint2(f0, 0, m(2) * 256 + m(3), m(0), m(1))
+      paintSolid(f0, 1, m(4))
+      paint8(f0, 2, m(13) * 256 + m(14),
+        Array(m(5), m(9), m(6), m(10), m(7), m(11), m(8), m(12)))
+      paint2(f0, 3, m(6) * 256 + m(7), m(15), m(2))
+      val f1 = f0.clone() // blocks 0,1 unchanged -> skip codes
+      paintSolid(f1, 2, m(5))
+      paint2(f1, 3, m(10) * 256 + m(11), m(8), m(9))
+      val avi = PerceptualHash.encodeCramAvi(Seq(f0, f1), w, h)
+      val (dw, dh, grays) = PerceptualHash.aviFrameGrays(avi)
+        .getOrElse(throw new IllegalStateException(
+          s"cram fixture failed to decode for doc $id"))
+      grays.zipWithIndex.map { case (g, fi) =>
+        (id, fi, "cram", dw, dh, grayMean(g))
+      }
+    }.toDF("media_id", "frame_idx", "codec", "width", "height",
+      "frame_mean")
   }
 
   /** Fully-oracled arithmetic-JPEG (SOF9) feature relation: each
@@ -482,27 +460,14 @@ object Multimodal {
     */
   def arithJpegFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Byte =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-        it.map { case (id, toks) =>
-          val grid = Array.tabulate[Byte](8)(i => tokByte(toks, i))
-          val jpg = JpegArith.encodeGrayBlocks(grid, 4, 2,
-            restartInterval = if (id % 2 == 0) 3 else 0)
-          val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
-            s"arithmetic jpeg fixture failed to decode for doc $id"))
-          var sum = 0L
-          var i = 0
-          while (i < d.gray.length) { sum += d.gray(i) & 0xff; i += 1 }
-          (id, d.kind, d.width, d.height, sum.toDouble / d.gray.length)
-        }
-      }
-      .toDF("media_id", "decoder", "width", "height", "gray_mean")
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val grid = Array.tabulate[Byte](8)(i => tok(i).toByte)
+      val jpg = JpegArith.encodeGrayBlocks(grid, 4, 2,
+        restartInterval = if (id % 2 == 0) 3 else 0)
+      val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
+        s"arithmetic jpeg fixture failed to decode for doc $id"))
+      Some((id, d.kind, d.width, d.height, grayMean(d.gray)))
+    }.toDF("media_id", "decoder", "width", "height", "gray_mean")
   }
 
   /** Fully-oracled PROGRESSIVE-JPEG feature relation: each document
@@ -517,26 +482,13 @@ object Multimodal {
     */
   def progressiveJpegFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Byte =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0)
-        it.map { case (id, toks) =>
-          val grid = Array.tabulate[Byte](8)(i => tokByte(toks, i))
-          val jpg = PerceptualHash.encodeProgressiveBlocks(grid, 4, 2)
-          val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
-            s"progressive fixture failed to decode for doc $id"))
-          var sum = 0L
-          var i = 0
-          while (i < d.gray.length) { sum += d.gray(i) & 0xff; i += 1 }
-          (id, d.kind, d.width, d.height, sum.toDouble / d.gray.length)
-        }
-      }
-      .toDF("media_id", "decoder", "width", "height", "gray_mean")
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val grid = Array.tabulate[Byte](8)(i => tok(i).toByte)
+      val jpg = PerceptualHash.encodeProgressiveBlocks(grid, 4, 2)
+      val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
+        s"progressive fixture failed to decode for doc $id"))
+      Some((id, d.kind, d.width, d.height, grayMean(d.gray)))
+    }.toDF("media_id", "decoder", "width", "height", "gray_mean")
   }
 
   /** Fully-oracled SOF10 (progressive ARITHMETIC) feature relation —
@@ -550,31 +502,18 @@ object Multimodal {
     */
   def sof10Features(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          (md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0): Int) & 0xff
-        it.map { case (id, toks) =>
-          val blocks = (0 until 8).map { i =>
-            val c = new Array[Int](64)
-            c(0) = 8 * (tokByte(toks, i) - 128)
-            c
-          }
-          val jpg = JpegArith.encodeGrayProgressive(blocks, 4, 2,
-            restartInterval = if (id % 2 == 1) 3 else 0)
-          val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
-            s"sof10 fixture failed to decode for doc $id"))
-          var sum = 0L
-          var i = 0
-          while (i < d.gray.length) { sum += d.gray(i) & 0xff; i += 1 }
-          (id, d.kind, d.width, d.height, sum.toDouble / d.gray.length)
-        }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val blocks = (0 until 8).map { i =>
+        val c = new Array[Int](64)
+        c(0) = 8 * (tok(i) - 128)
+        c
       }
-      .toDF("media_id", "decoder", "width", "height", "gray_mean")
+      val jpg = JpegArith.encodeGrayProgressive(blocks, 4, 2,
+        restartInterval = if (id % 2 == 1) 3 else 0)
+      val d = Codecs.decode(jpg).getOrElse(throw new IllegalStateException(
+        s"sof10 fixture failed to decode for doc $id"))
+      Some((id, d.kind, d.width, d.height, grayMean(d.gray)))
+    }.toDF("media_id", "decoder", "width", "height", "gray_mean")
   }
 
   /** Payload metadata relation (fully oracle-able): id, declared type,
@@ -670,26 +609,12 @@ object Multimodal {
     */
   def adpcmFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        it.map { case (id, toks) =>
-          val samples = adpcmFixtureSamples(id,
-            Array.tabulate(35)(i => tokByte(toks, i)))
-          var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-          samples.foreach { v =>
-            sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-          }
-          (id, "ima_adpcm", samples.length, sum, mn, mx)
-        }
-      }
-      .toDF("media_id", "codec", "n_samples", "sum_samples",
-        "min_sample", "max_sample")
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val samples = adpcmFixtureSamples(id, Array.tabulate(35)(tok))
+      val (sum, mn, mx) = sampleStats(samples.length)(samples(_))
+      Some((id, "ima_adpcm", samples.length, sum, mn, mx))
+    }.toDF("media_id", "codec", "n_samples", "sum_samples",
+      "min_sample", "max_sample")
   }
 
   /** Fully-oracled MS ADPCM (WAVE tag 2) feature relation: each
@@ -704,48 +629,35 @@ object Multimodal {
     */
   def msAdpcmFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        // fmt extension: wSamplesPerBlock=50, wNumCoef=7, the pairs
-        val extra = {
-          val bb = java.nio.ByteBuffer.allocate(4 + 28)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          bb.putShort(50).putShort(7)
-          Adpcm.MsCoefPairs.foreach { case (c1, c2) =>
-            bb.putShort(c1.toShort).putShort(c2.toShort)
-          }
-          bb.array()
-        }
-        it.map { case (id, toks) =>
-          val m = Array.tabulate(30)(i => tokByte(toks, i))
-          val block = new Array[Byte](31)
-          block(0) = (m(0) % 7).toByte
-          val delta0 = 16 + m(1) * 4
-          block(1) = (delta0 & 0xff).toByte
-          block(2) = (delta0 >> 8).toByte
-          block(3) = m(2).toByte; block(4) = m(3).toByte // samp1 LE
-          block(5) = m(4).toByte; block(6) = m(5).toByte // samp2 LE
-          var i = 0
-          while (i < 24) { block(7 + i) = m(6 + i).toByte; i += 1 }
-          val wav = monoWav(2, 4, 31, extra, block)
-          val samples = Codecs.wavSamples16(wav).getOrElse(
-            throw new IllegalStateException(
-              s"ms-adpcm fixture failed to decode for doc $id"))
-          var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-          samples.foreach { v =>
-            sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-          }
-          (id, "ms_adpcm", samples.length, sum, mn, mx)
-        }
+    // fmt extension: wSamplesPerBlock=50, wNumCoef=7, the pairs
+    val extra = {
+      val bb = java.nio.ByteBuffer.allocate(4 + 28)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      bb.putShort(50).putShort(7)
+      Adpcm.MsCoefPairs.foreach { case (c1, c2) =>
+        bb.putShort(c1.toShort).putShort(c2.toShort)
       }
-      .toDF("media_id", "codec", "n_samples", "sum_samples",
-        "min_sample", "max_sample")
+      bb.array()
+    }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(30)(tok)
+      val block = new Array[Byte](31)
+      block(0) = (m(0) % 7).toByte
+      val delta0 = 16 + m(1) * 4
+      block(1) = (delta0 & 0xff).toByte
+      block(2) = (delta0 >> 8).toByte
+      block(3) = m(2).toByte; block(4) = m(3).toByte // samp1 LE
+      block(5) = m(4).toByte; block(6) = m(5).toByte // samp2 LE
+      var i = 0
+      while (i < 24) { block(7 + i) = m(6 + i).toByte; i += 1 }
+      val wav = monoWav(2, 4, 31, extra, block)
+      val samples = Codecs.wavSamples16(wav).getOrElse(
+        throw new IllegalStateException(
+          s"ms-adpcm fixture failed to decode for doc $id"))
+      val (sum, mn, mx) = sampleStats(samples.length)(samples(_))
+      Some((id, "ms_adpcm", samples.length, sum, mn, mx))
+    }.toDF("media_id", "codec", "n_samples", "sum_samples",
+      "min_sample", "max_sample")
   }
 
   /** Fully-oracled palette + Adam7 PNG feature relation: each
@@ -760,31 +672,19 @@ object Multimodal {
     */
   def pngFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        val palette = Array.tabulate(48) { i =>
-          ((i / 3) * 17).toByte // entry k: r=g=b = 17k
-        }
-        it.map { case (id, toks) =>
-          val m = Array.tabulate(32)(i => tokByte(toks, i))
-          val idx = Array.tabulate(256)(p => (m(p % 32) % 16).toByte)
-          val png = PerceptualHash.encodePng(idx, 16, 16, palette,
-            interlaced = id % 2 == 0)
-          val d = Codecs.decode(png).getOrElse(
-            throw new IllegalStateException(
-              s"png fixture failed to decode for doc $id"))
-          var sum = 0L
-          d.gray.foreach(v => sum += (v & 0xff))
-          (id, "png", d.width, d.height, sum)
-        }
-      }
-      .toDF("media_id", "codec", "width", "height", "sum_gray")
+    val palette = Array.tabulate(48) { i =>
+      ((i / 3) * 17).toByte // entry k: r=g=b = 17k
+    }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(32)(tok)
+      val idx = Array.tabulate(256)(p => (m(p % 32) % 16).toByte)
+      val png = PerceptualHash.encodePng(idx, 16, 16, palette,
+        interlaced = id % 2 == 0)
+      val d = Codecs.decode(png).getOrElse(
+        throw new IllegalStateException(
+          s"png fixture failed to decode for doc $id"))
+      Some((id, "png", d.width, d.height, graySum(d.gray)))
+    }.toDF("media_id", "codec", "width", "height", "sum_gray")
   }
 
   /** Fully-oracled FLAC-subset feature relation — the first
@@ -800,34 +700,21 @@ object Multimodal {
   def flacFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val modes = Array("constant", "verbatim", "fixed1", "fixed2")
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        it.map { case (id, toks) =>
-          val m = Array.tabulate(32)(i => tokByte(toks, i))
-          val v = (id % 4).toInt
-          val samples =
-            if (v == 0) Array.fill(64)(m(0) - 128)
-            else Array.tabulate(64)(i => m(i % 32) - 128)
-          val enc = Flac.encode(samples, blockSize = 32,
-            mode = Array(0, 1, 3, 4)(v))
-          val dec = Flac.decode(enc).getOrElse(
-            throw new IllegalStateException(
-              s"flac fixture failed to decode for doc $id"))
-          var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-          dec.foreach { x =>
-            sum += x; if (x < mn) mn = x; if (x > mx) mx = x
-          }
-          (id, "flac", modes(v), dec.length, sum, mn, mx)
-        }
-      }
-      .toDF("media_id", "codec", "mode", "n_samples", "sum_samples",
-        "min_sample", "max_sample")
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(32)(tok)
+      val v = (id % 4).toInt
+      val samples =
+        if (v == 0) Array.fill(64)(m(0) - 128)
+        else Array.tabulate(64)(i => m(i % 32) - 128)
+      val enc = Flac.encode(samples, blockSize = 32,
+        mode = Array(0, 1, 3, 4)(v))
+      val dec = Flac.decode(enc).getOrElse(
+        throw new IllegalStateException(
+          s"flac fixture failed to decode for doc $id"))
+      val (sum, mn, mx) = sampleStats(dec.length)(dec(_))
+      Some((id, "flac", modes(v), dec.length, sum, mn, mx))
+    }.toDF("media_id", "codec", "mode", "n_samples", "sum_samples",
+      "min_sample", "max_sample")
   }
 
   /** Fully-oracled TIFF feature relation — the codec family's BYTE
@@ -844,34 +731,22 @@ object Multimodal {
     */
   def tiffFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        it.map { case (id, toks) =>
-          val m = Array.tabulate(16)(i => tokByte(toks, i))
-          val gray = Array.tabulate(256) { p =>
-            val r = p / 16; val c = p % 16
-            (if (r % 2 == 0) m(c) else m(r)).toByte
-          }
-          val even = id % 2 == 0
-          val bytes = PerceptualHash.encodeTiff(gray, 16, 16,
-            bigEndian = even, packBits = even, whiteIsZero = !even)
-          val d = Codecs.decode(bytes).getOrElse(
-            throw new IllegalStateException(
-              s"tiff fixture failed to decode for doc $id"))
-          var sum = 0L
-          d.gray.foreach(v => sum += (v & 0xff))
-          (id, "tiff", if (even) "MM" else "II",
-            if (even) "packbits" else "none", d.width, d.height, sum)
-        }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(16)(tok)
+      val gray = Array.tabulate(256) { p =>
+        val r = p / 16; val c = p % 16
+        (if (r % 2 == 0) m(c) else m(r)).toByte
       }
-      .toDF("media_id", "codec", "byte_order", "compression",
-        "width", "height", "sum_gray")
+      val even = id % 2 == 0
+      val bytes = PerceptualHash.encodeTiff(gray, 16, 16,
+        bigEndian = even, packBits = even, whiteIsZero = !even)
+      val d = Codecs.decode(bytes).getOrElse(
+        throw new IllegalStateException(
+          s"tiff fixture failed to decode for doc $id"))
+      Some((id, "tiff", if (even) "MM" else "II",
+        if (even) "packbits" else "none", d.width, d.height, graySum(d.gray)))
+    }.toDF("media_id", "codec", "byte_order", "compression",
+      "width", "height", "sum_gray")
   }
 
   /** Fully-oracled ANIMATED-GIF feature relation: each document
@@ -887,38 +762,26 @@ object Multimodal {
     */
   def gifFrameFeatures(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        val palette = Array.tabulate(48)(i => ((i / 3) * 17).toByte)
-        it.flatMap { case (id, toks) =>
-          val m = Array.tabulate(32)(i => tokByte(toks, i))
-          val t = m(1) % 16
-          val f0 = PerceptualHash.GifFrame(0, 0, 8, 8,
-            Array.tabulate(64)(p => (m(p % 32) % 16).toByte),
-            disposal = 1)
-          val f1 = PerceptualHash.GifFrame(2, 2, 4, 4,
-            Array.tabulate(16)(q => (m(q) % 16).toByte),
-            disposal = 1, transparent = t)
-          val gif = PerceptualHash.encodeGifAnim(8, 8, palette,
-            Seq(f0, f1))
-          val frames = Codecs.gifFrames(gif).getOrElse(
-            throw new IllegalStateException(
-              s"gif fixture failed to decode for doc $id"))
-          frames.zipWithIndex.map { case (d, fi) =>
-            var sum = 0L
-            d.gray.foreach(v => sum += (v & 0xff))
-            (id, fi, "gif", d.width, d.height, sum)
-          }
-        }
+    val palette = Array.tabulate(48)(i => ((i / 3) * 17).toByte)
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val m = Array.tabulate(32)(tok)
+      val t = m(1) % 16
+      val f0 = PerceptualHash.GifFrame(0, 0, 8, 8,
+        Array.tabulate(64)(p => (m(p % 32) % 16).toByte),
+        disposal = 1)
+      val f1 = PerceptualHash.GifFrame(2, 2, 4, 4,
+        Array.tabulate(16)(q => (m(q) % 16).toByte),
+        disposal = 1, transparent = t)
+      val gif = PerceptualHash.encodeGifAnim(8, 8, palette,
+        Seq(f0, f1))
+      val frames = Codecs.gifFrames(gif).getOrElse(
+        throw new IllegalStateException(
+          s"gif fixture failed to decode for doc $id"))
+      frames.zipWithIndex.map { case (d, fi) =>
+        (id, fi, "gif", d.width, d.height, graySum(d.gray))
       }
-      .toDF("media_id", "frame_idx", "codec", "width", "height",
-        "sum_gray")
+    }.toDF("media_id", "frame_idx", "codec", "width", "height",
+      "sum_gray")
   }
 
   /** Fully-oracled audio ANALYSIS relation — the signal-level sibling
@@ -932,34 +795,23 @@ object Multimodal {
     */
   def audioAnalysis(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        it.map { case (id, toks) =>
-          val v = adpcmFixtureSamples(id,
-            Array.tabulate(35)(i => tokByte(toks, i)))
-          var zcr = 0
-          var energy = 0L
-          var ac1 = 0L
-          var ac4 = 0L
-          var i = 0
-          while (i < v.length) {
-            val x = v(i).toLong
-            energy += x * x
-            if (i >= 1 && ((v(i) < 0) != (v(i - 1) < 0))) zcr += 1
-            if (i + 1 < v.length) ac1 += x * v(i + 1)
-            if (i + 4 < v.length) ac4 += x * v(i + 4)
-            i += 1
-          }
-          (id, v.length, zcr, energy, ac1, ac4)
-        }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val v = adpcmFixtureSamples(id, Array.tabulate(35)(tok))
+      var zcr = 0
+      var energy = 0L
+      var ac1 = 0L
+      var ac4 = 0L
+      var i = 0
+      while (i < v.length) {
+        val x = v(i).toLong
+        energy += x * x
+        if (i >= 1 && ((v(i) < 0) != (v(i - 1) < 0))) zcr += 1
+        if (i + 1 < v.length) ac1 += x * v(i + 1)
+        if (i + 4 < v.length) ac4 += x * v(i + 4)
+        i += 1
       }
-      .toDF("media_id", "n_samples", "zcr", "energy", "ac1", "ac4")
+      Some((id, v.length, zcr, energy, ac1, ac4))
+    }.toDF("media_id", "n_samples", "zcr", "energy", "ac1", "ac4")
   }
 
   /** Fully-oracled G.711 feature relation: the same 32 md5 token
@@ -970,30 +822,17 @@ object Multimodal {
     */
   def g711Features(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), split(lower(col("text")), "\\s+").as("toks"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        def tokByte(toks: Seq[String], i: Int): Int =
-          md.digest(toks(i % toks.size)
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))(0) & 0xff
-        it.flatMap { case (id, toks) =>
-          val data = Array.tabulate(32)(i => tokByte(toks, i).toByte)
-          Seq(7 -> "ulaw", 6 -> "alaw").map { case (tag, name) =>
-            val wav = monoWav(tag, 8, 1, Array.emptyByteArray, data)
-            val samples = Codecs.wavSamples16(wav).getOrElse(
-              throw new IllegalStateException(
-                s"g711 fixture failed to decode for doc $id"))
-            var sum = 0L; var mn = Int.MaxValue; var mx = Int.MinValue
-            samples.foreach { v =>
-              sum += v; if (v < mn) mn = v; if (v > mx) mx = v
-            }
-            (id, name, samples.length, sum, mn, mx)
-          }
-        }
+    mdRows(s.read.parquet(s"$dir/documents.parquet")) { (id, tok) =>
+      val data = Array.tabulate(32)(i => tok(i).toByte)
+      Seq(7 -> "ulaw", 6 -> "alaw").map { case (tag, name) =>
+        val wav = monoWav(tag, 8, 1, Array.emptyByteArray, data)
+        val samples = Codecs.wavSamples16(wav).getOrElse(
+          throw new IllegalStateException(
+            s"g711 fixture failed to decode for doc $id"))
+        val (sum, mn, mx) = sampleStats(samples.length)(samples(_))
+        (id, name, samples.length, sum, mn, mx)
       }
-      .toDF("media_id", "codec", "n_samples", "sum_samples",
-        "min_sample", "max_sample")
+    }.toDF("media_id", "codec", "n_samples", "sum_samples",
+      "min_sample", "max_sample")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -29,19 +29,6 @@ object EventStreams {
     * generated code needs constructor access).
     */
   final case class SessionState(startUs: Long, endUs: Long, n: Long)
-
-  /** File-based event stream — the production `readStream` shape.
-    * `eventsDir` must be a directory receiving event parquet drops
-    * (and only those: a mixed-table directory would be read as
-    * all-null rows under this schema); `schemaFrom` points at an
-    * existing events file to supply the mandatory streaming schema.
-    */
-  def readEventStream(
-      s: SparkSession, eventsDir: String, schemaFrom: String
-  ): DataFrame = {
-    val schema = s.read.parquet(schemaFrom).schema
-    s.readStream.schema(schema).parquet(eventsDir)
-  }
 
   /** Streaming deduplication: drop repeated event ids within the
     * watermark horizon — the incremental form of exact dedup, with

@@ -135,18 +135,30 @@ class MergeCountSpec extends SparkSpec {
         "('ID000003','Orange',3,8.0), ('ID000004','Lemon',6,7.0)")
       st.close(); c.close()
     }
+    def rows(where: String): Long = {
+      val c = conn(); val st = c.createStatement()
+      try {
+        val rs = st.executeQuery(s"select count(*) from groceries $where")
+        rs.next(); rs.getLong(1)
+      } finally { st.close(); c.close() }
+    }
     val sink = new JdbcMergeSink("sqlite", () => conn(), chunkSize = 2)
-    for (delta <- Seq(upsertDelta, nullKeyDelta); (update, insert) <- modes) {
+    // the last case hands the sink the raw delta, null keys included:
+    // staging a null key would let the INSERT leg break the NOT NULL key
+    for ((delta, raw) <- Seq((upsertDelta, false), (nullKeyDelta, false), (nullKeyDelta, true));
+         (update, insert) <- modes) {
       reset()
       val imp = new Importer(groceries, delta, table = "groceries", tablePk = Seq("id"))
       val want = eagerCounts(groceries, imp, update, insert)
       val r = imp.run(update, insert)
-      val affected = sink.write(r, imp.data, spec(imp, update, insert))
+      val affected = sink.write(r, if (raw) delta else imp.data, spec(imp, update, insert))
       val (got, read) = SparkEvents.during(spark)(counts(r))
-      val clue = s"run(update=$update, insert=$insert)"
+      val clue = s"raw=$raw run(update=$update, insert=$insert)"
       assert(got == want, clue)
       assert(affected == want._1 + want._2, clue)
       assert(read.jobs == 0, s"$clue: settled counts ran Spark jobs")
+      assert(rows("") == 4L + want._2, clue)
+      assert(rows("where id is null") == 0L, clue)
     }
   }
 

@@ -385,7 +385,8 @@ class MergeSinkSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
     ParallelFakeDb.reset()
-    val delta = Seq((1L, 1.0), (2L, 2.0)).toDF("o_orderkey", "o_totalprice")
+    val delta = Seq((Some(1L), 1.0), (Some(2L), 2.0), (None, 3.0))
+      .toDF("o_orderkey", "o_totalprice")
     new JdbcParallelMergeSink("sqlite", () => ParallelFakeDb.connect())
       .write(MergeResult(delta, 0L), delta,
         MergeSpec("orders", Seq("o_orderkey"), Seq("o_totalprice")))
@@ -397,6 +398,8 @@ class MergeSinkSpec extends SparkSpec {
     val update = SqlGen.updateSqlite("orders", "dbimport_stage",
       Seq("o_orderkey"), Seq("o_totalprice"))
     assert(log.count(_ == s"c1:executeUpdate:$update") == 1)
+    // the null-keyed delta row is never staged
+    assert(log.count(_.endsWith(":addBatch")) == 2)
   }
 
   test("ParquetMergeSink round-trips the merged relation and the count") {
