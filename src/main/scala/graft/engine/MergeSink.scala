@@ -2,8 +2,10 @@ package graft.engine
 
 import java.sql.{Connection, PreparedStatement, Statement}
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, spark_partition_id}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** What a merge updates and on which keys — the sink-facing slice of
@@ -68,13 +70,16 @@ final class ParquetMergeSink(
 
 /** Database sink (S9 proper): re-expression of `Importer.run`
   * (`importer.py:293-359`) over JDBC. Only the DELTA travels: it is
-  * streamed to the staging temp table in `chunkSize` batches
-  * (`addBatch`/`executeBatch` is JDBC's array-binding analogue of
-  * pyodbc's `fast_executemany`, `importer.py:298-299`) with a commit
-  * per chunk (`importer.py:253-261`), then one set-based UPDATE joins
-  * staging into the target server-side — the target table never
-  * leaves the database, and the merged relation is never computed
-  * Spark-side.
+  * streamed to the staging temp table in `chunkSize` chunks with a
+  * commit per chunk (`importer.py:253-261`). Within a chunk, rows are
+  * staged in groups by multi-row `insert … values (?, …), (?, …)`
+  * statements of up to [[JdbcMergeSink.MaxParams]] parameters, batched
+  * with `addBatch`/`executeBatch`: a few statement executions per
+  * chunk instead of one per row, the portable analogue of pyodbc's
+  * array-binding `fast_executemany` (`importer.py:298-299`). Then one
+  * set-based UPDATE joins staging into the target server-side — the
+  * target table never leaves the database, and the merged relation is
+  * never computed Spark-side.
   *
   * A single connection carries the whole lifecycle because the staging
   * table is session-scoped on both dialects (`#dbimport` /
@@ -120,12 +125,9 @@ final class JdbcMergeSink(
           st.execute(SqlGen.dropTempTable(dialect, temp))
           st.execute(SqlGen.createTempTable(
             dialect, JdbcMergeSink.qualified(dialect, spec), temp, cols))
-          val ps = conn.prepareStatement(
-            SqlGen.insertInto(dialect, temp, cols))
-          try JdbcMergeSink.insertBatches(ps,
-            projected.toLocalIterator(),
-            sqlTypes, chunkSize, () => conn.commit())
-          finally ps.close()
+          JdbcMergeSink.insertBatches(
+            n => conn.prepareStatement(SqlGen.insertInto(dialect, temp, cols, n)),
+            projected.toLocalIterator(), sqlTypes, chunkSize, () => conn.commit())
           val stagingRef = if (dialect == "mssql") temp else s"temp.$temp"
           val (updated, inserted) =
             JdbcMergeSink.applyLegs(st, dialect, spec, stagingRef)
@@ -169,8 +171,7 @@ final class JdbcParallelMergeSink(
     // locals so the foreachPartition closure captures values, not
     // `this` (the sink itself is not serializable, and need not be)
     val (dia, stage, cs, cf) = (dialect, staging, chunkSize, connect)
-    val insertSql = SqlGen.insertInto(
-      dia, stage, cols :+ JdbcParallelMergeSink.PartCol)
+    val stagedCols = cols :+ JdbcParallelMergeSink.PartCol
     val deleteSql = SqlGen.deleteByPart(
       dia, stage, JdbcParallelMergeSink.PartCol)
 
@@ -187,37 +188,40 @@ final class JdbcParallelMergeSink(
           driverConn.commit()
 
           // Idempotence under task retry / speculation: each writer
-          // stamps its rows with its partition id and runs
+          // stamps its rows with its own task's partition id and runs
           // delete-own-slice → insert → ONE commit, atomically. A
           // failed attempt leaves nothing (rolled back); a committed
           // attempt that re-runs (speculation, stage retry) first
           // reclaims its own committed rows, so the final staging
           // content is exactly one copy per partition regardless of
           // how many attempts ran or in what order they committed.
-          projected
-            .withColumn(JdbcParallelMergeSink.PartCol, spark_partition_id())
-            .foreachPartition { (rows: Iterator[Row]) =>
-              if (rows.hasNext) {
-                val pid = org.apache.spark.TaskContext.getPartitionId()
-                val c = cf()
-                try {
-                  JdbcMergeSink.inTransaction(c) {
-                    val del = c.prepareStatement(deleteSql)
-                    try { del.setInt(1, pid); del.executeUpdate(): Unit }
-                    finally del.close()
-                    val ps = c.prepareStatement(insertSql)
-                    // per-chunk executeBatch flushes bound memory; the
-                    // commit callback is a no-op so the whole partition
-                    // stays one transaction
-                    try JdbcMergeSink.insertBatches(
-                      ps, new JdbcMergeSink.RowIt(rows),
-                      sqlTypes, cs, () => ()): Unit
-                    finally ps.close()
-                    c.commit()
-                  }
-                } finally c.close()
-              }
+          // The id is bound in the writer, not computed in the plan:
+          // over a local delta the optimizer folds a projection into
+          // the local rows on the driver, where every row would read
+          // partition 0 and writer 0's delete would erase the others'.
+          projected.foreachPartition { (rows: Iterator[Row]) =>
+            if (rows.hasNext) {
+              val pid = org.apache.spark.TaskContext.getPartitionId()
+              val c = cf()
+              try {
+                JdbcMergeSink.inTransaction(c) {
+                  val del = c.prepareStatement(deleteSql)
+                  try { del.setInt(1, pid); del.executeUpdate(): Unit }
+                  finally del.close()
+                  // per-chunk executeBatch flushes bound memory; the
+                  // commit callback is a no-op so the whole partition
+                  // stays one transaction
+                  JdbcMergeSink.insertBatches(
+                    n => c.prepareStatement(
+                      SqlGen.insertInto(dia, stage, stagedCols, n)),
+                    new JdbcMergeSink.RowIt(
+                      rows.map(r => Row.fromSeq(r.toSeq :+ pid))),
+                    sqlTypes, cs, () => ()): Unit
+                  c.commit()
+                }
+              } finally c.close()
             }
+          }
 
           val (updated, inserted) = JdbcMergeSink.applyLegs(st, dia, spec, stage)
           driverConn.commit()
@@ -356,42 +360,83 @@ object JdbcMergeSink {
     override def next(): Row = it.next()
   }
 
-  /** Chunked `executemany` analogue (`importer.py:253-261`): bind each
-    * row positionally, `executeBatch` + commit every `chunkSize` rows
-    * and once more for the remainder. Null-safe: Spark nulls bind as
-    * TYPED JDBC nulls (`setNull` with the schema-derived type code —
+  /** Most parameters one staging statement binds: SQLite's default
+    * `SQLITE_MAX_VARIABLE_NUMBER` before 3.32. It also fits SQL Server
+    * (2,100 parameters and 1,000 row constructors per statement), so
+    * one fixed constant serves both dialects.
+    */
+  private[graft] val MaxParams: Int = 999
+
+  /** Rows per multi-row staging statement for rows `width` columns
+    * wide: as many as fit in [[MaxParams]] and in one chunk, and at
+    * least one (a row wider than the limit stages alone).
+    */
+  private[graft] def groupRows(width: Int, chunkSize: Int): Int = {
+    require(width > 0, "width must be positive")
+    math.max(1, math.min(chunkSize, MaxParams / width))
+  }
+
+  /** Chunked `executemany` analogue (`importer.py:253-261`), staged in
+    * multi-row groups: each chunk of `chunkSize` rows is cut into
+    * groups of [[groupRows]] rows, each group bound positionally (row
+    * j's column i is parameter `j * width + i + 1`, rows in input
+    * order) into one `prepare(groupRows)` statement and added to its
+    * batch. A chunk whose rows run out mid-group stages its last
+    * group through `prepare(n)` for that group's size n; then each
+    * statement holding rows of the chunk runs `executeBatch` (the
+    * full-group statement first, so row order holds) and the chunk
+    * commits. At most three statements are prepared per call (the
+    * full group, a full chunk's tail, the last chunk's tail), each
+    * once, and all are closed on return. Null-safe: Spark nulls bind
+    * as TYPED JDBC nulls (`setNull` with the schema-derived type code —
     * the reference's `where(pd.notnull(chunk), None)`, made
     * driver-portable). Package-visible so the batch boundaries are
     * pinned offline by MergeSinkSpec.
     */
   private[graft] def insertBatches(
-      ps: PreparedStatement, rows: java.util.Iterator[Row],
+      prepare: Int => PreparedStatement, rows: java.util.Iterator[Row],
       sqlTypes: Array[Int], chunkSize: Int, commit: () => Unit): Long = {
     require(chunkSize > 0, "chunkSize must be positive")
     val width = sqlTypes.length
-    var total = 0L
-    var inBatch = 0
-    while (rows.hasNext) {
-      val r = rows.next()
-      var i = 0
-      while (i < width) {
-        if (r.isNullAt(i)) ps.setNull(i + 1, sqlTypes(i))
-        else ps.setObject(i + 1, r.get(i))
-        i += 1
+    val g = groupRows(width, chunkSize)
+    val stmts = mutable.LinkedHashMap.empty[Int, PreparedStatement]
+    val group = new Array[Row](g)
+    // binds the first n buffered rows into the n-row statement's batch
+    def add(n: Int): PreparedStatement = {
+      val ps = stmts.getOrElseUpdate(n, prepare(n))
+      var j = 0
+      while (j < n) {
+        val r = group(j)
+        var i = 0
+        while (i < width) {
+          val p = j * width + i + 1
+          if (r.isNullAt(i)) ps.setNull(p, sqlTypes(i))
+          else ps.setObject(p, r.get(i))
+          i += 1
+        }
+        j += 1
       }
       ps.addBatch()
-      inBatch += 1
-      total += 1
-      if (inBatch == chunkSize) {
-        ps.executeBatch()
+      ps
+    }
+    var total = 0L
+    try {
+      while (rows.hasNext) {
+        var inChunk = 0
+        var n = 0
+        var full: PreparedStatement = null
+        while (inChunk < chunkSize && rows.hasNext) {
+          group(n) = rows.next()
+          n += 1
+          inChunk += 1
+          if (n == g) { full = add(g); n = 0 }
+        }
+        if (full != null) full.executeBatch()
+        if (n > 0) add(n).executeBatch()
         commit()
-        inBatch = 0
+        total += inChunk
       }
-    }
-    if (inBatch > 0) {
-      ps.executeBatch()
-      commit()
-    }
-    total
+      total
+    } finally stmts.valuesIterator.foreach(_.close())
   }
 }

@@ -249,17 +249,24 @@ object SqlGen {
     s"delete from $staging where $c = ?"
   }
 
-  /** S8 — staged bulk-insert statement (`importer.py:270,284-288`):
-    * `insert into <temp> (<cols>) values (?, …)`; identifiers quoted
-    * on mssql, bare on sqlite, like the reference.
+  /** S8 — staged bulk-insert statement (`importer.py:270,284-288`) for
+    * a group of `rows` rows: `insert into <temp> (<cols>) values
+    * (?, …), (?, …), …`, one parenthesized row constructor per row, so
+    * one statement execution stages the whole group. Identifiers are
+    * quoted on mssql, bare on sqlite, like the reference. The caller
+    * sizes the group ([[JdbcMergeSink.groupRows]]) under both dialects'
+    * parameter limits.
     */
-  def insertInto(dialect: String, temp: String, cols: Seq[String]): String = {
+  def insertInto(
+      dialect: String, temp: String, cols: Seq[String], rows: Int): String = {
     requireDialect(dialect)
+    require(rows > 0, "rows must be positive")
     val names = dialect match {
       case "mssql"  => cols.map(q)
       case "sqlite" => cols
     }
+    val row = cols.map(_ => "?").mkString("(", ", ", ")")
     s"insert into $temp (${names.mkString(", ")}) " +
-      s"values (${cols.map(_ => "?").mkString(", ")})"
+      s"values ${Seq.fill(rows)(row).mkString(", ")}"
   }
 }

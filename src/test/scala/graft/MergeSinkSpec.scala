@@ -75,8 +75,14 @@ class MergeSinkSpec extends SparkSpec {
     val create = SqlGen.createTempTable(
       "mssql", "[dbo].[orders]", "#dbimport",
       Seq("o_orderkey", "o_totalprice"))
-    val insert = SqlGen.insertInto(
-      "mssql", "#dbimport", Seq("o_orderkey", "o_totalprice"))
+    // two-row groups (chunkSize 2 caps the group), the last chunk's
+    // single row through a one-row statement
+    val insert2 = "insert into #dbimport ([o_orderkey], [o_totalprice]) " +
+      "values (?, ?), (?, ?)"
+    val insert1 = "insert into #dbimport ([o_orderkey], [o_totalprice]) " +
+      "values (?, ?)"
+    assert(SqlGen.insertInto("mssql", "#dbimport",
+      Seq("o_orderkey", "o_totalprice"), 2) == insert2)
     val update = SqlGen.updateMssql(
       "dbo", "orders", "#dbimport", Seq("o_orderkey"), Seq("o_totalprice"))
 
@@ -85,20 +91,26 @@ class MergeSinkSpec extends SparkSpec {
       e.startsWith("execute:") || e.startsWith("prepare:") ||
         e.startsWith("executeUpdate:"))
     assert(stmts == Seq(
-      s"execute:$drop", s"execute:$create", s"prepare:$insert",
-      s"executeUpdate:$update", s"execute:$drop"), stmts.toString)
+      s"execute:$drop", s"execute:$create", s"prepare:$insert2",
+      s"prepare:$insert1", s"executeUpdate:$update", s"execute:$drop"),
+      stmts.toString)
 
-    // 5 rows at chunkSize 2 → executeBatch after rows 2, 4, 5; a commit
-    // follows each chunk plus one after the update (importer.py:258-261,
-    // :355-357)
-    val fill = rec.log.filter(e => e == "addBatch" || e == "executeBatch")
-    assert(fill == Seq("addBatch", "addBatch", "executeBatch",
-      "addBatch", "addBatch", "executeBatch",
-      "addBatch", "executeBatch"), fill.toString)
+    // 5 rows at chunkSize 2 → executeBatch after rows 2, 4, 5, each
+    // chunk one group; a commit follows each chunk plus one after the
+    // update (importer.py:258-261, :355-357); every row binds both
+    // columns positionally, row j's column i at j * 2 + i + 1
+    val fill = rec.log.dropWhile(_ != s"execute:$create").tail
+      .takeWhile(!_.startsWith("executeUpdate:"))
+    assert(fill == Seq(
+      s"prepare:$insert2",
+      "set:1=1", "set:2=10.0", "set:3=2", "set:4=20.0", "addBatch",
+      "executeBatch", "commit",
+      "set:1=3", "set:2=30.0", "set:3=4", "set:4=40.0", "addBatch",
+      "executeBatch", "commit",
+      s"prepare:$insert1",
+      "set:1=5", "set:2=50.0", "addBatch",
+      "executeBatch", "commit"), fill.toString)
     assert(rec.log.count(_ == "commit") == 4)
-    // every row binds both columns positionally
-    assert(rec.log.count(_.startsWith("set:1=")) == 5)
-    assert(rec.log.count(_.startsWith("set:2=")) == 5)
     // explicit transactions: autocommit off for the lifecycle, restored
     assert(rec.log.take(1) == Seq("setAutoCommit:false"))
     assert(rec.log.last == "setAutoCommit:true")
@@ -112,10 +124,14 @@ class MergeSinkSpec extends SparkSpec {
     val update = SqlGen.updateSqlite(
       "orders", "temp.dbimport", Seq("o_orderkey"), Seq("o_totalprice"))
     assert(rec.log.contains(s"executeUpdate:$update"), rec.log.toString)
-    assert(rec.log.contains(
-      "prepare:insert into dbimport (o_orderkey, o_totalprice) values (?, ?)"))
-    // one chunk (5 < 100): one executeBatch for the fill
+    // one chunk (5 < 100), so one group: a single five-row statement,
+    // added and executed once, committed once
+    assert(rec.log.filter(_.startsWith("prepare:")) == Seq(
+      "prepare:insert into dbimport (o_orderkey, o_totalprice) " +
+        "values (?, ?), (?, ?), (?, ?), (?, ?), (?, ?)"), rec.log.toString)
+    assert(rec.log.count(_ == "addBatch") == 1)
     assert(rec.log.count(_ == "executeBatch") == 1)
+    assert(rec.log.count(_.startsWith("set:")) == 10)
     // no insert leg unless the spec asks for it
     assert(!rec.log.exists(_.contains("not exists")), rec.log.toString)
   }
@@ -302,11 +318,14 @@ class MergeSinkSpec extends SparkSpec {
       .toDF("o_orderkey", "o_totalprice")
     sink.write(MergeResult(withNull, 0L), withNull,
       MergeSpec("orders", Seq("o_orderkey"), Seq("o_totalprice")))
-    // setNull with the schema-derived code (DOUBLE = 8), never an
-    // untyped setObject(i, null)
-    assert(rec.log.contains(s"setNull:2:${java.sql.Types.DOUBLE}"),
-      rec.log.toString)
-    assert(!rec.log.exists(_.startsWith("set:2=null")), rec.log.toString)
+    // both rows share one group: the null is row 2's column 2,
+    // parameter 4, bound by setNull with the schema-derived code
+    // (DOUBLE = 8), never an untyped setObject(i, null)
+    assert(rec.log.filter(e => e.startsWith("set") || e == "addBatch") ==
+      Seq("setAutoCommit:false", "set:1=1", "set:2=10.0", "set:3=2",
+        s"setNull:4:${java.sql.Types.DOUBLE}", "addBatch",
+        "setAutoCommit:true"), rec.log.toString)
+    assert(!rec.log.exists(_.endsWith("=null")), rec.log.toString)
   }
 
   test("JdbcParallelMergeSink: per-partition batches into global staging, one UPDATE") {
@@ -341,34 +360,53 @@ class MergeSinkSpec extends SparkSpec {
       log.indexWhere(_.endsWith(":addBatch")))
 
     // every writer disables autocommit, reclaims its own staging slice
-    // (idempotence under retry/speculation), prepares the same insert,
-    // respects the chunk boundary (never >chunkSize addBatch per batch),
+    // (idempotence under retry/speculation), stages two-row groups
+    // (the chunk caps the group) and a last one-row group, respects
+    // the chunk boundary (never >chunkSize rows bound per executeBatch),
     // and commits ONCE — the whole partition is a single transaction
-    val insert = SqlGen.insertInto("mssql", "dbimport_stage",
-      Seq("o_orderkey", "o_totalprice", JdbcParallelMergeSink.PartCol))
+    val cols = Seq("o_orderkey", "o_totalprice", JdbcParallelMergeSink.PartCol)
+    val insert2 = "insert into dbimport_stage " +
+      "([o_orderkey], [o_totalprice], [_graft_part]) values (?, ?, ?), (?, ?, ?)"
+    val insert1 = SqlGen.insertInto("mssql", "dbimport_stage", cols, 1)
+    assert(SqlGen.insertInto("mssql", "dbimport_stage", cols, 2) == insert2)
     val delete = SqlGen.deleteByPart(
       "mssql", "dbimport_stage", JdbcParallelMergeSink.PartCol)
-    writers.foreach { c =>
+    val staged = writers.map { c =>
       assert(log.contains(s"$c:setAutoCommit:false"))
-      assert(log.indexOf(s"$c:prepare:$delete") <
-        log.indexOf(s"$c:prepare:$insert"), s"$c reclaims before insert")
-      val fill = log.filter(e => e == s"$c:addBatch" || e == s"$c:executeBatch")
-      var run = 0
+      val prepares = log.filter(_.startsWith(s"$c:prepare:"))
+      assert(prepares.head == s"$c:prepare:$delete", s"$c reclaims before insert")
+      assert(prepares.tail.forall(p =>
+        p == s"$c:prepare:$insert2" || p == s"$c:prepare:$insert1"), prepares)
+      val pid = log.collect { case e if e.startsWith(s"$c:setInt:1=") =>
+        e.stripPrefix(s"$c:setInt:1=") }
+      assert(pid.size == 1, s"$c binds its slice once: $log")
+      // rows per flush from the positional binds: 3 parameters a row,
+      // the partition id last
+      val fill = log.filter(e => e.startsWith(s"$c:set:") ||
+        e.startsWith(s"$c:setNull:") || e == s"$c:executeBatch")
+      var params = 0
+      var rows = 0
       fill.foreach {
-        case e if e.endsWith(":addBatch") => run += 1; assert(run <= 2)
-        case _                            => run = 0
+        case e if e.endsWith(":executeBatch") =>
+          assert(params % 3 == 0 && params / 3 <= 2 && params > 0, fill)
+          rows += params / 3; params = 0
+        case e =>
+          params += 1
+          if (e.startsWith(s"$c:set:") &&
+              e.drop(s"$c:set:".length).takeWhile(_ != '=').toInt % 3 == 0)
+            assert(e.endsWith(s"=${pid.head}"), s"$c stamps its own id: $e")
       }
-      assert(fill.nonEmpty && fill.last == s"$c:executeBatch")
+      assert(params == 0 && fill.last == s"$c:executeBatch")
       // executeBatch still flushes per chunk (bounded batch memory)…
-      val nRows = fill.count(_.endsWith(":addBatch"))
       val nBatches = fill.count(_.endsWith(":executeBatch"))
-      assert(nBatches == (nRows + 1) / 2)
+      assert(nBatches == (rows + 1) / 2)
       // …but exactly one commit makes delete+insert atomic per attempt
       assert(log.count(_ == s"$c:commit") == 1)
+      rows
     }
     // all 5 delta rows travel through the writers, none via the driver
-    assert(log.count(_.endsWith(":addBatch")) == 5)
-    assert(!log.exists(_.startsWith("c1:addBatch")))
+    assert(staged.sum == 5)
+    assert(!log.exists(e => e.startsWith("c1:addBatch") || e.startsWith("c1:set:")))
 
     // one set-based UPDATE on the driver, staging dropped before+after
     val update = SqlGen.updateMssql("dbo", "orders", "dbimport_stage",
@@ -398,8 +436,12 @@ class MergeSinkSpec extends SparkSpec {
     val update = SqlGen.updateSqlite("orders", "dbimport_stage",
       Seq("o_orderkey"), Seq("o_totalprice"))
     assert(log.count(_ == s"c1:executeUpdate:$update") == 1)
-    // the null-keyed delta row is never staged
-    assert(log.count(_.endsWith(":addBatch")) == 2)
+    // the null-keyed delta row is never staged: two rows of three
+    // parameters, both keys bound
+    assert(log.count(_.matches("c\\d+:set:\\d+=.*")) == 6, log)
+    assert(log.filter(_.matches("c\\d+:set:[14]=.*"))
+      .map(_.dropWhile(_ != '=')).sorted == Seq("=1", "=2"), log)
+    assert(!log.exists(_.contains(":setNull:")), log)
   }
 
   test("ParquetMergeSink round-trips the merged relation and the count") {
@@ -483,8 +525,12 @@ object ParallelFakeDb {
             log.add(s"c$id:prepare:${args(0)}")
             mk(classOf[PreparedStatement], this)
           case "createStatement" => mk(classOf[Statement], this)
-          case "setObject"       => log.add(s"c$id:set"); null
-          case "setNull" => log.add(s"c$id:setNull:${args(1)}"); null
+          case "setObject" =>
+            log.add(s"c$id:set:${args(0)}=${args(1)}"); null
+          case "setInt" =>
+            log.add(s"c$id:setInt:${args(0)}=${args(1)}"); null
+          case "setNull" =>
+            log.add(s"c$id:setNull:${args(0)}:${args(1)}"); null
           case "addBatch" => log.add(s"c$id:addBatch"); null
           case "executeBatch" =>
             log.add(s"c$id:executeBatch"); Array.empty[Int]
