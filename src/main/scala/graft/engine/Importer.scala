@@ -1,7 +1,11 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import scala.collection.{immutable, mutable}
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Result of a keyed merge: the full updated target relation plus the
   * number of target rows that matched a delta row (the reference's
@@ -105,8 +109,12 @@ object MergeResult {
   * [[run]] and [[merge]] only plan: each row of the merged relation
   * carries a matched/inserted flag, and the sink that writes it counts
   * the flags in the same pass (`rowCountUpdated` is no longer a
-  * semi-join count of its own). No driver-side materialization of data
-  * rows anywhere.
+  * semi-join count of its own). Data rows are materialized on the
+  * driver only when they already live there: a delta whose optimized
+  * plan is a `LocalRelation` (a spreadsheet or `createDataFrame`
+  * source) is validated from its rows ([[Importer.localRows]]), which
+  * copies a bounded relation and runs no Spark job, as the reference
+  * validates its pandas frame on the client (`importer.py:242-249`).
   *
   * @param target     the table being updated
   * @param dataMaster the delta / update set ("data" in the reference)
@@ -227,16 +235,25 @@ final class Importer private (
     dataMaster.select(cols.map(col): _*).na.drop("any", joinOn)
   }
 
-  /** V10 / A1 — duplicate join-key detection (`importer.py:242-249`):
-    * a map-side-combined groupBy on the (small) delta plus a LIMIT-1
-    * existence probe — never a collect.
+  /** V10 / A1 — duplicate join-key detection (`importer.py:242-249`).
+    * A delta whose key rows are local ([[Importer.localRows]]) is
+    * checked in a driver-side set: the rows are already on the driver,
+    * so no Spark job runs. Any other delta gets a map-side-combined
+    * groupBy plus a LIMIT-1 existence probe, never a collect.
     */
   def validateUniqueKeys(): Unit = {
-    val hasDup = !data
-      .groupBy(joinOn.map(col): _*)
-      .count()
-      .filter(col("count") > 1)
-      .isEmpty
+    val keys = data.select(joinOn.map(col): _*)
+    val local =
+      if (keys.schema.forall(f => Importer.groupsByValue(f.dataType))) Importer.localRows(keys)
+      else None
+    val hasDup = local match {
+      case Some(rows) => Importer.hasDuplicateKeys(rows)
+      case None => !data
+        .groupBy(joinOn.map(col): _*)
+        .count()
+        .filter(col("count") > 1)
+        .isEmpty
+    }
     if (hasDup)
       throw new ImporterException(
         "data contains duplicate values in join on " +
@@ -360,6 +377,50 @@ final class Importer private (
 }
 
 object Importer {
+
+  /** The rows of `df` when its optimized plan is a `LocalRelation`:
+    * rows that already sit on the driver (a spreadsheet read, a
+    * `createDataFrame` of local rows, with any projection or filter
+    * folded in by the optimizer). Collecting them copies a bounded
+    * relation and runs no Spark job; `None` for any other plan. The
+    * optimized plan decides, not `Dataset.isLocal`, which reads the
+    * analyzed plan and so says no once a `select` or `na.drop` sits on
+    * the local relation.
+    */
+  private[engine] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation if !l.isStreaming => Some(df.collect())
+      case _ => None
+    }
+
+  /** Whether the driver-side duplicate check compares keys of type `t`
+    * as Spark's grouping does. Any other key type, such as a string
+    * under a non-binary collation, keeps the distributed probe.
+    */
+  private def groupsByValue(t: DataType): Boolean = t match {
+    case s: StringType => s.collationId == StringType.collationId // UTF8_BINARY
+    case _: NumericType | BooleanType | BinaryType | DateType |
+        TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** A key value as Spark's grouping compares it: `-0.0` equals `0.0`
+    * (its float normalization; NaN keys never get here, P3 drops them)
+    * and binary keys compare by content. `Row.hashCode` hashes an
+    * `Array[Byte]` by identity, so rows themselves cannot be the set's
+    * elements.
+    */
+  private def groupingValue(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => immutable.ArraySeq.unsafeWrapArray(b)
+    case other => other
+  }
+
+  private def hasDuplicateKeys(rows: Array[Row]): Boolean = {
+    val seen = mutable.HashSet.empty[Seq[Any]]
+    !rows.forall(r => seen.add(r.toSeq.map(groupingValue)))
+  }
 
   /** One-shot functional form used by [[graft.SparkEntry]]: validate,
     * slice, and merge in a single call.

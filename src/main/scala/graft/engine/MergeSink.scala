@@ -4,7 +4,10 @@ import java.sql.{Connection, PreparedStatement, Statement}
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -54,17 +57,52 @@ trait MergeSink {
   * table location with bounded rows per file — the chunk-size contract
   * of the reference's bulk insert carried to file granularity (S8).
   * The merge's counts are observed in the same pass as the write.
+  *
+  * The location must not be one the merge reads from: the overwrite
+  * deletes it before the plan has read it, which would destroy the
+  * table. `write` refuses such a path with an [[ImporterException]]
+  * before anything is deleted.
   */
 final class ParquetMergeSink(
     path: String, chunkSize: Int = Staging.ChunkSize
 ) extends MergeSink {
   override def write(
       merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
+    ParquetMergeSink.requireNotReadFrom(merge.updated, path)
     merge.writeObserved(Staging.writeBatched(_, path, chunkSize))
     // affected = both legs: for an upsert result `updated` already IS
     // the upserted relation, so the count mirrors the JDBC sinks'
     // update+insert total
     merge.rowCountUpdated + merge.rowCountInserted
+  }
+}
+
+object ParquetMergeSink {
+
+  /** Throws when `path`, qualified, is a file-source root path that
+    * `plan` reads, or an ancestor of one. Reads the analyzed plan and
+    * the roots its file indexes already hold, so no Spark job runs.
+    */
+  private[engine] def requireNotReadFrom(plan: DataFrame, path: String): Unit = {
+    val conf = plan.sparkSession.sparkContext.hadoopConfiguration
+    def qualify(p: Path): Path = p.getFileSystem(conf).makeQualified(p)
+    val out = qualify(new Path(path))
+    val roots = plan.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths
+        case _ => Nil
+      }
+      case r: DataSourceV2Relation => r.table match {
+        case t: FileTable => t.fileIndex.rootPaths
+        case _ => Nil
+      }
+    }.flatten.map(qualify)
+    roots.find(r => Iterator.iterate(r)(_.getParent).takeWhile(_ != null).contains(out))
+      .foreach { r =>
+        throw new ImporterException(
+          s"ParquetMergeSink: refusing to overwrite '$out', which the merge reads from " +
+            s"('$r'); write the merged table to another path")
+      }
   }
 }
 
@@ -83,12 +121,16 @@ final class ParquetMergeSink(
   *
   * A single connection carries the whole lifecycle because the staging
   * table is session-scoped on both dialects (`#dbimport` /
-  * `temp.dbimport`); the delta therefore streams through the driver
-  * via `toLocalIterator` (partition-at-a-time, never a full collect) —
-  * the delta is the small side by construction (a user-supplied update
-  * set). When the delta is large, [[JdbcParallelMergeSink]] is the
-  * scale form: per-partition parallel inserts into a globally-visible
-  * staging table, then the same UPDATE.
+  * `temp.dbimport`), so the delta passes through the driver — the small
+  * side by construction (a user-supplied update set). A delta whose
+  * staged projection is a `LocalRelation` ([[Importer.localRows]], e.g.
+  * a spreadsheet read) is staged from its rows: they are already on the
+  * driver, so collecting them copies a bounded relation and runs no
+  * Spark job. Any other delta streams via `toLocalIterator`
+  * (partition-at-a-time, never a full collect). Both give the rows in
+  * the same order. When the delta is large, [[JdbcParallelMergeSink]]
+  * is the scale form: per-partition parallel inserts into a
+  * globally-visible staging table, then the same UPDATE.
   *
   * Transactions are explicit: autocommit is disabled for the
   * lifecycle (JDBC connections default to `autoCommit=true`, where
@@ -127,7 +169,9 @@ final class JdbcMergeSink(
             dialect, JdbcMergeSink.qualified(dialect, spec), temp, cols))
           JdbcMergeSink.insertBatches(
             n => conn.prepareStatement(SqlGen.insertInto(dialect, temp, cols, n)),
-            projected.toLocalIterator(), sqlTypes, chunkSize, () => conn.commit())
+            Importer.localRows(projected).fold(projected.toLocalIterator())(
+              rows => new JdbcMergeSink.RowIt(rows.iterator)),
+            sqlTypes, chunkSize, () => conn.commit())
           val stagingRef = if (dialect == "mssql") temp else s"temp.$temp"
           val (updated, inserted) =
             JdbcMergeSink.applyLegs(st, dialect, spec, stagingRef)

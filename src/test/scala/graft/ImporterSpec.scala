@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.file.Files
+
 import graft.engine.{Importer, ImporterException}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 /** Port of the reference's end-to-end suite
   * (`/root/reference/tests/test_importer.py`) onto the Spark engine:
@@ -206,6 +209,33 @@ class ImporterSpec extends SparkSpec {
     assert(e.getMessage == "data contains duplicate column: 'price'")
   }
 
+  /** V10's verdict on `rows` — the exception text, or None when the
+    * delta is accepted — self-merged on `keys`, from a local relation
+    * (checked on the driver, no Spark job) and from the same rows read
+    * back from parquet (the distributed probe). The two must agree.
+    */
+  private def v10Verdict(rows: Seq[Row], schema: StructType,
+      keys: Seq[String]): Option[String] = {
+    val local = df(rows, schema)
+    val path = Files.createTempDirectory("v10").resolve("delta").toString
+    local.write.parquet(path)
+    val fromParquet = spark.read.parquet(path)
+    def verdict(d: DataFrame): (Option[String], Int) = {
+      val imp = new Importer(d, d, joinOn = Some(keys), eagerValidate = false)
+      val (out, ev) = SparkEvents.during(spark)(Try(imp.validateUniqueKeys()))
+      (out.failed.toOption.map {
+        case e: ImporterException => e.getMessage
+        case e => fail(s"V10 threw ${e.getClass.getName}", e)
+      }, ev.jobs)
+    }
+    val (onDriver, driverJobs) = verdict(local)
+    val (distributed, probeJobs) = verdict(fromParquet)
+    assert(driverJobs == 0, s"local delta ran V10 as Spark jobs: $rows")
+    assert(probeJobs > 0, s"parquet delta skipped the distributed probe: $rows")
+    assert(onDriver == distributed, s"verdicts differ on $rows")
+    onDriver
+  }
+
   /** `test_slice_data_duplicate_values` (`test_importer.py:307-326`). */
   test("V10: duplicate join-key values rejected") {
     val delta = df(Seq(
@@ -219,6 +249,41 @@ class ImporterSpec extends SparkSpec {
     }
     assert(e.getMessage ==
       "data contains duplicate values in join on column: 'id'")
+    assert(v10Verdict(delta.collect().toSeq, grocSchema, Seq("id")) ==
+      Some(e.getMessage))
+
+    // edge keys: each verdict holds on a local and a parquet delta, and
+    // each duplicate has a near miss that is accepted
+    def one(n: String, t: DataType) =
+      StructType(Seq(StructField(n, t), StructField("v", IntegerType)))
+    val dup = Some("data contains duplicate values in join on column: 'k'")
+    // string keys compare by content, case-sensitively
+    assert(v10Verdict(Seq(Row("x", 1), Row("X", 2), Row("x", 3)),
+      one("k", StringType), Seq("k")) == dup)
+    assert(v10Verdict(Seq(Row("x", 1), Row("X", 2)),
+      one("k", StringType), Seq("k")) == None)
+    // Spark groups -0.0 with 0.0; a NaN key is dropped by P3 (`na.drop`
+    // counts NaN as missing, as pandas' dropna does), so repeated NaNs
+    // are not duplicates
+    assert(v10Verdict(Seq(Row(-0.0, 1), Row(0.0, 2)),
+      one("k", DoubleType), Seq("k")) == dup)
+    assert(v10Verdict(Seq(Row(-0.0, 1), Row(1.0, 2)),
+      one("k", DoubleType), Seq("k")) == None)
+    assert(v10Verdict(Seq(Row(Double.NaN, 1), Row(1.0, 2), Row(Double.NaN, 3)),
+      one("k", DoubleType), Seq("k")) == None)
+    // binary keys compare by content, not by array identity
+    assert(v10Verdict(Seq(Row(Array[Byte](1, 2), 1), Row(Array[Byte](1, 2), 2)),
+      one("k", BinaryType), Seq("k")) == dup)
+    assert(v10Verdict(Seq(Row(Array[Byte](1, 2), 1), Row(Array[Byte](2, 1), 2)),
+      one("k", BinaryType), Seq("k")) == None)
+    // composite keys: a duplicate needs every key column equal
+    val pair = StructType(Seq(StructField("a", LongType),
+      StructField("b", StringType), StructField("v", IntegerType)))
+    assert(v10Verdict(Seq(Row(1L, "p", 1), Row(1L, "q", 2), Row(2L, "p", 3)),
+      pair, Seq("a", "b")) == None)
+    assert(v10Verdict(Seq(Row(1L, "p", 1), Row(2L, "p", 2), Row(1L, "p", 3)),
+      pair, Seq("a", "b")) ==
+      Some("data contains duplicate values in join on columns: 'a', 'b'"))
   }
 
   /** Two null-keyed rows are not duplicates — P3 drops them before the
@@ -226,13 +291,17 @@ class ImporterSpec extends SparkSpec {
     * `importer.py:228-249`).
     */
   test("V10 after P3: repeated null keys are not duplicates") {
-    val delta = df(Seq(
+    val rows = Seq(
       Row(null, "Pear", 14, 19.0),
       Row(null, "Lemon", 16, 17.0),
       Row("ID000001", "Apple", 15, 20.0)
-    ))
-    val res = new Importer(groceries, delta, tablePk = Seq("id")).merge()
+    )
+    val res = new Importer(groceries, df(rows), tablePk = Seq("id")).merge()
     assert(res.rowCountUpdated == 1L)
+    assert(v10Verdict(rows, grocSchema, Seq("id")) == None)
+    // nulls in one column of a composite key drop the row, too
+    assert(v10Verdict(rows :+ Row("ID000001", null, 1, 1.0),
+      grocSchema, Seq("id", "item")) == None)
   }
 
   /** Composite-key merge on the real lineitem fixture, self-derived

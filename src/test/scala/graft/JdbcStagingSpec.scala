@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
 import graft.engine.{Importer, JdbcMergeSink, JdbcParallelMergeSink, MergeSpec}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 
 /** Pins the JDBC sinks' multi-row staging against a real embedded
   * database (DuckDB, which accepts the sqlite dialect verbatim): the
@@ -146,6 +147,53 @@ class JdbcStagingSpec extends SparkSpec {
         Seq("prepare:333", "prepare:167", "prepare:1"), clue)
       assert(query(url, "select id, a, b from t order by id") ==
         expectedTable(update, insert), clue)
+    }
+  }
+
+  test("JdbcMergeSink: a local delta runs no Spark job; its parquet copy stages the same table (DuckDB)") {
+    duckdb()
+    val url = freshDb("jdbc_local_jobs")
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("a", DoubleType), StructField("b", StringType)))
+    // the shape a spreadsheet source yields
+    val local = spark.createDataFrame(
+      deltaRows.map(r => Row.fromSeq(asSeq(r))).asJava, schema)
+    val path = Files.createTempDirectory("jdbc_local_jobs_pq").resolve("delta").toString
+    local.write.parquet(path)
+    val fromParquet = spark.read.parquet(path)
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.duckdb.DuckDBDriver")
+    val sink = new JdbcMergeSink("sqlite", () => DriverManager.getConnection(url),
+      chunkSize = 500)
+    for ((update, insert) <- modes) {
+      // the whole op, as the spreadsheet flow runs it: validate, plan,
+      // stage and apply; returns the settled counts, the table after
+      // the merge and its digest, and V10's own jobs
+      def op(delta: DataFrame): ((Long, Long), Seq[Seq[Any]], Seq[Seq[Any]], Int) = {
+        resetGroupTable(url)
+        val (imp, init) = SparkEvents.during(spark)(
+          new Importer(spark.read.jdbc(url, "t", props), delta,
+            table = "t", tablePk = Seq("id"), eagerValidate = false))
+        val (_, v10) = SparkEvents.during(spark)(imp.validateUniqueKeys())
+        val (counts, write) = SparkEvents.during(spark) {
+          val r = imp.run(update, insert)
+          sink.write(r, delta, MergeSpec("t", imp.joinOn, imp.subset,
+            insertUnmatched = insert, updateMatched = update))
+          (r.rowCountUpdated, r.rowCountInserted)
+        }
+        if (delta eq local) assert(init.jobs + v10.jobs + write.jobs == 0,
+          s"local delta ran Spark jobs: init ${init.jobs}, V10 ${v10.jobs}, write ${write.jobs}")
+        (counts, query(url, "select id, a, b from t order by id"),
+          query(url, "select count(*), bit_xor(hash(id, a, b)) from t"), v10.jobs)
+      }
+      val clue = s"run(update=$update, insert=$insert)"
+      val (counts, table, digest, v10Local) = op(local)
+      val (pqCounts, pqTable, pqDigest, v10Parquet) = op(fromParquet)
+      assert(v10Local == 0 && v10Parquet > 0, s"$clue V10 jobs $v10Local, $v10Parquet")
+      assert(counts == ((if (update) 500L else 0L, if (insert) 501L else 0L)), clue)
+      assert(pqCounts == counts, clue)
+      assert(table == expectedTable(update, insert), clue)
+      assert(pqTable == table && pqDigest == digest, clue)
     }
   }
 

@@ -5,7 +5,7 @@ import java.sql.{Connection, PreparedStatement, Statement}
 
 import scala.collection.mutable
 
-import graft.engine.{Importer, JdbcMergeSink, JdbcParallelMergeSink,
+import graft.engine.{Importer, ImporterException, JdbcMergeSink, JdbcParallelMergeSink,
   MergeResult, MergeSpec, ParquetMergeSink, SqlGen}
 import org.apache.spark.sql.functions._
 
@@ -487,6 +487,31 @@ class MergeSinkSpec extends SparkSpec {
       .map(x => (x.getString(0), x.getString(1), x.getDouble(2))).toSet
     assert(back == Set(("ID1", "Apple", 20.0), ("ID2", "Pear", 9.0),
       ("ID9", "Mango", 30.0)))
+  }
+
+  test("ParquetMergeSink refuses the path its target is read from; the table survives") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("merge_sink_inplace").toString
+    val p = s"$root/orders"
+    spark.range(1000).select(col("id"), (col("id") * 0.5).as("v"))
+      .write.parquet(p)
+    val delta = (0L until 10L).map(k => (k, k + 0.25)).toDF("id", "v")
+    val spec = MergeSpec("orders", Seq("id"), Seq("v"))
+    // the sink path as given, qualified with a scheme, and an ancestor
+    for ((read, out) <- Seq((p, p), (s"file://$p", p), (p, s"file://$p"), (p, root))) {
+      val r = new Importer(spark.read.parquet(read), delta, tablePk = Seq("id")).merge()
+      val (e, ev) = SparkEvents.during(spark) {
+        intercept[ImporterException](new ParquetMergeSink(out).write(r, delta, spec))
+      }
+      assert(e.getMessage.startsWith("ParquetMergeSink: refusing to overwrite"), e.getMessage)
+      assert(e.getMessage.contains(root), e.getMessage)
+      assert(ev.jobs == 0, s"the refusal ran Spark jobs: read=$read out=$out")
+      assert(spark.read.parquet(p).count() == 1000L, s"read=$read out=$out")
+    }
+    // a sibling path is not refused
+    val r = new Importer(spark.read.parquet(p), delta, tablePk = Seq("id")).merge()
+    assert(new ParquetMergeSink(s"$p-merged").write(r, delta, spec) == 10L)
+    assert(spark.read.parquet(s"$p-merged").count() == 1000L)
   }
 }
 
