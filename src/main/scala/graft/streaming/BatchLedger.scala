@@ -5,21 +5,29 @@ import org.apache.spark.sql.SparkSession
 
 /** Applied-batch-id ledger: zero-length markers under
   * `<root>/stream_ledger/<batchId>` — the [[graft.ops.IndexCommit]]
-  * marker economics applied to micro-batch ids, factored out of
-  * [[StreamingCluster]] (where the pattern was proven) so every
-  * ingestion stream whose per-batch apply is NOT naturally idempotent
-  * ([[graft.ops.SigIndex.append]], [[graft.ops.LshIndex.append]],
-  * [[graft.ops.SimSigIndex.append]] — each adds a segment per call)
-  * can be exactly-once under foreachBatch's at-least-once replay: a
-  * replayed id skips the apply entirely.
+  * marker economics applied to micro-batch ids. Every stream whose
+  * per-batch apply is NOT naturally idempotent uses it, so it is
+  * exactly-once under foreachBatch's at-least-once replay (a replayed
+  * id skips the apply entirely):
+  *   - the segment-union ingestion streams, each of whose appends adds
+  *     a segment ([[StreamingDedup]] over [[graft.ops.LshIndex]],
+  *     [[StreamingSigDedup]] over [[graft.ops.SigIndex]],
+  *     [[StreamingSimIngest]] over [[graft.ops.SimSigIndex]],
+  *     [[StreamingAnn]] over [[graft.ops.VectorIndex]]), including
+  *     their probe-then-ingest forms;
+  *   - [[StreamingCluster]], whose [[graft.ops.ClusterIndex.append]]
+  *     publishes an assignment version per call;
+  *   - [[StreamingSnapshot]] and [[StreamingExport]], whose publishes
+  *     each land a [[graft.ops.CorpusSnapshot]] version.
   *
   * The crash window (apply committed, marker not yet written) is the
   * streams' documented SAFE degrade: a re-applied batch stages a
-  * duplicate segment, which for every index here inflates candidates
-  * without changing verified answers (probe outputs are `distinct`
-  * over verified pairs, and [[StreamingCluster]]'s label merge is a
-  * fixpoint) — spec-pinned per stream by replaying with the marker
-  * removed.
+  * duplicate segment or version, which for every stream here inflates
+  * candidates or chain length without changing verified answers
+  * (probe outputs are `distinct` over verified pairs,
+  * [[StreamingCluster]]'s label merge is a fixpoint, and snapshot
+  * resolution is last-writer-wins) — spec-pinned per stream by
+  * replaying with the marker removed.
   *
   * Scale: one `exists` + one `createNewFile` of an empty marker per
   * micro-batch — O(1) metadata calls, nothing data-proportional.
@@ -36,8 +44,7 @@ private[graft] object BatchLedger {
     * segments until compaction collapses them. Operators planning
     * deeper rollbacks widen the window via the `ledgerKeepLast` knob
     * on [[cadence]]/[[ingest]] and the stream entry points that
-    * expose it (ADVICE r15 — previously hard-coded at both call
-    * sites).
+    * expose it.
     */
   val DefaultKeepLast: Int = 64
 
@@ -68,14 +75,13 @@ private[graft] object BatchLedger {
       mark(s, root, batchId)
     }
 
-  /** The shared ingestion-micro-batch shape, written once for the
-    * five segment-union indexes: ledger-guard, skip empty batches (an
-    * empty append would commit a contentless segment per replayed
-    * empty trigger), run `append`, then fire the compact cadence and
-    * the generations-graced superseded vacuum. The cadence is
-    * EFFECTIVELY outside the ledger (compact is relation-idempotent —
-    * a replay that skips it loses nothing but deferral; the next
-    * batch's cadence re-checks the same live count).
+  /** The shared ingestion-micro-batch shape: ledger-guard, skip empty
+    * batches (an empty append would commit a contentless segment or
+    * version per replayed empty trigger), run `append`, then fire
+    * [[cadence]]. The cadence is EFFECTIVELY outside the ledger
+    * (compact is relation-idempotent — a replay that skips it loses
+    * nothing but deferral; the next batch's cadence re-checks the same
+    * live count).
     */
   def ingest(
       s: SparkSession, indexPath: String, batchId: Long,
@@ -83,12 +89,13 @@ private[graft] object BatchLedger {
       maxSegments: Option[Int], vacuumKeepGens: Option[Int],
       ledgerKeepLast: Int = DefaultKeepLast)(
       append: => Unit)(
-      maybeCompact: Int => Option[Long]): Unit =
+      maybeCompact: Int => Option[Long],
+      vacuum: (SparkSession, String, Int) => Seq[Long]): Unit =
     appliedOnce(s, indexPath, batchId) {
       if (!batchIsEmpty) {
         append
         cadence(s, indexPath, maxSegments, vacuumKeepGens,
-          ledgerKeepLast)(maybeCompact)
+          ledgerKeepLast)(maybeCompact, vacuum)
       }
     }
 
@@ -127,22 +134,26 @@ private[graft] object BatchLedger {
   }
 
   /** The compact-cadence tail of [[ingest]], reusable where the batch
-    * body has extra legs (the probe-then-ingest streams): fire the
-    * index's `maybeCompact` at the live-segment bound, then the
-    * generations-graced superseded vacuum, then the marker prune —
-    * all three maintenance legs share one cadence so a long-lived
-    * stream bounds segments, superseded disk, AND ledger file count
-    * together.
+    * body has extra legs (the probe-then-ingest streams, the export
+    * stream): fire the index's `maybeCompact` at the live-segment
+    * bound, then `vacuum` with `vacuumKeepGens`, then the marker
+    * prune — all three maintenance legs share one cadence so a
+    * long-lived stream bounds segments, superseded disk, AND ledger
+    * file count together. Segment-union indexes pass the
+    * generations-graced [[graft.ops.IndexCommit.vacuumSuperseded]];
+    * the version-publishing streams pass
+    * [[graft.ops.IndexCommit.vacuum]], safe right after a compact
+    * because the compact's version is FULL.
     */
   def cadence(
       s: SparkSession, indexPath: String,
       maxSegments: Option[Int], vacuumKeepGens: Option[Int],
       ledgerKeepLast: Int = DefaultKeepLast)(
-      maybeCompact: Int => Option[Long]): Unit =
+      maybeCompact: Int => Option[Long],
+      vacuum: (SparkSession, String, Int) => Seq[Long]): Unit =
     maxSegments.foreach { ms =>
       maybeCompact(ms).foreach { _ =>
-        vacuumKeepGens.foreach(
-          graft.ops.IndexCommit.vacuumSuperseded(s, indexPath, _))
+        vacuumKeepGens.foreach(vacuum(s, indexPath, _))
         prune(s, indexPath, ledgerKeepLast)
       }
     }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.VectorIndex
+import graft.ops.{IndexCommit, VectorIndex}
 
 /** Continuous ANN retrieval: arriving query vectors probe a persisted
   * IVF index ([[graft.ops.VectorIndex]]) one micro-batch at a time —
@@ -29,14 +28,9 @@ object StreamingAnn {
       k: Int = 10,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, outPath, nprobe, k, batchId); ()
-      }
-      .start()
+    MicroBatch.start(queries, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, outPath, nprobe, k, batchId)
+    }
 
   /** One micro-batch: probe and (over)write the batch's result
     * directory. Returns the result-row count. Package-visible so the
@@ -81,16 +75,9 @@ object StreamingAnn {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
   ): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIngestBatch(batch, indexPath, batchId, maxSegments,
-          vacuumKeepGens)
-        ()
-      }
-      .start()
+    MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
+      applyIngestBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
+    }
 
   /** One ingestion micro-batch ([[StreamingDedup.applyIngestBatch]]'s
     * shape). Package-visible for synchronous spec driving.
@@ -105,18 +92,14 @@ object StreamingAnn {
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
       batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
       VectorIndex.append(batch.sparkSession, indexPath, batch))(
-      VectorIndex.maybeCompact(batch.sparkSession, indexPath, _))
+      VectorIndex.maybeCompact(batch.sparkSession, indexPath, _),
+      IndexCommit.vacuumSuperseded)
 
   /** The accumulated results table across every micro-batch so far;
     * empty (typed) before the first micro-batch commits — see
     * [[StreamingDedup.pairs]].
     */
-  def results(s: org.apache.spark.sql.SparkSession, outPath: String): DataFrame =
-    if (!StreamingDedup.hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "query_id BIGINT, vec_id BIGINT, score DOUBLE, rk INT, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("query_id"), col("vec_id"), col("score"), col("rk"),
-        col("batch_id").cast("long").as("batch_id"))
+  def results(s: SparkSession, outPath: String): DataFrame =
+    MicroBatch.output(s, outPath,
+      "query_id BIGINT, vec_id BIGINT, score DOUBLE, rk INT, batch_id BIGINT")
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.ClusterIndex
+import graft.ops.{ClusterIndex, IndexCommit}
 
 /** Continuous dedup INGESTION: arriving documents are folded into the
   * persisted [[graft.ops.ClusterIndex]] one micro-batch at a time —
@@ -56,17 +56,6 @@ object StreamingCluster {
     */
   val DefaultVacuumKeep: Int = 2
 
-  // ledger primitives factored into [[BatchLedger]] (r14 — the other
-  // non-idempotent index appends gained ingestion streams); these
-  // delegates keep the original spec-visible surface
-  private[graft] def ledgerHas(
-      s: SparkSession, indexPath: String, batchId: Long): Boolean =
-    BatchLedger.has(s, indexPath, batchId)
-
-  private[graft] def markLedger(
-      s: SparkSession, indexPath: String, batchId: Long): Unit =
-    BatchLedger.mark(s, indexPath, batchId)
-
   /** Fold a stream of (doc_id, text) documents into the index at
     * `indexPath` (which must already hold a committed
     * [[ClusterIndex.build]]). Read the evolving relation with
@@ -84,22 +73,17 @@ object StreamingCluster {
       vacuumKeep: Option[Int] = Some(DefaultVacuumKeep),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, threshold, batchId, maxVersions,
-          vacuumKeep, ledgerKeepLast)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, threshold, batchId, maxVersions,
+        vacuumKeep, ledgerKeepLast)
+    }
 
   /** One micro-batch: skip ids the ledger already holds (exactly-once
     * under replay), skip empty batches (an empty append would publish
     * a contentless version per replayed empty trigger), else
-    * [[ClusterIndex.append]] then mark the ledger. Package-visible so
-    * the spec can drive batches (and replays) synchronously.
+    * [[ClusterIndex.append]] then mark the ledger
+    * ([[BatchLedger.ingest]]). Package-visible so the spec can drive
+    * batches (and replays) synchronously.
     */
   private[graft] def applyBatch(
       batch: DataFrame,
@@ -111,28 +95,12 @@ object StreamingCluster {
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast
   ): Unit = {
     val s = batch.sparkSession
-    if (!ledgerHas(s, indexPath, batchId)) {
-      if (!batch.isEmpty) {
-        ClusterIndex.append(s, indexPath, batch, threshold)
-        // in-stream compact cadence ([[ClusterIndex.maybeCompact]]):
-        // caps resolution at maxVersions sidecar reads. Outside the
-        // ledger guard on purpose — relation-level idempotent, a
-        // replayed compact is waste, never wrongness. When a compact
-        // fired, the newest version is FULL, so the bounded vacuum is
-        // safe and caps disk at maxVersions + vacuumKeep versions.
-        maxVersions.foreach { mv =>
-          ClusterIndex.maybeCompact(s, indexPath, mv).foreach { _ =>
-            vacuumKeep.foreach(graft.ops.IndexCommit.vacuum(s, indexPath, _))
-            // marker prune rides the same cadence: bounds the ledger
-            // directory's file count for arbitrarily long streams
-            // (window widened via ledgerKeepLast for operators that
-            // roll checkpoints back deeper than the default — see
-            // [[BatchLedger.DefaultKeepLast]])
-            BatchLedger.prune(s, indexPath, ledgerKeepLast)
-          }
-        }
-      }
-      markLedger(s, indexPath, batchId)
-    }
+    // the compact cadence caps resolution at maxVersions sidecar reads;
+    // when a compact fired the newest version is FULL, so the bounded
+    // vacuum is safe and caps disk at maxVersions + vacuumKeep versions
+    BatchLedger.ingest(s, indexPath, batchId, batch.isEmpty, maxVersions,
+      vacuumKeep, ledgerKeepLast)(
+      ClusterIndex.append(s, indexPath, batch, threshold))(
+      ClusterIndex.maybeCompact(s, indexPath, _), IndexCommit.vacuum)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -38,14 +38,9 @@ object StreamingDecontaminate {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, outPath, batchId); ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, outPath, batchId)
+    }
 
   /** One micro-batch: probe and write the batch's verdict directory.
     * Returns the contaminated count. Package-visible so the spec can
@@ -71,14 +66,7 @@ object StreamingDecontaminate {
     * has processed zero batches yields an EMPTY typed relation, not a
     * path error.
     */
-  def verdicts(
-      s: org.apache.spark.sql.SparkSession, outPath: String): DataFrame =
-    if (!StreamingDedup.hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, n_flagged BIGINT, contaminated BOOLEAN, " +
-            "batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("doc_id"), col("n_flagged"), col("contaminated"),
-        col("batch_id").cast("long").as("batch_id"))
+  def verdicts(s: SparkSession, outPath: String): DataFrame =
+    MicroBatch.output(s, outPath,
+      "doc_id BIGINT, n_flagged BIGINT, contaminated BOOLEAN, batch_id BIGINT")
 }

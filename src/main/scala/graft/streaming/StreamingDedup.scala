@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{CacheScope, LshIndex}
+import graft.ops.{CacheScope, IndexCommit, LshIndex}
 
 /** Continuous near-duplicate detection: arriving documents probe a
   * persisted MinHash-LSH index ([[graft.ops.LshIndex]]) one micro-batch
@@ -62,18 +62,23 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow(),
       guardMaxDocFreq: Option[Double] = None,
       guardEvery: Int = DefaultGuardEvery
-  ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, outPath, threshold, batchId)
-        maybeRefreshGuard(batch.sparkSession, indexPath, batchId,
-          guardMaxDocFreq, guardEvery)
-        ()
-      }
-      .start()
+  ): StreamingQuery = {
+    requireGuardEvery(guardMaxDocFreq, guardEvery)
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, outPath, threshold, batchId)
+      maybeRefreshGuard(batch.sparkSession, indexPath, batchId,
+        guardMaxDocFreq, guardEvery)
+    }
+  }
+
+  /** A zero cadence would throw ArithmeticException inside
+    * foreachBatch and kill the query on its first micro-batch, so the
+    * entry points reject it before the query starts.
+    */
+  private def requireGuardEvery(
+      guardMaxDocFreq: Option[Double], guardEvery: Int): Unit =
+    if (guardMaxDocFreq.isDefined)
+      require(guardEvery >= 1, "guardEvery must be at least 1")
 
   /** The opt-in guard cadence: after micro-batch `batchId`, refresh
     * the hot-shingle guard when the 1-based batch count hits the
@@ -83,19 +88,17 @@ object StreamingDedup {
     * driving.
     */
   private[graft] def maybeRefreshGuard(
-      s: org.apache.spark.sql.SparkSession,
+      s: SparkSession,
       indexPath: String,
       batchId: Long,
       guardMaxDocFreq: Option[Double],
-      guardEvery: Int): Unit =
+      guardEvery: Int): Unit = {
+    requireGuardEvery(guardMaxDocFreq, guardEvery)
     guardMaxDocFreq.foreach { f =>
-      // validated here, not just in probeStream: a zero cadence would
-      // throw ArithmeticException inside foreachBatch and kill the
-      // stream on its first micro-batch
-      require(guardEvery >= 1, "guardEvery must be at least 1")
       if ((batchId + 1) % guardEvery == 0)
         LshIndex.refreshGuard(s, indexPath, f)
     }
+  }
 
   /** Default in-stream segment-compact cadence: one committed delta
     * per micro-batch means probes union ever more segments until a
@@ -127,16 +130,9 @@ object StreamingDedup {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIngestBatch(batch, indexPath, batchId, maxSegments,
-          vacuumKeepGens)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyIngestBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
+    }
 
   /** Continuous PROBE-THEN-INGEST in one stream — the production
     * shape [[graft.ops.LshIndex.append]]'s docs describe: each
@@ -169,23 +165,19 @@ object StreamingDedup {
       vacuumKeepGens: Option[Int] = Some(1),
       guardMaxDocFreq: Option[Double] = None,
       guardEvery: Int = DefaultGuardEvery
-  ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyProbeIngestBatch(batch, indexPath, outPath, threshold,
-          batchId, maxSegments, vacuumKeepGens)
-        // the guard cadence matters MOST here: this is the stream
-        // where the index actually grows, so append-driven hot-shingle
-        // drift actually accrues ([[probeStream]]'s knob, same
-        // outside-the-ledger idempotence argument)
-        maybeRefreshGuard(batch.sparkSession, indexPath, batchId,
-          guardMaxDocFreq, guardEvery)
-        ()
-      }
-      .start()
+  ): StreamingQuery = {
+    requireGuardEvery(guardMaxDocFreq, guardEvery)
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyProbeIngestBatch(batch, indexPath, outPath, threshold,
+        batchId, maxSegments, vacuumKeepGens)
+      // the guard cadence matters MOST here: this is the stream where
+      // the index actually grows, so append-driven hot-shingle drift
+      // actually accrues ([[probeStream]]'s knob, same
+      // outside-the-ledger idempotence argument)
+      maybeRefreshGuard(batch.sparkSession, indexPath, batchId,
+        guardMaxDocFreq, guardEvery)
+    }
+  }
 
   /** One probe-then-ingest micro-batch (see
     * [[probeAndMaintainStream]]). Package-visible for synchronous
@@ -211,7 +203,8 @@ object StreamingDedup {
       if (!batch.isEmpty) {
         LshIndex.append(s, indexPath, batch)
         BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-          ledgerKeepLast)(LshIndex.maybeCompact(s, indexPath, _))
+          ledgerKeepLast)(LshIndex.maybeCompact(s, indexPath, _),
+          IndexCommit.vacuumSuperseded)
       }
     }
   }
@@ -236,7 +229,8 @@ object StreamingDedup {
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
       batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
       LshIndex.append(batch.sparkSession, indexPath, batch))(
-      LshIndex.maybeCompact(batch.sparkSession, indexPath, _))
+      LshIndex.maybeCompact(batch.sparkSession, indexPath, _),
+      IndexCommit.vacuumSuperseded)
 
   /** One micro-batch: probe and write the batch's pair directory.
     * Returns the pair count. Package-visible so the spec can drive
@@ -269,22 +263,7 @@ object StreamingDedup {
     * path error — `outPath` only gains `batch_id=` directories when
     * the first micro-batch commits.
     */
-  def pairs(s: org.apache.spark.sql.SparkSession, outPath: String): DataFrame =
-    if (!hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_new BIGINT, doc_idx BIGINT, jaccard DOUBLE, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("doc_new"), col("doc_idx"), col("jaccard"),
-        col("batch_id").cast("long").as("batch_id"))
-
-  /** True once at least one `batch_id=` partition directory exists. */
-  private[streaming] def hasBatchDirs(outPath: String): Boolean = {
-    val d = new java.io.File(outPath)
-    d.isDirectory && {
-      val kids = d.listFiles()
-      kids != null && kids.exists(f =>
-        f.isDirectory && f.getName.startsWith("batch_id="))
-    }
-  }
+  def pairs(s: SparkSession, outPath: String): DataFrame =
+    MicroBatch.output(s, outPath,
+      "doc_new BIGINT, doc_idx BIGINT, jaccard DOUBLE, batch_id BIGINT")
 }

@@ -7,13 +7,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ops.{ClusterIndex, CorpusSnapshot, Filtering, IndexCommit,
   SigIndex, TrainPrep}
 
-/** The composed last mile AS A STREAM — VERDICT r15 #4: every
-  * ingestion half was already continuous ([[StreamingIngest]],
-  * [[StreamingCluster]], [[StreamingLm]], [[StreamingSnapshot]]) but
-  * the export composition ([[graft.ops.TrainPrep.pipelineExportIndexed]]
-  * — near-dup keep ∧ quality ∧ LM gate ∧ train split ∧ packing) was
-  * batch-only, so a pipeline ingesting continuously still re-ran a
-  * batch export job by hand. This stream scores each arriving
+/** The composed last mile AS A STREAM: the ingestion halves
+  * ([[StreamingIngest]], [[StreamingCluster]], [[StreamingLm]],
+  * [[StreamingSnapshot]]) are continuous, and so is the export
+  * composition ([[graft.ops.TrainPrep.pipelineExportIndexed]] —
+  * near-dup keep ∧ quality ∧ LM gate ∧ train split ∧ packing), so a
+  * pipeline ingesting continuously needs no batch export job run by
+  * hand. This stream scores each arriving
   * micro-batch of (doc_id, text) documents through the FROZEN models
   * and publishes the survivors as [[graft.ops.CorpusSnapshot]] deltas:
   *
@@ -81,17 +81,11 @@ object StreamingExport {
       lookupMaxIds: Int = DefaultLookupMaxIds,
       maxBatchRows: Long = SigIndex.DefaultMaxProbeBatchRows
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, clusterIdx, knIdx, snapRoot, batchId, headMax,
-          middleMax, nShards, maxBytes, maxChain, vacuumKeep,
-          ledgerKeepLast, lookupMaxIds, maxBatchRows)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, clusterIdx, knIdx, snapRoot, batchId, headMax,
+        middleMax, nShards, maxBytes, maxChain, vacuumKeep,
+        ledgerKeepLast, lookupMaxIds, maxBatchRows)
+    }
 
   /** One export micro-batch (see [[exportStream]]). Package-visible
     * for synchronous spec driving.
@@ -116,8 +110,7 @@ object StreamingExport {
       // the batch lineage feeds six actions (emptiness, the size
       // precondition's bounded count, ids, LM gate, split, survivor
       // join) — persist FIRST so even the preconditions hit the cache
-      // (the ADVICE-r15 ordering: checks before persist re-execute
-      // the lineage once each)
+      // (checks before persist would re-execute the lineage once each)
       val b = batch.select(col("doc_id"), col("text")).persist()
       try {
         if (!b.isEmpty) {
@@ -136,21 +129,12 @@ object StreamingExport {
           // (an empty delta per filtered-out batch would grow the
           // chain for free) but still marks the ledger
           if (!survivors.isEmpty) {
-            import s.implicits._
-            if (IndexCommit.committedIds(s, snapRoot).isEmpty)
-              CorpusSnapshot.publish(s, survivors, snapRoot, nShards,
-                maxBytes)
-            else
-              CorpusSnapshot.publishDelta(s, survivors,
-                Seq.empty[Long].toDF("doc_id"), snapRoot, nShards,
-                maxBytes)
-            maxChain.foreach { mc =>
-              CorpusSnapshot.maybeCompact(s, snapRoot, mc, nShards,
-                maxBytes).foreach { _ =>
-                vacuumKeep.foreach(IndexCommit.vacuum(s, snapRoot, _))
-                BatchLedger.prune(s, snapRoot, ledgerKeepLast)
-              }
-            }
+            StreamingSnapshot.publish(s, survivors, snapRoot, nShards,
+              maxBytes)
+            BatchLedger.cadence(s, snapRoot, maxChain, vacuumKeep,
+              ledgerKeepLast)(
+              CorpusSnapshot.maybeCompact(s, snapRoot, _, nShards, maxBytes),
+              IndexCommit.vacuum)
           }
         }
       } finally {

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StructType
 
 import graft.ops.{Html, Robots, UrlOps}
 import graft.sources.Warc
@@ -36,14 +35,9 @@ object StreamingIngest {
       agent: String = "GraftBot/1.0",
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    warcFiles.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, outPath, agent, batchId); ()
-      }
-      .start()
+    MicroBatch.start(warcFiles, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, outPath, agent, batchId)
+    }
 
   final case class IngestedDoc(
       file_id: Long,
@@ -117,21 +111,8 @@ object StreamingIngest {
     * typed relation before the first commit.
     */
   def docs(s: SparkSession, outPath: String): DataFrame =
-    if (!hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType.fromDDL(
-          "file_id BIGINT, rec_idx INT, url STRING, norm_url STRING, " +
-            "http_status INT, title STRING, body STRING, n_links INT, " +
-            "allowed BOOLEAN, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-
-  private def hasBatchDirs(outPath: String): Boolean = {
-    val d = new java.io.File(outPath)
-    d.isDirectory && {
-      val kids = d.listFiles()
-      kids != null && kids.exists(f =>
-        f.isDirectory && f.getName.startsWith("batch_id="))
-    }
-  }
+    MicroBatch.output(s, outPath,
+      "file_id BIGINT, rec_idx INT, url STRING, norm_url STRING, " +
+        "http_status INT, title STRING, body STRING, n_links INT, " +
+        "allowed BOOLEAN, batch_id BIGINT")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.KnIndex
@@ -43,15 +42,9 @@ object StreamingLm {
       middleMax: Double = 1.05,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, outPath, headMax, middleMax, batchId)
-        ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, outPath, headMax, middleMax, batchId)
+    }
 
   /** One micro-batch: score against the CURRENT committed model and
     * (over)write the batch's score directory. Empty batches still
@@ -76,13 +69,7 @@ object StreamingLm {
     * relation, not a path error.
     */
   def scores(s: SparkSession, outPath: String): DataFrame =
-    if (!StreamingDedup.hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_id BIGINT, split STRING, n_scored BIGINT, " +
-            "nll DOUBLE, bucket STRING, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("doc_id"), col("split"), col("n_scored"),
-        col("nll"), col("bucket"),
-        col("batch_id").cast("long").as("batch_id"))
+    MicroBatch.output(s, outPath,
+      "doc_id BIGINT, split STRING, n_scored BIGINT, nll DOUBLE, " +
+        "bucket STRING, batch_id BIGINT")
 }

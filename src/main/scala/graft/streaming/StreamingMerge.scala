@@ -47,14 +47,9 @@ object StreamingMerge {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    delta.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, targetPath, joinOn, subset); ()
-      }
-      .start()
+    MicroBatch.start(delta, checkpointDir, trigger) { (batch, _) =>
+      applyBatch(batch, targetPath, joinOn, subset)
+    }
 
   /** One micro-batch: recover any interrupted swap, merge, stage the
     * new snapshot, swap it in. Returns the affected-row count (A4).

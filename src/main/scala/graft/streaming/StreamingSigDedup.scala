@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{PerceptualHash, SigIndex}
+import graft.ops.{IndexCommit, PerceptualHash, SigIndex}
 
 /** Continuous MEDIA near-duplicate detection: arriving clips probe a
   * persisted perceptual-signature index ([[graft.ops.SigIndex]]) one
@@ -47,16 +47,10 @@ object StreamingSigDedup {
       sigsOf: DataFrame => DataFrame = PerceptualHash.signatures,
       maxBandFreq: Option[Long] = None
   ): StreamingQuery =
-    clips.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, outPath, maxHamming, batchId, sigsOf,
-          maxBandFreq)
-        ()
-      }
-      .start()
+    MicroBatch.start(clips, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, outPath, maxHamming, batchId, sigsOf,
+        maxBandFreq)
+    }
 
   /** One micro-batch: decode+hash the batch, probe, (over)write its
     * pair directory. Returns the pair count. Package-visible so the
@@ -104,16 +98,10 @@ object StreamingSigDedup {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
   ): StreamingQuery =
-    clips.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyIngestBatch(batch, indexPath, batchId, sigsOf, maxSegments,
-          vacuumKeepGens)
-        ()
-      }
-      .start()
+    MicroBatch.start(clips, checkpointDir, trigger) { (batch, batchId) =>
+      applyIngestBatch(batch, indexPath, batchId, sigsOf, maxSegments,
+        vacuumKeepGens)
+    }
 
   /** One ingestion micro-batch: skip ids the ledger holds
     * (exactly-once under replay), skip empty batches (an empty append
@@ -135,7 +123,8 @@ object StreamingSigDedup {
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
       batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
       SigIndex.append(batch.sparkSession, indexPath, sigsOf(batch)))(
-      SigIndex.maybeCompact(batch.sparkSession, indexPath, _))
+      SigIndex.maybeCompact(batch.sparkSession, indexPath, _),
+      IndexCommit.vacuumSuperseded)
 
   /** Continuous PROBE-THEN-INGEST in one stream — the media twin of
     * [[StreamingDedup.probeAndMaintainStream]]: each micro-batch is
@@ -159,16 +148,10 @@ object StreamingSigDedup {
       vacuumKeepGens: Option[Int] = Some(1),
       maxBandFreq: Option[Long] = None
   ): StreamingQuery =
-    clips.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyProbeIngestBatch(batch, indexPath, outPath, maxHamming,
-          batchId, sigsOf, maxSegments, vacuumKeepGens, maxBandFreq)
-        ()
-      }
-      .start()
+    MicroBatch.start(clips, checkpointDir, trigger) { (batch, batchId) =>
+      applyProbeIngestBatch(batch, indexPath, outPath, maxHamming,
+        batchId, sigsOf, maxSegments, vacuumKeepGens, maxBandFreq)
+    }
 
   /** One probe-then-ingest micro-batch (see
     * [[probeAndMaintainStream]]). Package-visible for synchronous
@@ -198,7 +181,8 @@ object StreamingSigDedup {
         if (!batch.isEmpty) {
           SigIndex.append(s, indexPath, sigs)
           BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-            ledgerKeepLast)(SigIndex.maybeCompact(s, indexPath, _))
+            ledgerKeepLast)(SigIndex.maybeCompact(s, indexPath, _),
+            IndexCommit.vacuumSuperseded)
         }
       } finally sigs.unpersist()
     }
@@ -209,12 +193,7 @@ object StreamingSigDedup {
     * relation before the first batch commits ([[StreamingDedup.pairs]]
     * convention).
     */
-  def pairs(s: org.apache.spark.sql.SparkSession, outPath: String): DataFrame =
-    if (!StreamingDedup.hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "doc_new BIGINT, doc_idx BIGINT, hamming INT, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("doc_new"), col("doc_idx"), col("hamming"),
-        col("batch_id").cast("long").as("batch_id"))
+  def pairs(s: SparkSession, outPath: String): DataFrame =
+    MicroBatch.output(s, outPath,
+      "doc_new BIGINT, doc_idx BIGINT, hamming INT, batch_id BIGINT")
 }

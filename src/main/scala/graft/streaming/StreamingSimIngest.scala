@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.SimSigIndex
+import graft.ops.{IndexCommit, SimSigIndex}
 
 /** Continuous EMBEDDING ingestion: arriving (vec_id, v) vectors are
   * signed batch-side and folded into the persisted hyperplane-
@@ -39,16 +39,9 @@ object StreamingSimIngest {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
   ): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, indexPath, batchId, maxSegments,
-          vacuumKeepGens)
-        ()
-      }
-      .start()
+    MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
+      applyBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
+    }
 
   /** One micro-batch: ledger-skip replayed ids, skip empty batches,
     * else [[SimSigIndex.append]] (batch-only signing under the frozen
@@ -66,7 +59,8 @@ object StreamingSimIngest {
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
       batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
       SimSigIndex.append(batch.sparkSession, indexPath, batch))(
-      SimSigIndex.maybeCompact(batch.sparkSession, indexPath, _))
+      SimSigIndex.maybeCompact(batch.sparkSession, indexPath, _),
+      IndexCommit.vacuumSuperseded)
 
   /** Continuous PROBE-THEN-INGEST in one stream — the embedding twin
     * of [[StreamingDedup.probeAndMaintainStream]] (text) and
@@ -103,16 +97,10 @@ object StreamingSimIngest {
       vacuumKeepGens: Option[Int] = Some(1),
       maxBandFreq: Option[Long] = None
   ): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyProbeIngestBatch(batch, indexPath, outPath, threshold,
-          numBands, batchId, maxSegments, vacuumKeepGens, maxBandFreq)
-        ()
-      }
-      .start()
+    MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
+      applyProbeIngestBatch(batch, indexPath, outPath, threshold,
+        numBands, batchId, maxSegments, vacuumKeepGens, maxBandFreq)
+    }
 
   /** One probe-then-ingest micro-batch (see
     * [[probeAndMaintainStream]]). Package-visible for synchronous
@@ -135,7 +123,6 @@ object StreamingSimIngest {
       // (requireProbeSized's bounded count, the probe/pair write, the
       // append's re-sign) — cache once, release in finally, as the
       // probe-then-ingest media stream does for its signatures
-      // (ADVICE r15)
       val b = batch.persist()
       try {
         // empty micro-batches still (over)write their directory: a
@@ -148,7 +135,8 @@ object StreamingSimIngest {
         if (!b.isEmpty) {
           SimSigIndex.append(s, indexPath, b)
           BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-            ledgerKeepLast)(SimSigIndex.maybeCompact(s, indexPath, _))
+            ledgerKeepLast)(SimSigIndex.maybeCompact(s, indexPath, _),
+            IndexCommit.vacuumSuperseded)
         }
       } finally {
         b.unpersist()
@@ -161,12 +149,7 @@ object StreamingSimIngest {
     * across every micro-batch written so far; an empty typed relation
     * before the first commit ([[StreamingDedup.pairs]]' convention).
     */
-  def pairs(s: org.apache.spark.sql.SparkSession, outPath: String): DataFrame =
-    if (!StreamingDedup.hasBatchDirs(outPath))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "vec_new BIGINT, vec_idx BIGINT, score DOUBLE, batch_id BIGINT"))
-    else s.read.option("basePath", outPath).parquet(outPath)
-      .select(col("vec_new"), col("vec_idx"), col("score"),
-        col("batch_id").cast("long").as("batch_id"))
+  def pairs(s: SparkSession, outPath: String): DataFrame =
+    MicroBatch.output(s, outPath,
+      "vec_new BIGINT, vec_idx BIGINT, score DOUBLE, batch_id BIGINT")
 }

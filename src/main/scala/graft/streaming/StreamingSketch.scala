@@ -38,14 +38,9 @@ object StreamingSketch {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyHllBatch(batch, outPath, batchId); ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyHllBatch(batch, outPath, batchId)
+    }
 
   /** One micro-batch: (over)write its register directory. Empty
     * batches still overwrite — a replayed batch that previously wrote
@@ -95,20 +90,16 @@ object StreamingSketch {
       width: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCmsBatch(batch, outPath, depth, width, batchId); ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyCmsBatch(batch, outPath, depth, width, batchId)
+    }
 
   /** The stream's frozen meta ints, or None if nothing durable yet.
     * Text sidecar going forward (no Spark job per micro-batch; write
-    * is stage-then-rename, so a torn write reads as absent); pre-r13
-    * streams froze it as a one-row parquet DIR, read via `legacyCols`
-    * — a zero-row dir (that format's torn write) also reads as None.
+    * is stage-then-rename, so a torn write reads as absent); streams
+    * started before the text sidecar froze it as a one-row parquet
+    * DIR, read via `legacyCols` — a zero-row dir (that format's torn
+    * write) also reads as None.
     */
   private def readMetaVals(
       s: SparkSession, outPath: String,
@@ -182,14 +173,9 @@ object StreamingSketch {
       k: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyKmvBatch(batch, outPath, k, batchId); ()
-      }
-      .start()
+    MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
+      applyKmvBatch(batch, outPath, k, batchId)
+    }
 
   private[graft] def kmvK(s: SparkSession, outPath: String): Int =
     readMetaVals(s, outPath, Seq("k")).getOrElse(

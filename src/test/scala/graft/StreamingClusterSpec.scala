@@ -99,7 +99,7 @@ class StreamingClusterSpec extends SparkSpec {
     StreamingCluster.applyBatch(df(Nil), idx, 0.45, 2L)
     assert(IndexCommit.committedIds(spark, idx) == afterTorn,
       "an empty batch must not publish a contentless version")
-    assert(StreamingCluster.ledgerHas(spark, idx, 2L),
+    assert(graft.streaming.BatchLedger.has(spark, idx, 2L),
       "an empty batch still ledgers its id")
   }
 

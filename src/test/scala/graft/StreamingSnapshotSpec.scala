@@ -100,7 +100,7 @@ class StreamingSnapshotSpec extends SparkSpec {
     StreamingSnapshot.applyBatch(df(Nil), root, 8,
       CorpusSnapshot.DefaultMaxBytes, 2L)
     assert(IndexCommit.committedIds(spark, root).size == 3)
-    assert(StreamingCluster.ledgerHas(spark, root, 2L))
+    assert(graft.streaming.BatchLedger.has(spark, root, 2L))
     // the streamed chain compacts like any other
     val cid = CorpusSnapshot.compact(spark, root)
     assert(m(CorpusSnapshot.read(spark, root, Some(cid))) == want)
