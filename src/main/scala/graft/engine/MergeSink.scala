@@ -3,6 +3,7 @@ package graft.engine
 import java.sql.{Connection, PreparedStatement, Statement}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
@@ -41,8 +42,7 @@ final case class MergeSpec(
   * itself is the lazily-planned [[Importer.updated]] relation and a
   * MergeSink is the terminal operator that materializes the effect —
   * either by rewriting the table in the lake ([[ParquetMergeSink]]) or
-  * by pushing the UPDATE to the origin database ([[JdbcMergeSink]] /
-  * [[JdbcParallelMergeSink]]).
+  * by pushing the UPDATE to the origin database ([[JdbcMergeSink]]).
   *
   * Contract: `write` returns the affected count (A4, `cur.rowcount`
   * analogue: updated plus inserted rows) and settles the result's
@@ -66,12 +66,14 @@ trait MergeSink {
 final class ParquetMergeSink(
     path: String, chunkSize: Int = Staging.ChunkSize
 ) extends MergeSink {
+  require(chunkSize > 0, "chunkSize must be positive")
+
   override def write(
       merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
     ParquetMergeSink.requireNotReadFrom(merge.updated, path)
     merge.writeObserved(Staging.writeBatched(_, path, chunkSize))
     // affected = both legs: for an upsert result `updated` already IS
-    // the upserted relation, so the count mirrors the JDBC sinks'
+    // the upserted relation, so the count mirrors the JDBC sink's
     // update+insert total
     merge.rowCountUpdated + merge.rowCountInserted
   }
@@ -128,9 +130,7 @@ object ParquetMergeSink {
   * driver, so collecting them copies a bounded relation and runs no
   * Spark job. Any other delta streams via `toLocalIterator`
   * (partition-at-a-time, never a full collect). Both give the rows in
-  * the same order. When the delta is large, [[JdbcParallelMergeSink]]
-  * is the scale form: per-partition parallel inserts into a
-  * globally-visible staging table, then the same UPDATE.
+  * the same order.
   *
   * Transactions are explicit: autocommit is disabled for the
   * lifecycle (JDBC connections default to `autoCommit=true`, where
@@ -148,6 +148,7 @@ final class JdbcMergeSink(
     chunkSize: Int = Staging.ChunkSize
 ) extends MergeSink {
   SqlGen.requireDialect(dialect)
+  require(chunkSize > 0, "chunkSize must be positive")
 
   /** The reference's staging-table name (`importer.py:16,90`). */
   private val temp: String =
@@ -167,11 +168,9 @@ final class JdbcMergeSink(
           st.execute(SqlGen.dropTempTable(dialect, temp))
           st.execute(SqlGen.createTempTable(
             dialect, JdbcMergeSink.qualified(dialect, spec), temp, cols))
-          JdbcMergeSink.insertBatches(
-            n => conn.prepareStatement(SqlGen.insertInto(dialect, temp, cols, n)),
-            Importer.localRows(projected).fold(projected.toLocalIterator())(
-              rows => new JdbcMergeSink.RowIt(rows.iterator)),
-            sqlTypes, chunkSize, () => conn.commit())
+          JdbcMergeSink.insertBatches(conn, SqlGen.insertInto(dialect, temp, cols, _),
+            Importer.localRows(projected).fold(projected.toLocalIterator())(_.iterator.asJava),
+            sqlTypes, chunkSize)
           val stagingRef = if (dialect == "mssql") temp else s"temp.$temp"
           val (updated, inserted) =
             JdbcMergeSink.applyLegs(st, dialect, spec, stagingRef)
@@ -183,105 +182,6 @@ final class JdbcMergeSink(
       }
     } finally conn.close()
   }
-}
-
-/** S9 scale form — the parallel variant documented against
-  * [[JdbcMergeSink]]: the delta never touches the driver. Each Spark
-  * partition opens its own connection and bulk-inserts its rows into a
-  * GLOBALLY-VISIBLE staging table (the `df.write.jdbc` shape: one
-  * writer per partition, chunked batches, per-chunk commit), then one
-  * set-based UPDATE joins staging into the target and staging is
-  * dropped. Insert throughput scales with the partition count, bounded
-  * only by what the target database admits.
-  *
-  * `connect` must be serializable (it is shipped to executors) and
-  * must produce a new connection per call — the usual
-  * DriverManager-from-URL factory satisfies both.
-  */
-final class JdbcParallelMergeSink(
-    dialect: String,
-    connect: () => Connection,
-    chunkSize: Int = Staging.ChunkSize,
-    staging: String = "dbimport_stage"
-) extends MergeSink {
-  SqlGen.requireDialect(dialect)
-
-  override def write(
-      merge: MergeResult, delta: DataFrame, spec: MergeSpec): Long = {
-    val cols = spec.joinOn ++ spec.subset
-    val projected = JdbcMergeSink.staged(delta, spec)
-    val sqlTypes = JdbcMergeSink.sqlTypesFor(projected.schema) :+
-      java.sql.Types.INTEGER
-    // locals so the foreachPartition closure captures values, not
-    // `this` (the sink itself is not serializable, and need not be)
-    val (dia, stage, cs, cf) = (dialect, staging, chunkSize, connect)
-    val stagedCols = cols :+ JdbcParallelMergeSink.PartCol
-    val deleteSql = SqlGen.deleteByPart(
-      dia, stage, JdbcParallelMergeSink.PartCol)
-
-    val driverConn = connect()
-    try {
-      JdbcMergeSink.inTransaction(driverConn) {
-        val st = driverConn.createStatement()
-        try {
-          st.execute(SqlGen.dropStagingTable(dia, stage))
-          st.execute(SqlGen.createStagingTable(
-            dia, JdbcMergeSink.qualified(dia, spec), stage, cols))
-          st.execute(SqlGen.addPartColumn(
-            dia, stage, JdbcParallelMergeSink.PartCol))
-          driverConn.commit()
-
-          // Idempotence under task retry / speculation: each writer
-          // stamps its rows with its own task's partition id and runs
-          // delete-own-slice → insert → ONE commit, atomically. A
-          // failed attempt leaves nothing (rolled back); a committed
-          // attempt that re-runs (speculation, stage retry) first
-          // reclaims its own committed rows, so the final staging
-          // content is exactly one copy per partition regardless of
-          // how many attempts ran or in what order they committed.
-          // The id is bound in the writer, not computed in the plan:
-          // over a local delta the optimizer folds a projection into
-          // the local rows on the driver, where every row would read
-          // partition 0 and writer 0's delete would erase the others'.
-          projected.foreachPartition { (rows: Iterator[Row]) =>
-            if (rows.hasNext) {
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              val c = cf()
-              try {
-                JdbcMergeSink.inTransaction(c) {
-                  val del = c.prepareStatement(deleteSql)
-                  try { del.setInt(1, pid); del.executeUpdate(): Unit }
-                  finally del.close()
-                  // per-chunk executeBatch flushes bound memory; the
-                  // commit callback is a no-op so the whole partition
-                  // stays one transaction
-                  JdbcMergeSink.insertBatches(
-                    n => c.prepareStatement(
-                      SqlGen.insertInto(dia, stage, stagedCols, n)),
-                    new JdbcMergeSink.RowIt(
-                      rows.map(r => Row.fromSeq(r.toSeq :+ pid))),
-                    sqlTypes, cs, () => ()): Unit
-                  c.commit()
-                }
-              } finally c.close()
-            }
-          }
-
-          val (updated, inserted) = JdbcMergeSink.applyLegs(st, dia, spec, stage)
-          driverConn.commit()
-          merge.settle(updated, inserted)
-          st.execute(SqlGen.dropStagingTable(dia, stage))
-          driverConn.commit()
-          updated + inserted
-        } finally st.close()
-      }
-    } finally driverConn.close()
-  }
-}
-
-object JdbcParallelMergeSink {
-  /** Writer-ownership column stamped into staging by each partition. */
-  val PartCol: String = "_graft_part"
 }
 
 object JdbcMergeSink {
@@ -394,16 +294,6 @@ object JdbcMergeSink {
       case _                                => java.sql.Types.NULL
     })
 
-  /** Scala→Java iterator bridge that is itself serializable-free (used
-    * inside executor closures where scala-jdk converters would drag in
-    * wrappers).
-    */
-  private[engine] final class RowIt(it: Iterator[Row])
-      extends java.util.Iterator[Row] {
-    override def hasNext: Boolean = it.hasNext
-    override def next(): Row = it.next()
-  }
-
   /** Most parameters one staging statement binds: SQLite's default
     * `SQLITE_MAX_VARIABLE_NUMBER` before 3.32. It also fits SQL Server
     * (2,100 parameters and 1,000 row constructors per statement), so
@@ -424,9 +314,9 @@ object JdbcMergeSink {
     * multi-row groups: each chunk of `chunkSize` rows is cut into
     * groups of [[groupRows]] rows, each group bound positionally (row
     * j's column i is parameter `j * width + i + 1`, rows in input
-    * order) into one `prepare(groupRows)` statement and added to its
+    * order) into one `sql(groupRows)` statement and added to its
     * batch. A chunk whose rows run out mid-group stages its last
-    * group through `prepare(n)` for that group's size n; then each
+    * group through `sql(n)` for that group's size n; then each
     * statement holding rows of the chunk runs `executeBatch` (the
     * full-group statement first, so row order holds) and the chunk
     * commits. At most three statements are prepared per call (the
@@ -434,20 +324,18 @@ object JdbcMergeSink {
     * once, and all are closed on return. Null-safe: Spark nulls bind
     * as TYPED JDBC nulls (`setNull` with the schema-derived type code —
     * the reference's `where(pd.notnull(chunk), None)`, made
-    * driver-portable). Package-visible so the batch boundaries are
-    * pinned offline by MergeSinkSpec.
+    * driver-portable).
     */
-  private[graft] def insertBatches(
-      prepare: Int => PreparedStatement, rows: java.util.Iterator[Row],
-      sqlTypes: Array[Int], chunkSize: Int, commit: () => Unit): Long = {
-    require(chunkSize > 0, "chunkSize must be positive")
+  private def insertBatches(
+      conn: Connection, sql: Int => String, rows: java.util.Iterator[Row],
+      sqlTypes: Array[Int], chunkSize: Int): Unit = {
     val width = sqlTypes.length
     val g = groupRows(width, chunkSize)
     val stmts = mutable.LinkedHashMap.empty[Int, PreparedStatement]
     val group = new Array[Row](g)
     // binds the first n buffered rows into the n-row statement's batch
     def add(n: Int): PreparedStatement = {
-      val ps = stmts.getOrElseUpdate(n, prepare(n))
+      val ps = stmts.getOrElseUpdate(n, conn.prepareStatement(sql(n)))
       var j = 0
       while (j < n) {
         val r = group(j)
@@ -463,7 +351,6 @@ object JdbcMergeSink {
       ps.addBatch()
       ps
     }
-    var total = 0L
     try {
       while (rows.hasNext) {
         var inChunk = 0
@@ -477,10 +364,8 @@ object JdbcMergeSink {
         }
         if (full != null) full.executeBatch()
         if (n > 0) add(n).executeBatch()
-        commit()
-        total += inChunk
+        conn.commit()
       }
-      total
     } finally stmts.valuesIterator.foreach(_.close())
   }
 }

@@ -1,16 +1,15 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.functions.col
 
 /** Staging layer (S7/S8) — the Spark re-expression of the reference's
   * temp-table lifecycle (`/root/reference/dbimport/importer.py:263-291`):
   * drop-if-exists, `LIMIT 0` schema clone, chunked bulk insert.
   *
-  * In Spark the staging area is a temp view (zero-copy, lineage-backed)
-  * rather than a server-side temp table; the chunked `executemany` with
-  * per-chunk commit becomes partition-granular parallel writes, where
-  * the partition count plays the chunk role.
+  * The JDBC form keeps the reference's server-side temp table and its
+  * chunked `executemany` with per-chunk commit ([[JdbcMergeSink]]);
+  * the lake form bounds the rows per written file ([[writeBatched]]).
   */
 object Staging {
 
@@ -24,39 +23,6 @@ object Staging {
     val base = if (cols.isEmpty) df else df.select(cols.map(col): _*)
     base.limit(0)
   }
-
-  /** S7 — create/replace the staging relation as a temp view, the
-    * idempotent analogue of drop-temp + create-temp
-    * (`importer.py:263-291`).
-    */
-  def stage(df: DataFrame, name: String): Unit =
-    df.createOrReplaceTempView(name)
-
-  /** Drop the staging view if it exists (`_drop_temp_table`,
-    * `importer.py:263-266`).
-    */
-  def unstage(df: DataFrame, name: String): Unit =
-    df.sparkSession.catalog.dropTempView(name): Unit
-
-  /** F6 — chunk partitioner (`importer.py:254`:
-    * `np.arange(len(data)) // 5000`). Spark has no global row order, so
-    * the contract becomes "groups of at most `chunkSize` rows": ids are
-    * assigned per partition from `spark_partition_id`, keeping the
-    * computation fully distributed (no global sort, no collect).
-    */
-  def withChunkId(df: DataFrame, chunkSize: Int = ChunkSize): DataFrame =
-    df.withColumn("chunk_id",
-      chunkIdFor(monotonically_increasing_id(), chunkSize))
-
-  /** Chunk id from a monotonically_increasing_id value: the partition
-    * id keeps its bit-33 position (the local chunk number is at most
-    * the 33-bit local offset, so re-packing at any lower bit could
-    * collide across partitions for small chunk sizes — pinned by
-    * StagingSpec's boundary case).
-    */
-  private[graft] def chunkIdFor(mid: Column, chunkSize: Int): Column =
-    shiftleft(shiftright(mid, 33), 33) +
-      floor((mid.bitwiseAND((1L << 33) - 1)) / chunkSize)
 
   /** S8 — batched sink: write with a bounded number of rows per task,
     * the analogue of chunked `executemany` + per-chunk commit
@@ -197,56 +163,6 @@ object SqlGen {
       case "sqlite" =>
         s"drop table if exists temp.$temp"
     }
-  }
-
-  /** S7 scale variant — globally-visible staging DDL for the parallel
-    * sink: unlike [[createTempTable]], the table must be reachable
-    * from every writer connection, so it is a regular table (mssql `#`
-    * temp tables and sqlite `temp.` tables are session-scoped).
-    */
-  def createStagingTable(
-      dialect: String, table: String, staging: String, cols: Seq[String]
-  ): String = {
-    requireDialect(dialect)
-    dialect match {
-      case "mssql" =>
-        s"select top 0 ${cols.map(q).mkString(", ")} into $staging from $table"
-      case "sqlite" =>
-        s"create table $staging as select ${cols.mkString(", ")} from $table limit 0"
-    }
-  }
-
-  /** Idempotent teardown of the globally-visible staging table. */
-  def dropStagingTable(dialect: String, staging: String): String = {
-    requireDialect(dialect)
-    dialect match {
-      case "mssql" =>
-        s"if object_id('$staging') is not null drop table $staging"
-      case "sqlite" =>
-        s"drop table if exists $staging"
-    }
-  }
-
-  /** Writer-ownership column for the parallel sink: each partition
-    * stamps its rows so a retried/speculative task can reclaim (delete
-    * and rewrite) exactly its own slice of staging.
-    */
-  def addPartColumn(dialect: String, staging: String, colName: String): String = {
-    requireDialect(dialect)
-    dialect match {
-      case "mssql"  => s"alter table $staging add ${q(colName)} int not null"
-      case "sqlite" => s"alter table $staging add column $colName integer"
-    }
-  }
-
-  /** Parameterized reclaim of one partition's staged rows. */
-  def deleteByPart(dialect: String, staging: String, colName: String): String = {
-    requireDialect(dialect)
-    val c = dialect match {
-      case "mssql"  => q(colName)
-      case "sqlite" => colName
-    }
-    s"delete from $staging where $c = ?"
   }
 
   /** S8 — staged bulk-insert statement (`importer.py:270,284-288`) for

@@ -20,12 +20,16 @@ import graft.engine.{Importer, MergeSpec, ParquetMergeSink}
   *
   * Write protocol: the merged snapshot is materialized into a staging
   * directory FIRST (the merge plan reads the live target — an in-place
-  * overwrite would delete its own input mid-scan), then swapped in via
-  * delete + rename. A crash between delete and rename leaves a
-  * complete staging snapshot; the next batch (or restart) finds the
-  * target missing and completes the swap before merging — combined
-  * with merge idempotency (re-applying a delta is a fixpoint) this
-  * makes the sink safe under foreachBatch's at-least-once replay.
+  * overwrite would delete its own input mid-scan), then swapped in by
+  * two renames: the target aside to `<target>.old`, the stage into the
+  * target; only then is the old copy deleted. A recursive delete
+  * removes files one at a time, so it never touches the live target.
+  * A crash between the renames leaves the target missing beside a
+  * complete staging snapshot; a crash during the delete leaves a
+  * partial `.old` beside the new target. The next batch (or restart)
+  * completes either before merging — combined with merge idempotency
+  * (re-applying a delta is a fixpoint) this makes the sink safe under
+  * foreachBatch's at-least-once replay. A rename that fails throws.
   *
   * Scale: each micro-batch costs one broadcast-hash merge join (the
   * delta is the small side by construction) plus one target rewrite —
@@ -38,6 +42,9 @@ object StreamingMerge {
 
   /** Suffix of the staging directory the snapshot is built in. */
   private[graft] val StagingSuffix = ".staging"
+
+  /** Suffix the superseded target is renamed to during a swap. */
+  private[graft] val OldSuffix = ".old"
 
   def mergeStream(
       delta: DataFrame,
@@ -66,9 +73,15 @@ object StreamingMerge {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(targetPath)
     val stage = new Path(targetPath + StagingSuffix)
+    val old = new Path(targetPath + OldSuffix)
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"StreamingMerge: could not rename '$from' to '$to'")
     // crash recovery: a missing target beside a complete staging
-    // snapshot is an interrupted swap — finish it before merging
-    if (!fs.exists(dst) && fs.exists(stage)) fs.rename(stage, dst)
+    // snapshot is a swap stopped between its renames — finish it; a
+    // leftover old copy is one whose delete did not finish
+    if (!fs.exists(dst) && fs.exists(stage)) rename(stage, dst)
+    if (fs.exists(dst)) fs.delete(old, true)
     if (batch.isEmpty) 0L
     else {
       // the empty relation Spark hands a fresh foreachBatch sink is
@@ -80,8 +93,9 @@ object StreamingMerge {
       // target is still intact on disk: nothing reads it after the swap
       val affected = new ParquetMergeSink(targetPath + StagingSuffix).write(
         result, batch, MergeSpec("target", joinOn, subset))
-      fs.delete(dst, true)
-      fs.rename(stage, dst)
+      rename(dst, old)
+      rename(stage, dst)
+      fs.delete(old, true)
       affected
     }
   }

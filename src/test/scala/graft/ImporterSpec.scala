@@ -157,6 +157,53 @@ class ImporterSpec extends SparkSpec {
       "couldn't find supplied column to join on: 'index'")
   }
 
+  /** The `join_on` setter (`importer.py:111-116`): a rebind re-slices
+    * the data and re-derives the default subset without the new keys.
+    */
+  test("withJoinOn: rebind re-slices data and re-derives the default subset") {
+    val delta = df(Seq(
+      Row("ID000001", "Apple", 15, 20.0),
+      Row("ID000002", null, 14, 19.0),
+      Row("ID000003", "Orange", 13, 18.0)
+    ))
+    val imp = new Importer(groceries, delta, tablePk = Seq("id"))
+    val byItem = imp.withJoinOn(Seq("item"))
+    assert(byItem.joinOn == Seq("item"))
+    assert(byItem.subset == Seq("id", "quantity", "price"))
+    assert(byItem.data.columns.toSeq == Seq("item", "id", "quantity", "price"))
+    // P3 on the new key: the null-item row leaves the slice
+    assert(rowsOf(byItem.data) == Set(
+      Row("Apple", "ID000001", 15, 20.0), Row("Orange", "ID000003", 13, 18.0)))
+    // the original binding is untouched
+    assert(imp.joinOn == Seq("id") && imp.subset == Seq("item", "quantity", "price"))
+    assert(imp.data.count() == 3L)
+    // and the merge matches on the new key
+    val res = byItem.merge()
+    assert(rowsOf(res.updated) == Set(
+      Row("ID000001", "Apple", 15, 20.0), Row("ID000002", "Pear", 4, 9.0),
+      Row("ID000003", "Orange", 13, 18.0), Row("ID000004", "Lemon", 6, 7.0)))
+    assert(res.rowCountUpdated == 2L)
+  }
+
+  test("withJoinOn: V10 re-runs on the new keys; V4 rejects an unknown column") {
+    // unique on id, duplicated on item
+    val delta = df(Seq(
+      Row("ID000001", "Apple", 15, 20.0),
+      Row("ID000002", "Apple", 14, 19.0)
+    ))
+    val imp = new Importer(groceries, delta, tablePk = Seq("id"))
+    val e = intercept[ImporterException](imp.withJoinOn(Seq("item")))
+    assert(e.getMessage ==
+      "data contains duplicate values in join on column: 'item'")
+    // unique again on the composite key
+    assert(imp.withJoinOn(Seq("item", "quantity")).joinOn == Seq("item", "quantity"))
+
+    val e2 = intercept[IllegalArgumentException](imp.withJoinOn(Seq("index")))
+    assert(e2.getMessage == "couldn't find supplied column to join on: 'index'")
+    val e3 = intercept[IllegalArgumentException](imp.withJoinOn(Seq("size", "index")))
+    assert(e3.getMessage == "couldn't find supplied columns to join on: 'index', 'size'")
+  }
+
   /** `test_subset_invalid_column` (`test_importer.py:250-265`). */
   test("V6: subset column missing from data rejected") {
     val delta = df(Seq(Row("ID000001", "Apple", 15, 20.0)))

@@ -8,16 +8,15 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.hashing.MurmurHash3
 
-import graft.engine.{Importer, JdbcMergeSink, JdbcParallelMergeSink, MergeSpec}
+import graft.engine.{Importer, JdbcMergeSink, MergeSpec}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
-/** Pins the JDBC sinks' multi-row staging against a real embedded
+/** Pins the JDBC sink's multi-row staging against a real embedded
   * database (DuckDB, which accepts the sqlite dialect verbatim): the
   * group size under the 999-parameter cap, what lands in the staging
   * table when groups meet chunk ends, the batch/commit protocol, the
-  * settled counts, and the parallel sink's writer ownership of its
-  * staged rows.
+  * settled counts, and a local delta's staging without Spark jobs.
   */
 class JdbcStagingSpec extends SparkSpec {
 
@@ -196,111 +195,11 @@ class JdbcStagingSpec extends SparkSpec {
       assert(pqTable == table && pqDigest == digest, clue)
     }
   }
-
-  test("JdbcParallelMergeSink: 1,001 rows at chunkSize 500 round-trip through multi-row groups (DuckDB)") {
-    duckdb()
-    val url = freshDb("jdbc_groups_par")
-    val delta = frame(deltaRows).repartition(2)
-    val target = frame(targetRows)
-    val sink = new JdbcParallelMergeSink("sqlite",
-      () => RecordingDb.connect(url), chunkSize = 500)
-    // the writers stage the partition id as a fourth column
-    val g = JdbcMergeSink.groupRows(4, 500)
-    assert(g == 249)
-    for ((update, insert) <- modes) {
-      resetGroupTable(url)
-      RecordingDb.reset(
-        s"select id, a, b, ${JdbcParallelMergeSink.PartCol} from dbimport_stage")
-      val imp = new Importer(target, delta, table = "t", tablePk = Seq("id"))
-      val r = imp.run(update, insert)
-      val affected = sink.write(r, imp.data,
-        MergeSpec("t", imp.joinOn, imp.subset,
-          insertUnmatched = insert, updateMatched = update))
-      val clue = s"run(update=$update, insert=$insert)"
-      val want = (if (update) 500L else 0L, if (insert) 501L else 0L)
-      assert((r.rowCountUpdated, r.rowCountInserted) == want, clue)
-      assert(affected == want._1 + want._2, clue)
-      assert(staged(RecordingDb.snapshot) == staged(deltaRows.map(asSeq)), clue)
-
-      val writers = RecordingDb.connIds.filter(_ != 1)
-      assert(writers.size == 2, clue)
-      val perWriter = writers.map { c =>
-        val rows = RecordingDb.boundRows(c, 4)
-        val n = rows.size
-        // ⌈n/500⌉ chunks, each flushed by its own executeBatch calls; the
-        // writer's delete, inserts and staging are one transaction
-        val chunks = Seq.fill(n / 500)(500) ++ (if (n % 500 > 0) Seq(n % 500) else Nil)
-        assert(RecordingDb.events(c).filter(e => e.startsWith("addBatch") ||
-          e.startsWith("executeBatch") || e == "commit") ==
-          chunks.flatMap(chunkEvents(_, g)) :+ "commit", s"$clue writer $c")
-        // the staged rows carry the writer's own partition id
-        val pid = RecordingDb.pids(c)
-        assert(pid.size == 1 && rows.forall(_(3) == pid.head), s"$clue writer $c")
-        n
-      }
-      // one writer's rows overrun a chunk, so groups meet a chunk end
-      assert(perWriter.sum == 1001 && perWriter.max > 500, s"$clue $perWriter")
-      // driver: DDL commit, the legs' commit, the drop's commit
-      assert(RecordingDb.events(1).count(_ == "commit") == 3, clue)
-      assert(query(url, "select id, a, b from t order by id") ==
-        expectedTable(update, insert), clue)
-    }
-  }
-
-  test("JdbcParallelMergeSink stages every row under its writer's partition id: local delta (DuckDB)") {
-    duckdb()
-    val url = freshDb("jdbc_local_delta")
-    exec(url, "create table t (id bigint primary key, v double)",
-      "insert into t select range, range * 1.0 from range(12)")
-    import spark.implicits._
-    // a local relation, as a spreadsheet source yields: spread over the
-    // session's 4 cores, with matched keys in every partition
-    val delta = Seq((1L, 10.5), (2L, 20.5), (4L, 40.5), (5L, 50.5),
-      (7L, 70.5), (8L, 80.5), (10L, 100.5), (11L, 110.5),
-      (20L, 1.5), (21L, 2.5)).toDF("id", "v")
-    assert(delta.rdd.getNumPartitions >= 2)
-    val matched = 8L
-    val target = (0L until 12L).map(k => (k, k * 1.0)).toDF("id", "v")
-    RecordingDb.reset(
-      s"select id, v, ${JdbcParallelMergeSink.PartCol} from dbimport_stage")
-    val imp = new Importer(target, delta, table = "t", tablePk = Seq("id"))
-    val r = imp.run()
-    val affected = new JdbcParallelMergeSink("sqlite",
-      () => RecordingDb.connect(url), chunkSize = 3)
-      .write(r, imp.data, MergeSpec("t", imp.joinOn, imp.subset))
-
-    val writers = RecordingDb.connIds.filter(_ != 1)
-    assert(writers.size >= 2, s"writers=$writers")
-    val byWriter = writers.map { c =>
-      val pid = RecordingDb.pids(c)
-      assert(pid.size == 1, s"writer $c reclaims one slice: $pid")
-      val rows = RecordingDb.boundRows(c, 3)
-      assert(rows.nonEmpty && rows.forall(_(2) == pid.head),
-        s"writer $c (partition ${pid.head}) staged ${rows.map(_(2))}")
-      pid.head -> rows.map(_.take(2))
-    }
-    assert(byWriter.map(_._1).distinct.size == writers.size)
-    // staging held every delta row, each under the id of the writer
-    // that bound it
-    val stagedRows = RecordingDb.snapshot
-    assert(stagedRows.groupBy(_(2)).map { case (p, rs) =>
-      p -> rs.map(_.take(2)).toSet } == byWriter.map { case (p, rs) =>
-      p -> rs.toSet }.toMap)
-    assert(stagedRows.map(_.take(2)).toSet ==
-      delta.collect().map(x => Seq[Any](x.getLong(0), x.getDouble(1))).toSet)
-    assert(affected == matched && r.rowCountUpdated == matched)
-    assert(query(url, "select id, v from t order by id") ==
-      (0L until 12L).map { k =>
-        val d = delta.collect().find(_.getLong(0) == k)
-        Seq[Any](k, d.map(_.getDouble(1)).getOrElse(k * 1.0))
-      })
-  }
 }
 
-/** Recording proxy over a real JDBC connection, JVM-shared so executor
-  * closures (local mode) record into it: every staging bind, batch and
-  * commit lands in `log` tagged with its connection id (1 is the first
-  * connection opened after [[reset]], the sink's driver connection),
+/** Recording proxy over a real JDBC connection: every staging bind,
+  * batch and commit lands in `log` tagged with its connection id (1 is
+  * the first connection opened after [[reset]], the sink's connection),
   * each insert statement's events with its row-group size. Before the
   * driver connection's first `executeUpdate(sql)` (the first merge leg)
   * it copies the staging table's rows, read through the same session,
@@ -321,15 +220,10 @@ object RecordingDb {
   private def evs(conn: Int): Seq[Ev] =
     log.synchronized(log.asScala.toList).filter(_.conn == conn)
 
-  def connIds: Seq[Int] = log.synchronized(log.asScala.toList).map(_.conn).distinct
-
   /** Connection `conn`'s protocol events, in order. */
   def events(conn: Int): Seq[String] = evs(conn).collect {
-    case Ev(_, k, _, _) if k != "bind" && k != "pid" => k
+    case Ev(_, k, _, _) if k != "bind" => k
   }
-
-  /** The values connection `conn` bound to its writer-slice delete. */
-  def pids(conn: Int): Seq[Any] = evs(conn).collect { case Ev(_, "pid", _, v) => v }
 
   /** The rows connection `conn` bound into staging statements, in bind
     * order, each rebuilt from its group's positional parameters.
@@ -393,7 +287,6 @@ object RecordingDb {
           if (groupRows > 0) add(Ev(id, s"prepare:$groupRows"))
           proxy(classOf[PreparedStatement]) { (pm, pargs) =>
             (pm.getName, groupRows) match {
-              case ("setInt", 0) => add(Ev(id, "pid", value = pargs(1)))
               case ("setObject", g) if g > 0 =>
                 add(Ev(id, "bind", pargs(0).asInstanceOf[Integer], pargs(1)))
               case ("setNull", g) if g > 0 =>

@@ -5,8 +5,8 @@ import java.sql.{Connection, PreparedStatement, Statement}
 
 import scala.collection.mutable
 
-import graft.engine.{Importer, ImporterException, JdbcMergeSink, JdbcParallelMergeSink,
-  MergeResult, MergeSpec, ParquetMergeSink, SqlGen}
+import graft.engine.{Importer, ImporterException, JdbcMergeSink, MergeResult, MergeSpec,
+  ParquetMergeSink, SqlGen}
 import org.apache.spark.sql.functions._
 
 /** Pins the S9 write-back sinks. There is no live database offline, so
@@ -328,120 +328,28 @@ class MergeSinkSpec extends SparkSpec {
     assert(!rec.log.exists(_.endsWith("=null")), rec.log.toString)
   }
 
-  test("JdbcParallelMergeSink: per-partition batches into global staging, one UPDATE") {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    ParallelFakeDb.reset()
-    val delta = Seq((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0), (5L, 50.0))
-      .toDF("o_orderkey", "o_totalprice").repartition(2)
-    val sink = new JdbcParallelMergeSink(
-      "mssql", () => ParallelFakeDb.connect(), chunkSize = 2)
-    val affected = sink.write(MergeResult(delta, 0L), delta,
-      MergeSpec("orders", Seq("o_orderkey"), Seq("o_totalprice")))
-    assert(affected == 4L) // the fake's rowcount
-    val log = ParallelFakeDb.log.asScala.toList
-    val connIds = log.map(_.takeWhile(_ != ':')).distinct
-
-    // the driver connection (first opened) runs DDL + UPDATE; each
-    // non-empty partition opened its own writer connection
-    val writers = connIds.filter(_ != "c1")
-    assert(writers.size == 2, s"writers=$writers log=$log")
-
-    // global (non-#) staging DDL on the driver conn (clone + ownership
-    // column), before any insert
-    val create = SqlGen.createStagingTable("mssql", "[dbo].[orders]",
-      "dbimport_stage", Seq("o_orderkey", "o_totalprice"))
-    val alter = SqlGen.addPartColumn(
-      "mssql", "dbimport_stage", JdbcParallelMergeSink.PartCol)
-    assert(log.indexOf(s"c1:execute:$create") >= 0)
-    assert(log.indexOf(s"c1:execute:$alter") >
-      log.indexOf(s"c1:execute:$create"))
-    assert(log.indexOf(s"c1:execute:$create") <
-      log.indexWhere(_.endsWith(":addBatch")))
-
-    // every writer disables autocommit, reclaims its own staging slice
-    // (idempotence under retry/speculation), stages two-row groups
-    // (the chunk caps the group) and a last one-row group, respects
-    // the chunk boundary (never >chunkSize rows bound per executeBatch),
-    // and commits ONCE — the whole partition is a single transaction
-    val cols = Seq("o_orderkey", "o_totalprice", JdbcParallelMergeSink.PartCol)
-    val insert2 = "insert into dbimport_stage " +
-      "([o_orderkey], [o_totalprice], [_graft_part]) values (?, ?, ?), (?, ?, ?)"
-    val insert1 = SqlGen.insertInto("mssql", "dbimport_stage", cols, 1)
-    assert(SqlGen.insertInto("mssql", "dbimport_stage", cols, 2) == insert2)
-    val delete = SqlGen.deleteByPart(
-      "mssql", "dbimport_stage", JdbcParallelMergeSink.PartCol)
-    val staged = writers.map { c =>
-      assert(log.contains(s"$c:setAutoCommit:false"))
-      val prepares = log.filter(_.startsWith(s"$c:prepare:"))
-      assert(prepares.head == s"$c:prepare:$delete", s"$c reclaims before insert")
-      assert(prepares.tail.forall(p =>
-        p == s"$c:prepare:$insert2" || p == s"$c:prepare:$insert1"), prepares)
-      val pid = log.collect { case e if e.startsWith(s"$c:setInt:1=") =>
-        e.stripPrefix(s"$c:setInt:1=") }
-      assert(pid.size == 1, s"$c binds its slice once: $log")
-      // rows per flush from the positional binds: 3 parameters a row,
-      // the partition id last
-      val fill = log.filter(e => e.startsWith(s"$c:set:") ||
-        e.startsWith(s"$c:setNull:") || e == s"$c:executeBatch")
-      var params = 0
-      var rows = 0
-      fill.foreach {
-        case e if e.endsWith(":executeBatch") =>
-          assert(params % 3 == 0 && params / 3 <= 2 && params > 0, fill)
-          rows += params / 3; params = 0
-        case e =>
-          params += 1
-          if (e.startsWith(s"$c:set:") &&
-              e.drop(s"$c:set:".length).takeWhile(_ != '=').toInt % 3 == 0)
-            assert(e.endsWith(s"=${pid.head}"), s"$c stamps its own id: $e")
+  test("chunkSize < 1 is rejected when a sink is built: nothing connects, nothing is written") {
+    val spec = MergeSpec("orders", Seq("o_orderkey"), Seq("o_totalprice"))
+    val root = java.nio.file.Files.createTempDirectory("merge_sink_chunk")
+    for (bad <- Seq(0, -1)) {
+      val rec = new Recorder
+      var connects = 0
+      val e = intercept[IllegalArgumentException] {
+        new JdbcMergeSink("sqlite", () => { connects += 1; rec.conn }, chunkSize = bad)
+          .write(MergeResult(deltaDf, 0L), deltaDf, spec)
       }
-      assert(params == 0 && fill.last == s"$c:executeBatch")
-      // executeBatch still flushes per chunk (bounded batch memory)…
-      val nBatches = fill.count(_.endsWith(":executeBatch"))
-      assert(nBatches == (rows + 1) / 2)
-      // …but exactly one commit makes delete+insert atomic per attempt
-      assert(log.count(_ == s"$c:commit") == 1)
-      rows
+      assert(e.getMessage.contains("chunkSize must be positive"), e.getMessage)
+      assert(connects == 0 && rec.log.isEmpty, s"chunkSize=$bad: ${rec.log}")
+      // Spark reads maxRecordsPerFile <= 0 as "no limit", so an
+      // accepted value would write unbounded files
+      val out = root.resolve(s"orders$bad")
+      val e2 = intercept[IllegalArgumentException] {
+        new ParquetMergeSink(out.toString, bad)
+          .write(MergeResult(deltaDf, 0L), deltaDf, spec)
+      }
+      assert(e2.getMessage.contains("chunkSize must be positive"), e2.getMessage)
+      assert(!java.nio.file.Files.exists(out), s"chunkSize=$bad wrote $out")
     }
-    // all 5 delta rows travel through the writers, none via the driver
-    assert(staged.sum == 5)
-    assert(!log.exists(e => e.startsWith("c1:addBatch") || e.startsWith("c1:set:")))
-
-    // one set-based UPDATE on the driver, staging dropped before+after
-    val update = SqlGen.updateMssql("dbo", "orders", "dbimport_stage",
-      Seq("o_orderkey"), Seq("o_totalprice"))
-    assert(log.count(_ == s"c1:executeUpdate:$update") == 1)
-    val drop = SqlGen.dropStagingTable("mssql", "dbimport_stage")
-    assert(log.count(_ == s"c1:execute:$drop") == 2)
-    // UPDATE happens after every writer finished
-    assert(log.indexOf(s"c1:executeUpdate:$update") >
-      log.lastIndexWhere(_.endsWith(":executeBatch")))
-  }
-
-  test("JdbcParallelMergeSink(sqlite): plain-table staging text") {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    ParallelFakeDb.reset()
-    val delta = Seq((Some(1L), 1.0), (Some(2L), 2.0), (None, 3.0))
-      .toDF("o_orderkey", "o_totalprice")
-    new JdbcParallelMergeSink("sqlite", () => ParallelFakeDb.connect())
-      .write(MergeResult(delta, 0L), delta,
-        MergeSpec("orders", Seq("o_orderkey"), Seq("o_totalprice")))
-    val log = ParallelFakeDb.log.asScala.toList
-    // sqlite staging is a regular table (temp.* is session-scoped and
-    // invisible to the writer connections)
-    assert(log.contains("c1:execute:create table dbimport_stage as " +
-      "select o_orderkey, o_totalprice from orders limit 0"))
-    val update = SqlGen.updateSqlite("orders", "dbimport_stage",
-      Seq("o_orderkey"), Seq("o_totalprice"))
-    assert(log.count(_ == s"c1:executeUpdate:$update") == 1)
-    // the null-keyed delta row is never staged: two rows of three
-    // parameters, both keys bound
-    assert(log.count(_.matches("c\\d+:set:\\d+=.*")) == 6, log)
-    assert(log.filter(_.matches("c\\d+:set:[14]=.*"))
-      .map(_.dropWhile(_ != '=')).sorted == Seq("=1", "=2"), log)
-    assert(!log.exists(_.contains(":setNull:")), log)
   }
 
   test("ParquetMergeSink round-trips the merged relation and the count") {
@@ -512,61 +420,5 @@ class MergeSinkSpec extends SparkSpec {
     val r = new Importer(spark.read.parquet(p), delta, tablePk = Seq("id")).merge()
     assert(new ParquetMergeSink(s"$p-merged").write(r, delta, spec) == 10L)
     assert(spark.read.parquet(s"$p-merged").count() == 1000L)
-  }
-}
-
-/** JVM-shared recording fake for the parallel sink: executor closures
-  * connect through this object (local-mode executors share the JVM, so
-  * the recordings are visible to the spec). Every log entry is tagged
-  * with its connection id — c1 is always the driver (opened before the
-  * foreachPartition action runs).
-  */
-object ParallelFakeDb {
-  val log: java.util.List[String] =
-    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-  private val ids = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def reset(): Unit = { log.clear(); ids.set(0) }
-
-  private def mk[T](cls: Class[T], h: InvocationHandler): T =
-    Proxy.newProxyInstance(getClass.getClassLoader, Array[Class[_]](cls), h)
-      .asInstanceOf[T]
-
-  def connect(): Connection = {
-    val id = ids.incrementAndGet()
-    val handler: InvocationHandler = new InvocationHandler {
-      override def invoke(
-          proxy: AnyRef, m: Method, args: Array[AnyRef]): AnyRef =
-        m.getName match {
-          case "execute" =>
-            log.add(s"c$id:execute:${args(0)}"); java.lang.Boolean.FALSE
-          case "executeUpdate" =>
-            // PreparedStatement.executeUpdate() (the writers' delete)
-            // is no-arg; Statement.executeUpdate(sql) carries the text
-            if (args == null) log.add(s"c$id:executeUpdate")
-            else log.add(s"c$id:executeUpdate:${args(0)}")
-            Integer.valueOf(4)
-          case "prepareStatement" =>
-            log.add(s"c$id:prepare:${args(0)}")
-            mk(classOf[PreparedStatement], this)
-          case "createStatement" => mk(classOf[Statement], this)
-          case "setObject" =>
-            log.add(s"c$id:set:${args(0)}=${args(1)}"); null
-          case "setInt" =>
-            log.add(s"c$id:setInt:${args(0)}=${args(1)}"); null
-          case "setNull" =>
-            log.add(s"c$id:setNull:${args(0)}:${args(1)}"); null
-          case "addBatch" => log.add(s"c$id:addBatch"); null
-          case "executeBatch" =>
-            log.add(s"c$id:executeBatch"); Array.empty[Int]
-          case "commit"        => log.add(s"c$id:commit"); null
-          case "getAutoCommit" => java.lang.Boolean.TRUE
-          case "setAutoCommit" =>
-            log.add(s"c$id:setAutoCommit:${args(0)}"); null
-          case "close" => null
-          case _       => null
-        }
-    }
-    mk(classOf[Connection], handler)
   }
 }

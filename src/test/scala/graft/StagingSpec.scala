@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.{SqlGen, Staging}
-import org.apache.spark.sql.functions.{col, max}
 
 class StagingSpec extends SparkSpec {
 
@@ -12,33 +11,6 @@ class StagingSpec extends SparkSpec {
     assert(clone.isEmpty)
     val sliced = Staging.emptyClone(li, Seq("l_orderkey", "l_quantity"))
     assert(sliced.columns.toSeq == Seq("l_orderkey", "l_quantity"))
-  }
-
-  test("S7: stage/unstage lifecycle is idempotent") {
-    val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
-    Staging.stage(li.limit(5), "stg_test")
-    Staging.stage(li.limit(3), "stg_test") // replace, not fail
-    assert(spark.table("stg_test").count() == 3)
-    Staging.unstage(li, "stg_test")
-    assert(!spark.catalog.tableExists("stg_test"))
-  }
-
-  test("F6: chunk ids bound every chunk at the chunk size") {
-    val li = spark.read.parquet(s"${sf()}/lineitem.parquet")
-    val counts = Staging.withChunkId(li, chunkSize = 1000)
-      .groupBy("chunk_id").count()
-    assert(counts.agg(max(col("count"))).head.getLong(0) <= 1000L)
-  }
-
-  test("F6: chunk ids never collide across partitions (bit-width boundary)") {
-    import spark.implicits._
-    // partition 1 / offset 0 vs partition 0 / offset 2^31, chunkSize 1:
-    // packing the partition id below bit 33 (as an earlier revision did
-    // at bit 31) makes these two collide
-    val mids = Seq(1L << 33, 1L << 31).toDF("mid")
-    val ids = mids.select(Staging.chunkIdFor(col("mid"), 1).as("cid"))
-      .collect().map(_.getLong(0)).toSeq
-    assert(ids.distinct.size == 2, ids.toString)
   }
 
   test("S8 scale path: bucketed tables join without any Exchange") {

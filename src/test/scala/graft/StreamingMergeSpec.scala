@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.streaming.StreamingMerge
@@ -76,6 +79,25 @@ class StreamingMergeSpec extends SparkSpec {
       1L -> ("A", 10L), 2L -> ("b", 20L), 3L -> ("C", 30L)))
   }
 
+  test("a crash partway through the swap's recursive delete loses no row") {
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.faulty.impl", classOf[FaultyLocalFs].getName)
+    val dir = Files.createTempDirectory("smerge-fault").toString
+    val target = s"faulty://$dir/target"
+    // one row per file, so a partial delete drops some rows
+    Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L)).toDF("k", "v", "w")
+      .write.option("maxRecordsPerFile", 1L).parquet(target)
+    FaultyLocalFs.armed.set(true)
+    intercept[java.io.IOException](StreamingMerge.applyBatch(
+      Seq(Delta(1L, "A")).toDF(), target, Seq("k"), Seq("v")))
+    assert(!FaultyLocalFs.armed.get, "the fault never fired")
+    StreamingMerge.applyBatch(
+      Seq(Delta(3L, "C")).toDF(), target, Seq("k"), Seq("v"))
+    assert(state(target) == Map(
+      1L -> ("A", 10L), 2L -> ("b", 20L), 3L -> ("C", 30L)))
+  }
+
   test("mergeStream applies micro-batches of a streaming delta end-to-end") {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -98,4 +120,27 @@ class StreamingMergeSpec extends SparkSpec {
     assert(state(target) == Map(
       1L -> ("A", 10L), 2L -> ("B", 20L), 3L -> ("C", 30L)))
   }
+}
+
+/** Local files under the `faulty:` scheme. While [[FaultyLocalFs.armed]]
+  * is set, the next recursive delete of a directory holding two or more
+  * parquet files removes one of them and then throws, as a crash
+  * partway through a file-by-file delete leaves the directory.
+  */
+class FaultyLocalFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    val parts = Option(pathToFile(p).listFiles()).toSeq.flatten
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    if (recursive && parts.size >= 2 && FaultyLocalFs.armed.getAndSet(false)) {
+      parts.head.delete()
+      throw new java.io.IOException(s"injected fault deleting $p")
+    }
+    super.delete(p, recursive)
+  }
+}
+
+object FaultyLocalFs {
+  val armed = new AtomicBoolean(false)
 }
