@@ -136,8 +136,7 @@ final class Importer private (
     tablePk: Seq[String],
     joinOnOpt: Option[Seq[String]],
     subsetOpt: Option[Seq[String]],
-    dropJoinColsFromSubset: Boolean,
-    eagerValidate: Boolean
+    dropJoinColsFromSubset: Boolean
 ) {
 
   def this(
@@ -147,10 +146,9 @@ final class Importer private (
       schema: Option[String] = None,
       tablePk: Seq[String] = Nil,
       joinOn: Option[Seq[String]] = None,
-      subset: Option[Seq[String]] = None,
-      eagerValidate: Boolean = true
+      subset: Option[Seq[String]] = None
   ) = this(target, dataMaster, table, schema, tablePk, joinOn, subset,
-    dropJoinColsFromSubset = true, eagerValidate)
+    dropJoinColsFromSubset = true)
 
   // V1 — `importer.py:63-64`. `isEmpty` is a LIMIT-1 probe, not a scan.
   if (dataMaster.isEmpty)
@@ -260,14 +258,14 @@ final class Importer private (
           s"column${plural(joinOn.size)}: " + joinOn.map(c => s"'$c'").mkString(", "))
   }
 
-  if (eagerValidate) validateUniqueKeys()
+  validateUniqueKeys()
 
   /** Rebind join keys (the reference's `join_on` setter re-slices,
     * `importer.py:111-116`); immutable here — returns a new Importer.
     */
   def withJoinOn(columns: Seq[String]): Importer =
     new Importer(target, dataMaster, table, schema, tablePk, Some(columns),
-      subsetOpt, dropJoinColsFromSubset, eagerValidate)
+      subsetOpt, dropJoinColsFromSubset)
 
   /** Rebind the update subset (the reference's `subset` setter,
     * `importer.py:118-123`) — unlike the constructor default, an
@@ -275,7 +273,7 @@ final class Importer private (
     */
   def withSubset(columns: Seq[String]): Importer =
     new Importer(target, dataMaster, table, schema, tablePk, joinOnOpt,
-      Some(columns), dropJoinColsFromSubset = false, eagerValidate)
+      Some(columns), dropJoinColsFromSubset = false)
 
   private def delta: DataFrame = broadcast(data)
 

@@ -39,26 +39,6 @@ object Staging {
       .mode(mode)
       .option("maxRecordsPerFile", chunkSize.toLong)
       .parquet(path)
-
-  /** Scale path for repeated merges into the same target: persist both
-    * sides bucketed on the join keys so every subsequent join (merge,
-    * semi-join count, dup detection) is co-located — zero Exchange on
-    * either side at any data size. This is the Spark analogue of the
-    * reference keeping the target table indexed on its PK server-side.
-    */
-  def writeBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      numBuckets: Int = 32,
-      mode: SaveMode = SaveMode.Overwrite
-  ): Unit =
-    df.write
-      .mode(mode)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
 }
 
 /** Dialect-specific SQL codegen for the JDBC pushdown path — the

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     64-bit words, DENSE (every word index present, zeros included)
   *     so the on-disk layout is fixed-size and byte-stable at any
   *     content.
-  *   - `v=<id>/meta`  — one row (n_gram, m_bits, k_hash): the hash
+  *   - `v=<id>/meta`  — text sidecar (n_gram, m_bits, k_hash): the hash
   *     configuration, read back at probe/append time so neither can
   *     ever run with a mismatched gram width, filter size, or hash
   *     count — any of which would silently zero the hit rate.
@@ -52,9 +52,7 @@ object BloomIndex {
     * either way there is nothing safe to probe).
     */
   private def cur(s: SparkSession, path: String): String =
-    IndexCommit.currentDir(s, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed bloom index version at $path"))
+    IndexCommit.requireCurrent(s, path, "bloom index version")
 
   def readMeta(s: SparkSession, path: String): Meta =
     metaIn(s, cur(s, path))
@@ -63,34 +61,25 @@ object BloomIndex {
     * a one-row parquet dir — read those too.
     */
   private def metaIn(s: SparkSession, dir: String): Meta = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory) {
-      val r = s.read.parquet(p.toString).head()
-      Meta(r.getAs[Int]("n_gram"), r.getAs[Int]("m_bits"),
-        r.getAs[Int]("k_hash"))
-    } else {
-      val lines = IndexCommit.readTextSidecar(s, s"$dir/meta")
-      Meta(lines(0).toInt, lines(1).toInt, lines(2).toInt)
-    }
+    val lines = IndexCommit.readTextSidecar(s, s"$dir/meta",
+      "n_gram", "m_bits", "k_hash")
+    Meta(lines(0).toInt, lines(1).toInt, lines(2).toInt)
   }
 
-  /** Write a complete filter snapshot (words + meta) as version `id`
-    * and publish it. Because every version is self-contained at
-    * mBits/8 bytes, the full-snapshot form costs the same as a delta
-    * would — each publish is also a compaction.
+  /** Write a complete filter snapshot (words + meta) into version dir
+    * `dir`. Because every version is self-contained at mBits/8 bytes,
+    * the full-snapshot form costs the same as a delta would — each
+    * publish is also a compaction.
     */
   private def writeVersion(
-      s: SparkSession, path: String, id: Long,
+      s: SparkSession, dir: String,
       words: Seq[(Long, Long)], n: Int, mBits: Int, kHash: Int): Unit = {
     import s.implicits._
-    val dir = IndexCommit.versionDir(path, id)
     words.toDF("w", "bits").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/words")
     // driver-known scalars → text sidecar (no Spark job per probe)
     IndexCommit.writeTextSidecar(s, s"$dir/meta",
       Seq(n, mBits, kHash).map(_.toString))
-    IndexCommit.commit(s, path, id)
   }
 
   /** Ingest the benchmark documents (`doc_id`, `text`) into a fresh
@@ -109,7 +98,9 @@ object BloomIndex {
     // dense layout: every word present, zeros included
     val dense = (0L until (mBits / 64).toLong)
       .map(w => (w, sparse.getOrElse(w, 0L)))
-    writeVersion(s, path, IndexCommit.reserve(s, path), dense, n, mBits, kHash)
+    IndexCommit.publish(s, path) { (_, dir) =>
+      writeVersion(s, dir, dense, n, mBits, kHash)
+    }
   }
 
   /** Fold additional benchmark documents into the filter: word-wise OR
@@ -147,15 +138,16 @@ object BloomIndex {
     val add = Dedup.bloomWords(
       Dedup.bloomGramSets(batch, meta.nGram), meta.mBits, meta.kHash)
       .collect().map(r => r.getAs[Long]("w") -> r.getAs[Long]("bits")).toMap
-    val id = IndexCommit.reserve(s, path)
-    val merged = (0L until (meta.mBits / 64).toLong)
-      .map(w => (w, old.getOrElse(w, 0L) | add.getOrElse(w, 0L)))
-    if (IndexCommit.committedIds(s, path).last != base)
-      throw new IllegalStateException(
-        s"concurrent append detected at $path: base v=$base is no longer " +
-          "current — retry from the new version (bits published by the " +
-          "winner would otherwise be lost)")
-    writeVersion(s, path, id, merged, meta.nGram, meta.mBits, meta.kHash)
+    IndexCommit.publish(s, path) { (_, dir) =>
+      val merged = (0L until (meta.mBits / 64).toLong)
+        .map(w => (w, old.getOrElse(w, 0L) | add.getOrElse(w, 0L)))
+      if (IndexCommit.committedIds(s, path).last != base)
+        throw new IllegalStateException(
+          s"concurrent append detected at $path: base v=$base is no " +
+            "longer current — retry from the new version (bits published " +
+            "by the winner would otherwise be lost)")
+      writeVersion(s, dir, merged, meta.nGram, meta.mBits, meta.kHash)
+    }
   }
 
   /** Probe a corpus batch (`doc_id`, `text`) against the persisted

@@ -111,16 +111,10 @@ object ClusterIndex {
   }
 
   private[graft] def layout(s: SparkSession, path: String): Layout = {
-    val p = new Path(s"$path/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory) {
-      // pre-r13 indexes froze the layout as a one-row parquet dir
-      val r = s.read.parquet(p.toString).head()
-      Layout(r.getAs[Int]("num_parts"), r.getAs[Long]("width"))
-    } else {
-      val lines = IndexCommit.readTextSidecar(s, s"$path/meta")
-      Layout(lines(0).toInt, lines(1).toLong)
-    }
+    // pre-r13 indexes froze the layout as a one-row parquet dir
+    val lines = IndexCommit.readTextSidecar(s, s"$path/meta",
+      "num_parts", "width")
+    Layout(lines(0).toInt, lines(1).toLong)
   }
 
   /** Range partition of a component id. The subtraction-mediated
@@ -133,16 +127,6 @@ object ClusterIndex {
     least(((c - pmod(c, lit(l.width))) / lit(l.width)).cast("long"),
       lit((l.numParts - 1).toLong)).cast("int")
 
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val lsh = lshRoot(path)
-    // liveIds, not committedIds: an operator may [[LshIndex.compact]]
-    // the embedded index — selfPairs must then read the full segment,
-    // not double-count it with the superseded deltas
-    val ids = IndexCommit.liveIds(s, lsh)
-    require(ids.nonEmpty, s"no committed LSH segment under $lsh")
-    ids.map(IndexCommit.versionDir(lsh, _))
-  }
-
   /** Verified near-dup pairs among the documents the embedded LSH
     * index currently holds — [[Dedup.minhashLshPairsDf]]'s exact
     * semantics (band-bucket candidates, exact-Jaccard verification)
@@ -151,7 +135,11 @@ object ClusterIndex {
     */
   private def selfPairs(
       s: SparkSession, path: String, threshold: Double): DataFrame = {
-    val segs = segDirs(s, path)
+    // live, not committed, segments: an operator may
+    // [[LshIndex.compact]] the embedded index — selfPairs must then
+    // read the full segment, not double-count it with the superseded
+    // deltas
+    val segs = IndexCommit.liveDirs(s, lshRoot(path), "LSH segment")
     val bands = s.read.parquet(segs.map(_ + "/bands"): _*)
     val cand = bands.toDF("doc_a", "band", "key")
       .join(bands.toDF("doc_b", "band", "key"), Seq("band", "key"))
@@ -188,37 +176,34 @@ object ClusterIndex {
   private def publishParts(
       s: SparkSession, path: String, l: Layout,
       clusterRows: DataFrame, clusterParts: Seq[Int],
-      labelRows: Option[DataFrame], docParts: Seq[Int]): Long = {
-    val id = IndexCommit.reserve(s, path)
-    val vdir = IndexCommit.versionDir(path, id)
-    // repartition on the partition key first: partitionBy alone
-    // writes one file per (upstream partition × part) — 32 shuffle
-    // partitions × 16 ranges = up to 512 shards of a relation that
-    // wants ≤ numParts files. One exchange, proportional to the
-    // rows being published (touched-partition rows on appends)
-    def writeLeg(rows: DataFrame, key: Column, sub: String): Unit =
-      rows.withColumn("part", partOf(key, l))
-        .repartition(l.numParts, col("part"))
-        .write.partitionBy("part").mode("overwrite")
-        .parquet(s"$vdir/$sub")
-    val scope = new CacheScope
-    try {
-      val shared =
-        if (labelRows.isEmpty) scope.cache(clusterRows) else clusterRows
-      if (clusterParts.nonEmpty)
-        writeLeg(shared, col("component_id"), "clusters")
-      if (docParts.nonEmpty)
-        writeLeg(labelRows.getOrElse(shared), col("doc_id"), "labels")
-    } finally scope.release()
-    // owned-partition lists are driver-side Seq[Int] — text sidecars,
-    // zero Spark jobs on publish AND on every later resolution walk
-    IndexCommit.writeTextSidecar(s, s"$vdir/partlist",
-      clusterParts.map(_.toString))
-    IndexCommit.writeTextSidecar(s, s"$vdir/doclist",
-      docParts.map(_.toString))
-    IndexCommit.commit(s, path, id)
-    id
-  }
+      labelRows: Option[DataFrame], docParts: Seq[Int]): Long =
+    IndexCommit.publish(s, path) { (_, vdir) =>
+      // repartition on the partition key first: partitionBy alone
+      // writes one file per (upstream partition × part) — 32 shuffle
+      // partitions × 16 ranges = up to 512 shards of a relation that
+      // wants ≤ numParts files. One exchange, proportional to the
+      // rows being published (touched-partition rows on appends)
+      def writeLeg(rows: DataFrame, key: Column, sub: String): Unit =
+        rows.withColumn("part", partOf(key, l))
+          .repartition(l.numParts, col("part"))
+          .write.partitionBy("part").mode("overwrite")
+          .parquet(s"$vdir/$sub")
+      val scope = new CacheScope
+      try {
+        val shared =
+          if (labelRows.isEmpty) scope.cache(clusterRows) else clusterRows
+        if (clusterParts.nonEmpty)
+          writeLeg(shared, col("component_id"), "clusters")
+        if (docParts.nonEmpty)
+          writeLeg(labelRows.getOrElse(shared), col("doc_id"), "labels")
+      } finally scope.release()
+      // owned-partition lists are driver-side Seq[Int] — text sidecars,
+      // zero Spark jobs on publish AND on every later resolution walk
+      IndexCommit.writeTextSidecar(s, s"$vdir/partlist",
+        clusterParts.map(_.toString))
+      IndexCommit.writeTextSidecar(s, s"$vdir/doclist",
+        docParts.map(_.toString))
+    }
 
   /** One version's owned-partition sidecar (`partlist`/`doclist`).
     * Pre-r13 versions wrote these as parquet dirs — read those too,
@@ -226,13 +211,8 @@ object ClusterIndex {
     * keeps resolving its old versions.
     */
   private[graft] def sidecarParts(
-      s: SparkSession, path: String): Seq[Int] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory)
-      s.read.parquet(path).collect().map(_.getInt(0)).toSeq
-    else IndexCommit.readTextSidecar(s, path).map(_.toInt)
-  }
+      s: SparkSession, path: String): Seq[Int] =
+    IndexCommit.readTextSidecar(s, path, "part").map(_.toInt)
 
   /** Resolve every partition (optionally restricted to `only`) of one
     * relation (`clusters`/`partlist` or `labels`/`doclist`) to the

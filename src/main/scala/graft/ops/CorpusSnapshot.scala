@@ -179,12 +179,10 @@ object CorpusSnapshot {
     */
   def publish(
       s: SparkSession, d: DataFrame, root: String,
-      nShards: Int = 8, maxBytes: Long = DefaultMaxBytes): Long = {
-    val id = IndexCommit.reserve(s, root)
-    stage(s, d, root, id, nShards, maxBytes)
-    IndexCommit.commit(s, root, id)
-    id
-  }
+      nShards: Int = 8, maxBytes: Long = DefaultMaxBytes): Long =
+    IndexCommit.publish(s, root) { (id, _) =>
+      stage(s, d, root, id, nShards, maxBytes)
+    }
 
   /** [[publish]] with the shard count DERIVED from the input's
     * Catalyst size estimate instead of a fixed default — the 100 TB
@@ -323,15 +321,13 @@ object CorpusSnapshot {
     val p = new Path(s"${IndexCommit.versionDir(root, id)}/meta")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) ("full", None)
-    else if (fs.getFileStatus(p).isDirectory) {
-      // pre-r13 chains wrote the lineage as a one-row parquet DIR;
-      // read it so mixed old/new chains keep resolving
-      val r = s.read.parquet(p.toString).head()
-      (r.getAs[String]("kind"), Option(r.getAs[Long]("parent")))
-    } else {
+    else {
       // text sidecar (kind, then parent if any): a driver-side read,
-      // so a chain walk costs zero Spark jobs per hop
-      val lines = IndexCommit.readTextSidecar(s, p.toString)
+      // so a chain walk costs zero Spark jobs per hop. Pre-r13 chains
+      // wrote the lineage as a one-row parquet DIR; it still reads,
+      // so mixed old/new chains keep resolving
+      val lines =
+        IndexCommit.readTextSidecar(s, p.toString, "kind", "parent")
       (lines.head, lines.drop(1).headOption.map(_.toLong))
     }
   }
@@ -366,15 +362,13 @@ object CorpusSnapshot {
       val rm = removedIds.select(col("doc_id"))
       require(changes.select("doc_id").join(rm, Seq("doc_id")).isEmpty,
         "a delta must not both write and tombstone the same doc_id")
-      val id = IndexCommit.reserve(s, root)
-      stage(s, changes.select(col("doc_id"), col("text")), root, id,
-        nShards, maxBytes)
-      val vdir = IndexCommit.versionDir(root, id)
-      rm.write.mode("overwrite").parquet(s"$vdir/removed")
-      IndexCommit.writeTextSidecar(s, s"$vdir/meta",
-        Seq("delta", parent.toString))
-      IndexCommit.commit(s, root, id)
-      id
+      IndexCommit.publish(s, root) { (id, vdir) =>
+        stage(s, changes.select(col("doc_id"), col("text")), root, id,
+          nShards, maxBytes)
+        rm.write.mode("overwrite").parquet(s"$vdir/removed")
+        IndexCommit.writeTextSidecar(s, s"$vdir/meta",
+          Seq("delta", parent.toString))
+      }
     }
 
   /** Serialize delta publishes behind a root-level lock file
@@ -395,19 +389,6 @@ object CorpusSnapshot {
       timeoutMs: Long = 120000L, staleMs: Long = 600000L)(f: => T): T =
     IndexCommit.withLock(s, root, "delta.lock", timeoutMs, staleMs)(f)
 
-  /** Time-travel read RESOLVING delta chains: walk parent pointers
-    * from `version` (default: current) back to the nearest FULL
-    * version, then last-writer-wins per document — the newest chain
-    * member that mentions a doc_id decides it (its text if written,
-    * absent if tombstoned), so a document removed in one delta and
-    * re-added in a later one resurfaces.
-    *
-    * Shape at scale: the chain walk is O(chain) metadata reads; the
-    * union carries each chain member's OWN rows (full base + deltas,
-    * not chain × corpus); resolution is ONE doc-keyed `max_by`
-    * aggregation — a single exchange on the corpus key, tombstones
-    * riding the same relation as null-text rows.
-    */
   /** The delta chain `version` (default: current head) resolves
     * through, oldest-first: the nearest FULL ancestor followed by
     * every delta down to `version` itself. Chain length is the
@@ -434,6 +415,19 @@ object CorpusSnapshot {
     acc
   }
 
+  /** Time-travel read RESOLVING delta chains: walk parent pointers
+    * from `version` (default: current) back to the nearest FULL
+    * version, then last-writer-wins per document — the newest chain
+    * member that mentions a doc_id decides it (its text if written,
+    * absent if tombstoned), so a document removed in one delta and
+    * re-added in a later one resurfaces.
+    *
+    * Shape at scale: the chain walk is O(chain) metadata reads; the
+    * union carries each chain member's OWN rows (full base + deltas,
+    * not chain × corpus); resolution is ONE doc-keyed `max_by`
+    * aggregation — a single exchange on the corpus key, tombstones
+    * riding the same relation as null-text rows.
+    */
   def readResolved(
       s: SparkSession, root: String,
       version: Option[Long] = None): DataFrame = {

@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   * Durability: stage-then-rename ([[IndexCommit.writeTextSidecar]]),
   * so readers never see a torn value; absent file = no default, the
   * pre-r16 behavior. [[IndexCommit.reset]] deletes only version
-  * state, so [[clear]] exists for builds that must not inherit a
+  * state, so `set(None)` exists for builds that must not inherit a
   * predecessor's cap.
   */
 object GuardMeta {
@@ -38,22 +38,20 @@ object GuardMeta {
 
   private def sidecar(root: String): String = s"$root/guard_meta"
 
-  /** Commit `cap` as the index's default hot-band cap. */
-  def set(s: SparkSession, root: String, cap: Long): Unit = {
-    require(cap >= 1, "guard cap must be at least 1")
-    IndexCommit.writeTextSidecar(s, sidecar(root), Seq(cap.toString))
-  }
-
-  /** Remove a committed default (a rebuild that wants no cap must not
-    * inherit its predecessor's — the builds call this when given
-    * `None`).
+  /** Commit `cap` as the index's default hot-band cap; `None` removes
+    * a committed default (a rebuild that wants no cap must not inherit
+    * its predecessor's).
     */
-  def clear(s: SparkSession, root: String): Unit = {
-    val p = new Path(sidecar(root))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, false)
-    ()
-  }
+  def set(s: SparkSession, root: String, cap: Option[Long]): Unit =
+    cap match {
+      case Some(c) =>
+        require(c >= 1, "guard cap must be at least 1")
+        IndexCommit.writeTextSidecar(s, sidecar(root), Seq(c.toString))
+      case None =>
+        val p = new Path(sidecar(root))
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, false)
+        ()
+    }
 
   /** The committed default, if any. */
   def get(s: SparkSession, root: String): Option[Long] = {

@@ -1,13 +1,21 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Commit-marker versioning for the persisted indexes ([[BloomIndex]],
-  * [[LshIndex]], [[VectorIndex]]): writers stage a complete `v=<id>`
-  * directory and only then create a zero-length marker under
-  * `commits/<id>`; readers resolve the committed id set and never list
-  * data directories directly. Replaces the in-place
+/** Commit-marker versioning for the engine's persisted state: writers
+  * stage a complete `v=<id>` directory and only then create a
+  * zero-length marker under `commits/<id>`; readers resolve the
+  * committed id set and never list data directories directly. The
+  * callers: the segment-union indexes ([[LshIndex]], [[SigIndex]],
+  * [[SimSigIndex]], [[SubstrIndex]], [[VectorIndex]]), the
+  * full-snapshot indexes ([[BloomIndex]], [[SketchIndex]],
+  * [[KnIndex]]), the partial-version [[ClusterIndex]], and the
+  * [[CorpusSnapshot]] versions an export publishes. They go through
+  * [[publish]], [[liveDirs]], [[requireCurrent]] and
+  * [[compactDistinct]], so the rule "no marker unless the version is
+  * complete" lives here alone. Replaces the in-place
   * `mode("overwrite")`/`mode("append")` writes, whose torn states
   * (missing `words` mid-overwrite, half a batch's part-files visible
   * to a concurrently-running streaming probe) were the one crash
@@ -15,15 +23,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Why markers instead of [[graft.streaming.StreamingMerge]]'s
   * stage-then-swap: the swap pattern exists to REPLACE a relation in
-  * place, and its delete→rename window needs read-side recovery.
-  * Index publishes are ADDITIVE — a new version never invalidates the
-  * previous one — so the marker design has no unsafe window at all: a
-  * reader between "data written" and "marker created" simply resolves
-  * the previous committed id, and a writer killed at ANY point leaves
-  * either the old index (no marker → staged files invisible forever)
-  * or the new one (marker durable → data was already complete). This
-  * is the same commit-log economics as a table format's snapshot
-  * pointer, shrunk to the two operations indexes need.
+  * place, so it needs two renames (target aside, stage in) and
+  * read-side recovery of a swap stopped between them. Index publishes
+  * are ADDITIVE — a new version never invalidates the previous one —
+  * so the marker design has no unsafe window at all: a reader between
+  * "data written" and "marker created" simply resolves the previous
+  * committed id, and a writer killed at ANY point leaves either the
+  * old index (no marker → staged files invisible forever) or the new
+  * one (marker durable → data was already complete). This is the same
+  * commit-log economics as a table format's snapshot pointer, shrunk
+  * to the two operations indexes need.
   *
   * Reservation (`locks/<id>`, atomic create-new) keeps concurrent
   * writers off the same staging directory: each writer owns the id it
@@ -65,6 +74,15 @@ object IndexCommit {
     */
   def currentDir(s: SparkSession, path: String): Option[String] =
     committedIds(s, path).lastOption.map(versionDir(path, _))
+
+  private def noneCommitted(what: String, path: String) =
+    new IllegalStateException(s"no committed $what at $path")
+
+  /** [[currentDir]] for readers that need a version: throws
+    * `no committed <what> at <path>` when there is none.
+    */
+  def requireCurrent(s: SparkSession, path: String, what: String): String =
+    currentDir(s, path).getOrElse(throw noneCommitted(what, path))
 
   /** Whether `fs` resolves to the driver's local disk. Classified by
     * the RESOLVED filesystem, not the raw URI: a scheme-less path
@@ -121,6 +139,19 @@ object IndexCommit {
     fs.create(new Path(commits, id.toString), false).close()
   }
 
+  /** The one writer protocol: reserve an id, run `write` on that
+    * version (its id and its `v=<id>` dir), then commit the marker.
+    * If `write` throws, no marker is written and the id stays retired.
+    * Returns the committed id.
+    */
+  def publish(s: SparkSession, path: String)(
+      write: (Long, String) => Unit): Long = {
+    val id = reserve(s, path)
+    write(id, versionDir(path, id))
+    commit(s, path, id)
+    id
+  }
+
   /** Write a tiny metadata sidecar (version part-lists, frozen layout
     * scalars) as ONE text file via the driver's FileSystem handle —
     * no Spark job on either side. These values are driver-known
@@ -170,19 +201,36 @@ object IndexCommit {
     }
   }
 
-  /** Read a [[writeTextSidecar]] file: the lines, empty-file → Nil. */
-  def readTextSidecar(s: SparkSession, path: String): Seq[String] = {
+  /** Read a [[writeTextSidecar]] file: the lines, empty-file → Nil.
+    *
+    * Before the text format, sidecars were one-row parquet
+    * DIRECTORIES. A reader that knows such a layout names its columns
+    * in `legacyCols` and gets their non-null values as strings, in row
+    * then column order; a zero-row or unreadable directory (that
+    * format's torn write) reads as Nil. A directory read without
+    * `legacyCols` is rejected: that sidecar never had a parquet form.
+    */
+  def readTextSidecar(
+      s: SparkSession, path: String, legacyCols: String*): Seq[String] = {
     val fs = hfs(s, path)
-    val in = fs.open(new Path(path))
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      val text = new String(bytes.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
-      if (text.isEmpty) Nil else text.split("\n", -1).toSeq
-    } finally in.close()
+    if (fs.getFileStatus(new Path(path)).isDirectory) {
+      require(legacyCols.nonEmpty, s"$path is a directory, not a sidecar")
+      try s.read.parquet(path).select(legacyCols.map(col): _*).collect()
+        .toSeq.flatMap(r =>
+          legacyCols.indices.filterNot(r.isNullAt).map(r.get(_).toString))
+      catch { case _: AnalysisException => Nil }
+    } else {
+      val in = fs.open(new Path(path))
+      try {
+        val bytes = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](8192)
+        var n = in.read(buf)
+        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
+        val text = new String(bytes.toByteArray,
+          java.nio.charset.StandardCharsets.UTF_8)
+        if (text.isEmpty) Nil else text.split("\n", -1).toSeq
+      } finally in.close()
+    }
   }
 
   /** FULL-segment marker for segment-UNION indexes ([[LshIndex]],
@@ -241,6 +289,16 @@ object IndexCommit {
   def liveIds(s: SparkSession, path: String): Seq[Long] =
     liveIdsOf(s, path, committedIds(s, path))
 
+  /** The data dirs of [[liveIds]], the segments a union reader reads;
+    * throws `no committed <what> at <path>` when there are none (never
+    * built, or killed mid-build).
+    */
+  def liveDirs(s: SparkSession, path: String, what: String): Seq[String] = {
+    val ids = liveIds(s, path)
+    if (ids.isEmpty) throw noneCommitted(what, path)
+    ids.map(versionDir(path, _))
+  }
+
   /** Stage and commit a FULL segment: snapshots the committed id set,
     * hands the caller the LIVE subset's data dirs plus a reserved
     * staging dir to write the union into, then marks `_FULL` (naming
@@ -266,11 +324,24 @@ object IndexCommit {
       val observed = committedIds(s, path)
       val live = liveIdsOf(s, path, observed)
       require(live.nonEmpty, s"nothing to compact at $path")
-      val id = reserve(s, path)
-      write(live.map(versionDir(path, _)), versionDir(path, id))
-      markFull(s, path, id, observed)
-      commit(s, path, id)
-      id
+      publish(s, path) { (id, dir) =>
+        write(live.map(versionDir(path, _)), dir)
+        markFull(s, path, id, observed)
+      }
+    }
+
+  /** [[commitFull]] whose body rewrites each of `relations` as the
+    * `distinct` union of the live segments' copies. Distinct because a
+    * crash-window duplicate segment (an ingestion stream killed
+    * between append and ledger mark) must collapse here, not be baked
+    * verbatim into every later full segment.
+    */
+  def compactDistinct(
+      s: SparkSession, path: String, relations: String*): Long =
+    commitFull(s, path) { (segs, dir) =>
+      relations.foreach(r =>
+        s.read.parquet(segs.map(d => s"$d/$r"): _*).distinct()
+          .write.mode("overwrite").parquet(s"$dir/$r"))
     }
 
   /** The live-segment compact cadence shared by the five
@@ -366,30 +437,6 @@ object IndexCommit {
   private val lockMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Serialize a read-modify-write critical section behind a
-    * root-level lock file (atomic create-new). The marker protocol
-    * alone makes individual publishes atomic but cannot order two
-    * writers that each read state and publish a successor — delta
-    * chains ([[CorpusSnapshot.publishDelta]]) would fork and
-    * partial-version assignments ([[ClusterIndex.append]]) would lose
-    * one writer's rewrite. Used by both; full snapshot publishes and
-    * LSH segment appends stay lock-free (self-contained / disjoint).
-    *
-    * Atomicity: acquisition goes through [[atomicCreate]] (NIO O_EXCL
-    * on local filesystems, namenode-serialized create-new elsewhere —
-    * classified by the RESOLVED filesystem, so a scheme-less path
-    * under a remote defaultFS locks remotely, where every other
-    * operation already goes). A writer killed inside the critical
-    * section leaves a stale lock; waiters break locks older than
-    * `staleMs` (safe — an uncommitted reservation is invisible
-    * forever). Breaking is arbitrated: the waiter re-stats the lock,
-    * and only if its mtime still matches the one judged stale RENAMES
-    * it to a unique tombstone before deleting — two waiters that both
-    * saw the same stale lock race on the rename, exactly one wins,
-    * and the loser goes back to waiting instead of deleting the
-    * winner's fresh lock (the lost-update the lock exists to
-    * prevent). Bounded wait, then a clear error naming the lock file.
-    */
   /** Break a lock previously judged stale at `observedMtime`: re-stat
     * (a lock whose mtime moved is a NEW writer's — leave it), then
     * RENAME to a unique tombstone before deleting. Rename is the
@@ -412,6 +459,32 @@ object IndexCommit {
     won
   }
 
+  /** Serialize a read-modify-write critical section behind a
+    * root-level lock file (atomic create-new). The marker protocol
+    * alone makes individual publishes atomic but cannot order two
+    * writers that each read state and publish a successor — delta
+    * chains ([[CorpusSnapshot.publishDelta]]) would fork and
+    * partial-version assignments ([[ClusterIndex.append]]) would lose
+    * one writer's rewrite. Used by both, by the read-merge-publish
+    * appends of [[BloomIndex]] and [[SketchIndex]], and by
+    * [[commitFull]]; full snapshot publishes and segment appends stay
+    * lock-free (self-contained / disjoint).
+    *
+    * Atomicity: acquisition goes through [[atomicCreate]] (NIO O_EXCL
+    * on local filesystems, namenode-serialized create-new elsewhere —
+    * classified by the RESOLVED filesystem, so a scheme-less path
+    * under a remote defaultFS locks remotely, where every other
+    * operation already goes). A writer killed inside the critical
+    * section leaves a stale lock; waiters break locks older than
+    * `staleMs` (safe — an uncommitted reservation is invisible
+    * forever). Breaking is arbitrated: the waiter re-stats the lock,
+    * and only if its mtime still matches the one judged stale RENAMES
+    * it to a unique tombstone before deleting — two waiters that both
+    * saw the same stale lock race on the rename, exactly one wins,
+    * and the loser goes back to waiting instead of deleting the
+    * winner's fresh lock (the lost-update the lock exists to
+    * prevent). Bounded wait, then a clear error naming the lock file.
+    */
   private[graft] def withLock[T](
       s: SparkSession, root: String, name: String,
       timeoutMs: Long = 120000L, staleMs: Long = 600000L)(f: => T): T = {

@@ -41,6 +41,12 @@ object KnIndex {
   def build(s: SparkSession, dir: String, path: String): Long =
     buildFrom(s, s.read.parquet(s"$dir/documents.parquet"), path)
 
+  /** The count relations every LOWER level derives from — these must
+    * write-then-read-back synchronously so the next derivation's
+    * lineage is the published parquet.
+    */
+  private val ChainRelations = Set("c5", "cc4", "cc3", "cc2", "cc1")
+
   /** [[build]] over an explicit (doc_id, text, …) relation. ONE
     * corpus pass: each model relation is written as it is derived and
     * read back, so every downstream level's lineage is its parent's
@@ -51,56 +57,47 @@ object KnIndex {
     * accumulator in the source lineage (the CorpusSnapshot one-scan
     * discipline).
     */
-  /** The count relations every LOWER level derives from — these must
-    * write-then-read-back synchronously so the next derivation's
-    * lineage is the published parquet.
-    */
-  private val ChainRelations = Set("c5", "cc4", "cc3", "cc2", "cc1")
-
   private[graft] def buildFrom(
       s: SparkSession, docs: DataFrame, path: String): Long = {
     val pos = LanguageModel.positions(docs)
-    val id = IndexCommit.reserve(s, path)
-    val vdir = IndexCommit.versionDir(path, id)
-    // Overlap the LEAF writes with the derivation chain (guide §2.6,
-    // concurrent actions): c5→cc4→cc3→cc2→cc1 is sequential by data
-    // dependency (each level's lineage is its parent's published
-    // parquet — the one-corpus-pass discipline), but ctx5/ctx4/ctx3/
-    // ctx2/scal are leaves nothing downstream reads during the build.
-    // Submitting their write jobs to a small pool lets them back-fill
-    // the cores a chain write's task tail leaves idle; pre-fix the ten
-    // legs ran strictly one after another. The committed bytes are
-    // identical — the same plans write to the same paths — and a
-    // failed leaf write still fails the build (Future.get rethrows)
-    // BEFORE the commit marker, so torn builds stay invisible.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val pending =
-      scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[_]]
-    try {
-      LanguageModel.train(
-        pos.filter(col("split") === "train")
-          .select("h1", "h2", "h3", "h4", "w"),
-        (df, name) =>
-          if (ChainRelations(name)) {
-            df.write.mode("overwrite").parquet(s"$vdir/$name")
-            s.read.parquet(s"$vdir/$name")
-          } else {
-            pending += pool.submit(new Runnable {
-              def run(): Unit =
-                df.write.mode("overwrite").parquet(s"$vdir/$name")
+    IndexCommit.publish(s, path) { (_, vdir) =>
+      // Overlap the LEAF writes with the derivation chain (guide §2.6,
+      // concurrent actions): c5→cc4→cc3→cc2→cc1 is sequential by data
+      // dependency (each level's lineage is its parent's published
+      // parquet — the one-corpus-pass discipline), but ctx5/ctx4/ctx3/
+      // ctx2/scal are leaves nothing downstream reads during the build.
+      // Submitting their write jobs to a small pool lets them back-fill
+      // the cores a chain write's task tail leaves idle; pre-fix the ten
+      // legs ran strictly one after another. The committed bytes are
+      // identical — the same plans write to the same paths — and a
+      // failed leaf write still fails the build (Future.get rethrows)
+      // BEFORE the commit marker, so torn builds stay invisible.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val pending =
+        scala.collection.mutable.Buffer.empty[java.util.concurrent.Future[_]]
+      try {
+        LanguageModel.train(
+          pos.filter(col("split") === "train")
+            .select("h1", "h2", "h3", "h4", "w"),
+          (df, name) =>
+            if (ChainRelations(name)) {
+              df.write.mode("overwrite").parquet(s"$vdir/$name")
+              s.read.parquet(s"$vdir/$name")
+            } else {
+              pending += pool.submit(new Runnable {
+                def run(): Unit =
+                  df.write.mode("overwrite").parquet(s"$vdir/$name")
+              })
+              df // leaf: unused during the build
             })
-            df // leaf: unused during the build
-          })
-      pending.foreach(_.get())
-    } finally pool.shutdown()
-    IndexCommit.commit(s, path, id)
-    id
+        pending.foreach(_.get())
+      } finally pool.shutdown()
+    }
   }
 
   /** The current committed version's model relations. */
   private def load(s: SparkSession, path: String): LanguageModel.KnModel = {
-    val vdir = IndexCommit.currentDir(s, path).getOrElse(
-      sys.error(s"no committed KN index under $path"))
+    val vdir = IndexCommit.requireCurrent(s, path, "KN index")
     val r = Relations.map(n => n -> s.read.parquet(s"$vdir/$n")).toMap
     LanguageModel.KnModel(r("c5"), r("ctx5"), r("cc4"), r("ctx4"),
       r("cc3"), r("ctx3"), r("cc2"), r("ctx2"), r("cc1"), r("scal"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,8 +93,17 @@ object LshIndex {
       // job (see IndexCommit.writeTextSidecar)
       IndexCommit.writeTextSidecar(s, s"$path/meta",
         Seq(n, numHashes, rowsPerBand).map(_.toString))
-      val id = IndexCommit.reserve(s, path)
-      val seg = IndexCommit.versionDir(path, id)
+      writeSegment(s, path, sh, numHashes, rowsPerBand, scope)
+    } finally scope.release()
+  }
+
+  /** Publish one segment: the banded signatures and sorted shingle
+    * sets of `sh` (doc_id, shingle) under one marker.
+    */
+  private def writeSegment(
+      s: SparkSession, path: String, sh: DataFrame,
+      numHashes: Int, rowsPerBand: Int, scope: CacheScope): Long =
+    IndexCommit.publish(s, path) { (_, seg) =>
       Dedup.bandedSignatures(sh, numHashes, rowsPerBand, scope)
         .write.mode("overwrite").parquet(s"$seg/bands")
       // sort_array: a deterministic on-disk layout (the set is the
@@ -103,19 +111,7 @@ object LshIndex {
       sh.groupBy("doc_id")
         .agg(sort_array(collect_list(col("shingle"))).as("shingles"))
         .write.mode("overwrite").parquet(s"$seg/sets")
-      IndexCommit.commit(s, path, id)
-    } finally scope.release()
-  }
-
-  /** LIVE segment dirs — the newest FULL segment ([[compact]]'s
-    * product) plus everything after it; loud failure on an index with
-    * no committed segment (never built, or killed mid-build).
-    */
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val ids = IndexCommit.liveIds(s, path)
-    require(ids.nonEmpty, s"no committed LSH index segment at $path")
-    ids.map(IndexCommit.versionDir(path, _))
-  }
+    }
 
   /** Fold every live delta segment into ONE full segment — the
     * log-structured compaction the append/ingestion economics assume
@@ -136,17 +132,10 @@ object LshIndex {
     * error). Returns the committed full-segment id.
     */
   def compact(s: SparkSession, path: String): Long =
-    IndexCommit.commitFull(s, path) { (segs, dir) =>
-      // distinct: a crash-window duplicate segment (ingestion stream
-      // killed between append and ledger mark) must collapse here,
-      // not be baked verbatim into every future full segment — the
-      // probe-side pair dedup keeps answers right either way, but the
-      // compact is where the duplicate STATE gets reclaimed
-      s.read.parquet(segs.map(_ + "/bands"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/bands")
-      s.read.parquet(segs.map(_ + "/sets"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/sets")
-    }
+    // distinct: the probe-side pair dedup keeps answers right with a
+    // duplicate segment live, but the compact is where the duplicate
+    // STATE gets reclaimed
+    IndexCommit.compactDistinct(s, path, "bands", "sets")
 
   /** Compact once the live-segment count reaches `maxSegments` — the
     * [[ClusterIndex.maybeCompact]] cadence for segment-union indexes.
@@ -197,24 +186,15 @@ object LshIndex {
     */
   def refreshGuard(
       s: SparkSession, path: String, maxDocFreq: Double): Long = {
-    val sets = s.read.parquet(segDirs(s, path).map(_ + "/sets"): _*)
-    val cutoff = (maxDocFreq * sets.count()).toLong
     val hot = currentHot(s, path)
-    val drifted = sets.select(explode(col("shingles")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > cutoff)
-      .select("shingle")
-      .join(broadcast(hot), Seq("shingle"), "left_anti")
-    val root = guardRoot(path)
-    val id = IndexCommit.reserve(s, root)
+    val drifted = driftedShingles(s, path, maxDocFreq, hot).select("shingle")
     // hot sets are tiny by the guard's own definition (shingles in
     // > maxDocFreq of the corpus) — one file keeps the broadcast read
     // cheap
-    hot.unionByName(drifted).coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"${IndexCommit.versionDir(root, id)}/hot")
-    IndexCommit.commit(s, root, id)
-    id
+    IndexCommit.publish(s, guardRoot(path)) { (_, dir) =>
+      hot.unionByName(drifted).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/hot")
+    }
   }
 
   /** Fold a new batch of documents into an existing index: the batch's
@@ -253,14 +233,7 @@ object LshIndex {
       val hot = currentHot(s, path)
       val sh = Dedup.hashedShingles(batch, meta.n, None, scope)
         .join(broadcast(hot), Seq("shingle"), "left_anti")
-      val id = IndexCommit.reserve(s, path)
-      val dir = IndexCommit.versionDir(path, id)
-      Dedup.bandedSignatures(sh, meta.numHashes, meta.rowsPerBand, scope)
-        .write.mode("overwrite").parquet(s"$dir/bands")
-      sh.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("shingle"))).as("shingles"))
-        .write.mode("overwrite").parquet(s"$dir/sets")
-      IndexCommit.commit(s, path, id)
+      writeSegment(s, path, sh, meta.numHashes, meta.rowsPerBand, scope)
     } finally scope.release()
   }
 
@@ -287,32 +260,35 @@ object LshIndex {
     * diagnostic with [[Dedup.skewReport]] economics.
     */
   def guardDrift(
-      s: SparkSession, path: String, maxDocFreq: Double): DataFrame = {
-    val sets = s.read.parquet(segDirs(s, path).map(_ + "/sets"): _*)
-    val cutoff = (maxDocFreq * sets.count()).toLong
-    val hot = currentHot(s, path)
-    sets.select(explode(col("shingles")).as("shingle"))
-      .groupBy("shingle").agg(count(lit(1)).as("df"))
-      .filter(col("df") > cutoff)
-      .join(broadcast(hot), Seq("shingle"), "left_anti")
+      s: SparkSession, path: String, maxDocFreq: Double): DataFrame =
+    driftedShingles(s, path, maxDocFreq, currentHot(s, path))
       .groupBy("df")
       .agg(count(lit(1)).as("n_shingles"))
       .select(col("df"), col("n_shingles"),
         expr("n_shingles * (df * (df - 1) div 2)").as("worst_case_pairs"))
+
+  /** (shingle, df) for the shingles whose document frequency over the
+    * live segments' sets exceeds the `maxDocFreq` cutoff and that
+    * `hot` does not hold — what [[guardDrift]] reports and
+    * [[refreshGuard]] folds in.
+    */
+  private def driftedShingles(
+      s: SparkSession, path: String, maxDocFreq: Double,
+      hot: DataFrame): DataFrame = {
+    val sets = s.read.parquet(IndexCommit.liveDirs(
+      s, path, "LSH index segment").map(_ + "/sets"): _*)
+    val cutoff = (maxDocFreq * sets.count()).toLong
+    sets.select(explode(col("shingles")).as("shingle"))
+      .groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") > cutoff)
+      .join(broadcast(hot), Seq("shingle"), "left_anti")
   }
 
   def readMeta(s: SparkSession, path: String): Meta = {
-    val p = new Path(s"$path/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory) {
-      // pre-r13 builds froze the config as a one-row parquet dir
-      val r = s.read.parquet(p.toString).head()
-      Meta(r.getAs[Int]("n"), r.getAs[Int]("num_hashes"),
-        r.getAs[Int]("rows_per_band"))
-    } else {
-      val lines = IndexCommit.readTextSidecar(s, s"$path/meta")
-      Meta(lines(0).toInt, lines(1).toInt, lines(2).toInt)
-    }
+    // pre-r13 builds froze the config as a one-row parquet dir
+    val lines = IndexCommit.readTextSidecar(s, s"$path/meta",
+      "n", "num_hashes", "rows_per_band")
+    Meta(lines(0).toInt, lines(1).toInt, lines(2).toInt)
   }
 
   /** Probe the index with a batch of new documents (doc_id, text):
@@ -350,7 +326,7 @@ object LshIndex {
     // sets come from the SAME segment list even if an append commits
     // mid-probe (a candidate from a new band could otherwise miss its
     // verification set)
-    val segs = segDirs(s, path)
+    val segs = IndexCommit.liveDirs(s, path, "LSH index segment")
     val hot = currentHot(s, path)
     // the index's guard, not a batch-local recount: anti-join against
     // the persisted hot set (broadcast — tiny by the guard's own

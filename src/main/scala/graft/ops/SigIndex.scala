@@ -35,12 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object SigIndex {
 
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val ids = IndexCommit.liveIds(s, path)
-    require(ids.nonEmpty, s"no committed signature index segment at $path")
-    ids.map(IndexCommit.versionDir(path, _))
-  }
-
   /** Fold every live delta segment into ONE full segment (`_FULL`
     * marker, [[IndexCommit.commitFull]]'s concurrent-append guard) —
     * the [[LshIndex.compact]] economics for the media index: a
@@ -52,12 +46,7 @@ object SigIndex {
     * retire the full segment itself — see [[LshIndex.compact]]).
     */
   def compact(s: SparkSession, path: String): Long =
-    IndexCommit.commitFull(s, path) { (segs, dir) =>
-      // distinct: crash-window duplicate segments collapse at compact
-      // ([[LshIndex.compact]]'s rationale)
-      s.read.parquet(segs.map(_ + "/sigs"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/sigs")
-    }
+    IndexCommit.compactDistinct(s, path, "sigs")
 
   /** Default probe-batch ceiling: 10 M rows → ~40 M banded rows ×
     * 28 bytes ≈ 1.1 GB broadcast — comfortably inside the 8 GB hard
@@ -109,14 +98,11 @@ object SigIndex {
     IndexCommit.maybeCompactWith(s, path, maxSegments)(compact(s, path))
 
   private def writeSegment(
-      s: SparkSession, path: String, sigs: DataFrame): Long = {
-    val id = IndexCommit.reserve(s, path)
-    sigs.select(col("doc_id"), col("sig"))
-      .write.mode("overwrite")
-      .parquet(s"${IndexCommit.versionDir(path, id)}/sigs")
-    IndexCommit.commit(s, path, id)
-    id
-  }
+      s: SparkSession, path: String, sigs: DataFrame): Long =
+    IndexCommit.publish(s, path) { (_, dir) =>
+      sigs.select(col("doc_id"), col("sig"))
+        .write.mode("overwrite").parquet(s"$dir/sigs")
+    }
 
   /** Build the index from a (doc_id, sig) relation (one decode+hash
     * pass — the caller owns which media table feeds it). Destructive
@@ -133,10 +119,7 @@ object SigIndex {
       s: SparkSession, path: String, sigs: DataFrame,
       guardMaxBandFreq: Option[Long] = None): Long = {
     IndexCommit.reset(s, path)
-    guardMaxBandFreq match {
-      case Some(cap) => GuardMeta.set(s, path, cap)
-      case None => GuardMeta.clear(s, path)
-    }
+    GuardMeta.set(s, path, guardMaxBandFreq)
     writeSegment(s, path, sigs)
   }
 
@@ -149,8 +132,8 @@ object SigIndex {
 
   /** The committed (doc_id, sig) relation. */
   def sigs(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(segDirs(s, path).map(_ + "/sigs"): _*)
-      .select("doc_id", "sig")
+    s.read.parquet(IndexCommit.liveDirs(s, path, "signature index segment")
+      .map(_ + "/sigs"): _*).select("doc_id", "sig")
 
   /** 4×16-bit band keys of a signature column — row-local, the
     * pigeonhole decomposition that is exhaustive at Hamming < 4

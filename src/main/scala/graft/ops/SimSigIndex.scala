@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,21 +45,9 @@ import org.apache.spark.sql.functions._
 object SimSigIndex {
 
   /** The frozen plane count. */
-  def numPlanes(s: SparkSession, path: String): Int = {
-    val p = new Path(s"$path/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.getFileStatus(p).isDirectory,
-      s"$p is a directory, not a SimSigIndex meta sidecar — no legacy " +
-        "SimSigIndex layout ever shipped; this is not a SimSigIndex")
-    IndexCommit.readTextSidecar(s, p.toString).head.toInt
-  }
-
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val ids = IndexCommit.liveIds(s, path)
-    require(ids.nonEmpty,
-      s"no committed embedding signature index segment at $path")
-    ids.map(IndexCommit.versionDir(path, _))
-  }
+  def numPlanes(s: SparkSession, path: String): Int =
+    // no legacy parquet meta ever shipped: a directory is rejected
+    IndexCommit.readTextSidecar(s, s"$path/meta").head.toInt
 
   /** Fold every live delta segment into ONE full segment (`_FULL`
     * marker, [[IndexCommit.commitFull]]'s concurrent-append guard) —
@@ -72,14 +59,7 @@ object SimSigIndex {
     * [[LshIndex.compact]]).
     */
   def compact(s: SparkSession, path: String): Long =
-    IndexCommit.commitFull(s, path) { (segs, dir) =>
-      // distinct: crash-window duplicate segments collapse at compact
-      // ([[LshIndex.compact]]'s rationale)
-      s.read.parquet(segs.map(_ + "/sigs"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/sigs")
-      s.read.parquet(segs.map(_ + "/vecs"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/vecs")
-    }
+    IndexCommit.compactDistinct(s, path, "sigs", "vecs")
 
   /** Compact at a live-segment cadence ([[LshIndex.maybeCompact]]). */
   def maybeCompact(
@@ -87,17 +67,14 @@ object SimSigIndex {
     IndexCommit.maybeCompactWith(s, path, maxSegments)(compact(s, path))
 
   private def writeSegment(
-      s: SparkSession, path: String, emb: DataFrame, planes: Int): Long = {
-    val id = IndexCommit.reserve(s, path)
-    val seg = IndexCommit.versionDir(path, id)
-    Similarity.lshSignaturesDf(emb.select("vec_id", "v"), planes)
-      .select("vec_id", "sig")
-      .write.mode("overwrite").parquet(s"$seg/sigs")
-    emb.select("vec_id", "v")
-      .write.mode("overwrite").parquet(s"$seg/vecs")
-    IndexCommit.commit(s, path, id)
-    id
-  }
+      s: SparkSession, path: String, emb: DataFrame, planes: Int): Long =
+    IndexCommit.publish(s, path) { (_, seg) =>
+      Similarity.lshSignaturesDf(emb.select("vec_id", "v"), planes)
+        .select("vec_id", "sig")
+        .write.mode("overwrite").parquet(s"$seg/sigs")
+      emb.select("vec_id", "v")
+        .write.mode("overwrite").parquet(s"$seg/vecs")
+    }
 
   /** Build from a (vec_id, v: array<double>) relation — the one
     * corpus signing. Destructive reset by contract, like
@@ -114,10 +91,7 @@ object SimSigIndex {
     IndexCommit.writeTextSidecar(s, s"$path/meta", Seq(planes.toString))
     // build-owned default hot-band cap ([[GuardMeta]]; SigIndex.build's
     // contract): Some commits it, None clears a predecessor's
-    guardMaxBandFreq match {
-      case Some(cap) => GuardMeta.set(s, path, cap)
-      case None => GuardMeta.clear(s, path)
-    }
+    GuardMeta.set(s, path, guardMaxBandFreq)
     writeSegment(s, path, emb, planes)
   }
 
@@ -131,12 +105,14 @@ object SimSigIndex {
 
   /** The committed (vec_id, sig) relation. */
   def sigs(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(segDirs(s, path).map(_ + "/sigs"): _*)
+    s.read.parquet(IndexCommit.liveDirs(
+      s, path, "embedding signature index segment").map(_ + "/sigs"): _*)
       .select("vec_id", "sig")
 
   /** The committed (vec_id, v) relation. */
   def vecs(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(segDirs(s, path).map(_ + "/vecs"): _*)
+    s.read.parquet(IndexCommit.liveDirs(
+      s, path, "embedding signature index segment").map(_ + "/vecs"): _*)
       .select("vec_id", "v")
 
   /** Row-local band keys of a signature column — width must divide

@@ -37,11 +37,23 @@ import org.apache.spark.sql.functions._
   */
 object SketchIndex {
 
+  /** Publish `state` as the one relation `rel` of a new version. */
+  private def publish(
+      s: SparkSession, path: String, rel: String, state: DataFrame): Long =
+    IndexCommit.publish(s, path) { (_, dir) =>
+      state.write.mode("overwrite").parquet(s"$dir/$rel")
+    }
+
+  /** Relation `rel` of the current committed version. */
+  private def load(
+      s: SparkSession, path: String, what: String, rel: String): DataFrame =
+    s.read.parquet(s"${IndexCommit.requireCurrent(s, path, what)}/$rel")
+
   // ---- HLL ----------------------------------------------------------
 
   /** Sketch `docs` and publish version 0's register relation. */
   def buildHll(s: SparkSession, docs: DataFrame, path: String): Long =
-    publishHll(s, path, Sketches.hllRegistersOf(docs))
+    publish(s, path, "regs", Sketches.hllRegistersOf(docs))
 
   /** Fold a batch into the current registers by per-register max and
     * publish the merge as a new version. Returns the committed id.
@@ -51,29 +63,17 @@ object SketchIndex {
     // registers miss the earlier batch's maxima (IndexCommit.withLock,
     // the ClusterIndex.append convention)
     IndexCommit.withLock(s, path, "append.lock") {
-      publishHll(s, path,
-        loadHll(s, path).unionByName(Sketches.hllRegistersOf(batch))
+      publish(s, path, "regs",
+        load(s, path, "HLL index", "regs")
+          .unionByName(Sketches.hllRegistersOf(batch))
           .groupBy("source", "j").agg(max("mj").as("mj")))
     }
-
-  private def publishHll(
-      s: SparkSession, path: String, regs: DataFrame): Long = {
-    val id = IndexCommit.reserve(s, path)
-    regs.write.mode("overwrite")
-      .parquet(s"${IndexCommit.versionDir(path, id)}/regs")
-    IndexCommit.commit(s, path, id)
-    id
-  }
-
-  private def loadHll(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${IndexCommit.currentDir(s, path).getOrElse(
-      sys.error(s"no committed HLL index under $path"))}/regs")
 
   /** Finalize the CURRENT committed registers — identical rows to
     * [[Sketches.hllDistinctShingles]] over everything ever folded in.
     */
   def hllSketch(s: SparkSession, path: String): DataFrame =
-    Sketches.hllFinalize(loadHll(s, path))
+    Sketches.hllFinalize(load(s, path, "HLL index", "regs"))
 
   // ---- CMS ----------------------------------------------------------
 
@@ -87,27 +87,20 @@ object SketchIndex {
     IndexCommit.writeTextSidecar(s, s"$path/meta",
       Seq(depth, width).map(_.toString))
 
-  private def cmsMeta(s: SparkSession, path: String): (Int, Int) =
-    if (isLegacyMetaDir(s, path)) {
-      val r = s.read.parquet(s"$path/meta").collect().head
-      (r.getAs[Int]("depth"), r.getAs[Int]("width"))
-    } else {
-      val lines = IndexCommit.readTextSidecar(s, s"$path/meta")
-      (lines(0).toInt, lines(1).toInt)
-    }
-
-  /** Pre-r13 builds froze meta as a one-row parquet DIRECTORY. */
-  private def isLegacyMetaDir(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).isDirectory
+  /** The grid shape; pre-r13 builds froze it as a one-row parquet
+    * DIRECTORY, which the sidecar reader still reads.
+    */
+  private def cmsMeta(s: SparkSession, path: String): (Int, Int) = {
+    val lines =
+      IndexCommit.readTextSidecar(s, s"$path/meta", "depth", "width")
+    (lines(0).toInt, lines(1).toInt)
   }
 
   def buildCms(s: SparkSession, docs: DataFrame, path: String,
       depth: Int = 4, width: Int = 64): Long = {
     require(depth >= 1 && width >= 2, s"bad CMS shape: $depth x $width")
     writeCmsMeta(s, path, depth, width)
-    publishCms(s, path,
+    publish(s, path, "grid",
       Sketches.cmsGridOf(Sketches.cmsTokensOf(docs), depth, width))
   }
 
@@ -119,25 +112,12 @@ object SketchIndex {
     // serialized like appendHll — lost-update on the grid otherwise
     IndexCommit.withLock(s, path, "append.lock") {
       val (depth, width) = cmsMeta(s, path)
-      publishCms(s, path,
-        loadCms(s, path)
+      publish(s, path, "grid",
+        load(s, path, "CMS index", "grid")
           .unionByName(
             Sketches.cmsGridOf(Sketches.cmsTokensOf(batch), depth, width))
           .groupBy("i", "b").agg(sum("cnt").as("cnt")))
     }
-
-  private def publishCms(
-      s: SparkSession, path: String, grid: DataFrame): Long = {
-    val id = IndexCommit.reserve(s, path)
-    grid.write.mode("overwrite")
-      .parquet(s"${IndexCommit.versionDir(path, id)}/grid")
-    IndexCommit.commit(s, path, id)
-    id
-  }
-
-  private def loadCms(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${IndexCommit.currentDir(s, path).getOrElse(
-      sys.error(s"no committed CMS index under $path"))}/grid")
 
   /** Estimate the probe tokens' counts off the CURRENT committed grid
     * — identical rows to [[Sketches.cmsHeavyHitters]]'s probe stage
@@ -145,7 +125,7 @@ object SketchIndex {
     */
   def cmsProbe(s: SparkSession, path: String, top: DataFrame): DataFrame = {
     val (depth, width) = cmsMeta(s, path)
-    Sketches.cmsProbe(loadCms(s, path), top, depth, width)
+    Sketches.cmsProbe(load(s, path, "CMS index", "grid"), top, depth, width)
   }
 
   // ---- KMV ----------------------------------------------------------
@@ -161,15 +141,13 @@ object SketchIndex {
     IndexCommit.writeTextSidecar(s, s"$path/meta", Seq(k.toString))
 
   private def kmvK(s: SparkSession, path: String): Int =
-    if (isLegacyMetaDir(s, path))
-      s.read.parquet(s"$path/meta").collect().head.getAs[Int]("k")
-    else IndexCommit.readTextSidecar(s, s"$path/meta").head.toInt
+    IndexCommit.readTextSidecar(s, s"$path/meta", "k").head.toInt
 
   def buildKmv(s: SparkSession, docs: DataFrame, path: String,
       k: Int = 64): Long = {
     require(k >= 2, s"KMV needs k >= 2, got $k")
     writeKmvMeta(s, path, k)
-    publishKmv(s, path,
+    publish(s, path, "minima",
       Sketches.kmvMinima(Sketches.kmvHashesOf(docs), k).select("source", "h"))
   }
 
@@ -180,9 +158,9 @@ object SketchIndex {
     // serialized like appendHll — lost-update on the minima otherwise
     IndexCommit.withLock(s, path, "append.lock") {
       val k = kmvK(s, path)
-      publishKmv(s, path,
+      publish(s, path, "minima",
         Sketches.kmvMinima(
-          loadKmv(s, path)
+          load(s, path, "KMV index", "minima")
             .unionByName(
               Sketches.kmvMinima(Sketches.kmvHashesOf(batch), k)
                 .select("source", "h"))
@@ -190,24 +168,12 @@ object SketchIndex {
           .select("source", "h"))
     }
 
-  private def publishKmv(
-      s: SparkSession, path: String, minima: DataFrame): Long = {
-    val id = IndexCommit.reserve(s, path)
-    minima.write.mode("overwrite")
-      .parquet(s"${IndexCommit.versionDir(path, id)}/minima")
-    IndexCommit.commit(s, path, id)
-    id
-  }
-
-  private def loadKmv(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"${IndexCommit.currentDir(s, path).getOrElse(
-      sys.error(s"no committed KMV index under $path"))}/minima")
-
   /** Finalize the CURRENT committed minima — identical rows to
     * [[Sketches.kmvDistinctTokens]] over everything ever folded in.
     */
   def kmvSketch(s: SparkSession, path: String): DataFrame = {
     val k = kmvK(s, path)
-    Sketches.kmvFinalize(Sketches.kmvMinima(loadKmv(s, path), k), k)
+    Sketches.kmvFinalize(
+      Sketches.kmvMinima(load(s, path, "KMV index", "minima"), k), k)
   }
 }

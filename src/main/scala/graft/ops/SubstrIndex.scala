@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,33 +50,17 @@ object SubstrIndex {
 
   /** Window width frozen at build time.
     *
-    * Unlike [[LshIndex.readMeta]] / [[ClusterIndex.layout]], there is
-    * deliberately NO legacy-parquet branch here: SubstrIndex first
-    * shipped TOGETHER WITH the text-sidecar format (and
-    * [[writeSegment]] has written the per-segment `dfs` sidecars that
-    * [[stats]]/[[probe]] read since its first release), so no older
-    * on-disk form was ever persisted — a directory at `meta` or a
-    * missing `dfs` dir is corruption, not a legacy index, and the
-    * loud error below is the correct answer. The siblings carry
-    * their fallbacks because indexes of THEIR pre-sidecar layouts
-    * exist on disk; adding a reader for a layout that never existed
-    * would silently accept corrupt state instead.
+    * Unlike [[LshIndex.readMeta]] / [[ClusterIndex.layout]], the read
+    * names NO legacy parquet columns: SubstrIndex first shipped
+    * TOGETHER WITH the text-sidecar format (and [[writeSegment]] has
+    * written the per-segment `dfs` sidecars that [[stats]]/[[probe]]
+    * read since its first release), so no older on-disk form was ever
+    * persisted — a directory at `meta` or a missing `dfs` dir is
+    * corruption, not a legacy index, and
+    * [[IndexCommit.readTextSidecar]] rejects the directory loudly.
     */
-  def width(s: SparkSession, path: String): Int = {
-    val p = new Path(s"$path/meta")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.getFileStatus(p).isDirectory,
-      s"$p is a directory, not a SubstrIndex meta sidecar — no legacy " +
-        "SubstrIndex layout ever shipped, so this index is corrupt " +
-        "(or not a SubstrIndex); rebuild it")
-    IndexCommit.readTextSidecar(s, p.toString).head.toInt
-  }
-
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val ids = IndexCommit.liveIds(s, path)
-    require(ids.nonEmpty, s"no committed substring index segment at $path")
-    ids.map(IndexCommit.versionDir(path, _))
-  }
+  def width(s: SparkSession, path: String): Int =
+    IndexCommit.readTextSidecar(s, s"$path/meta").head.toInt
 
   /** Fold every live delta segment into ONE full segment (`_FULL`
     * marker, [[IndexCommit.commitFull]]'s concurrent-append guard).
@@ -106,27 +89,24 @@ object SubstrIndex {
     IndexCommit.maybeCompactWith(s, path, maxSegments)(compact(s, path))
 
   private def writeSegment(
-      s: SparkSession, path: String, docs: DataFrame, w: Int): Long = {
-    val id = IndexCommit.reserve(s, path)
-    val seg = IndexCommit.versionDir(path, id)
-    Dedup.windowHashes(docs, w)
-      .write.mode("overwrite").parquet(s"$seg/wins")
-    // per-segment window document frequencies, pre-aggregated at
-    // publish: segments are doc-disjoint, so dfs ADD across segments
-    // — [[probe]]'s committed side and [[stats]]' df aggregation read
-    // these instead of recounting the window relation. Derived from
-    // the READ-BACK wins parquet, never a second tokenize.
-    s.read.parquet(s"$seg/wins").groupBy("wh")
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .write.mode("overwrite").parquet(s"$seg/dfs")
-    // a cheap second pass: doc_id-only column-pruned scan (short docs
-    // carry no windows, so the doc relation is not derivable from
-    // wins) — never a second tokenize
-    docs.select(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$seg/docs")
-    IndexCommit.commit(s, path, id)
-    id
-  }
+      s: SparkSession, path: String, docs: DataFrame, w: Int): Long =
+    IndexCommit.publish(s, path) { (_, seg) =>
+      Dedup.windowHashes(docs, w)
+        .write.mode("overwrite").parquet(s"$seg/wins")
+      // per-segment window document frequencies, pre-aggregated at
+      // publish: segments are doc-disjoint, so dfs ADD across segments
+      // — [[probe]]'s committed side and [[stats]]' df aggregation read
+      // these instead of recounting the window relation. Derived from
+      // the READ-BACK wins parquet, never a second tokenize.
+      s.read.parquet(s"$seg/wins").groupBy("wh")
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .write.mode("overwrite").parquet(s"$seg/dfs")
+      // a cheap second pass: doc_id-only column-pruned scan (short docs
+      // carry no windows, so the doc relation is not derivable from
+      // wins) — never a second tokenize
+      docs.select(col("doc_id"))
+        .write.mode("overwrite").parquet(s"$seg/docs")
+    }
 
   /** Build the index from the corpus at `dir` (optionally restricted
     * by `docFilter`): the one corpus tokenization. Destructive reset
@@ -160,7 +140,7 @@ object SubstrIndex {
   def stats(
       s: SparkSession, path: String,
       maxDocFreq: Int = 1, maxSpanTokens: Int = 50): DataFrame = {
-    val segs = segDirs(s, path)
+    val segs = IndexCommit.liveDirs(s, path, "substring index segment")
     // df = sum of the pre-aggregated per-segment dfs (doc-disjoint
     // segments → exact), not a recount of the full window relation
     Dedup.statsWithDf(
@@ -195,7 +175,7 @@ object SubstrIndex {
       s: SparkSession, path: String, batch: DataFrame,
       maxDocFreq: Int = 1, maxSpanTokens: Int = 50): DataFrame = {
     val w0 = width(s, path)
-    val segs = segDirs(s, path)
+    val segs = IndexCommit.liveDirs(s, path, "substring index segment")
     val scope = new CacheScope
     try {
       // cached: the batch windows feed the df combine AND the

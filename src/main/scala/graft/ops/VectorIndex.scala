@@ -64,28 +64,27 @@ object VectorIndex {
       import s.implicits._
       cents.toDF("cell", "cv").coalesce(1)
         .write.mode("overwrite").parquet(s"$path/centroids")
-      val id = IndexCommit.reserve(s, path)
-      val dir = IndexCommit.versionDir(path, id)
-      Similarity.assignCells(emb, "v", cents, 1)
+      writeSegment(s, path, emb, cents)
+    } finally { emb.unpersist(); () }
+  }
+
+  /** Publish one segment: `vecs` (vec_id, v) assigned to the centroids
+    * `cents`, as the float `vectors` and the SQ8 `codes` under ONE
+    * marker, so the two serving copies can never drift apart.
+    */
+  private def writeSegment(
+      s: SparkSession, path: String, vecs: DataFrame,
+      cents: Seq[(Long, Seq[Double])]): Long =
+    IndexCommit.publish(s, path) { (_, dir) =>
+      Similarity.assignCells(vecs, "v", cents, 1)
         .select("vec_id", "cell", "v")
         .write.mode("overwrite").parquet(s"$dir/vectors")
       // SQ8 serving copy: same assignment, int8 codes instead of
       // floats — 4x smaller, and the ADC probe reads ONLY this file
-      Similarity.assignCells(Similarity.withInt8Codes(emb), "v", cents, 1)
+      Similarity.assignCells(Similarity.withInt8Codes(vecs), "v", cents, 1)
         .select("vec_id", "cell", "scale", "q")
         .write.mode("overwrite").parquet(s"$dir/codes")
-      IndexCommit.commit(s, path, id)
-    } finally { emb.unpersist(); () }
-  }
-
-  /** Committed segment dirs — loud failure on an index with no
-    * committed segment (never built, or killed mid-build).
-    */
-  private def segDirs(s: SparkSession, path: String): Seq[String] = {
-    val ids = IndexCommit.liveIds(s, path)
-    require(ids.nonEmpty, s"no committed vector index segment at $path")
-    ids.map(IndexCommit.versionDir(path, _))
-  }
+    }
 
   /** Fold every live delta segment into ONE full segment (`_FULL`
     * explicit-supersedes protocol, [[IndexCommit.commitFull]]) — the
@@ -97,14 +96,7 @@ object VectorIndex {
     * [[IndexCommit.vacuumSuperseded]] to reclaim superseded deltas.
     */
   def compact(s: SparkSession, path: String): Long =
-    IndexCommit.commitFull(s, path) { (segs, dir) =>
-      // distinct: crash-window duplicate segments collapse at compact
-      // ([[LshIndex.compact]]'s rationale)
-      s.read.parquet(segs.map(_ + "/vectors"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/vectors")
-      s.read.parquet(segs.map(_ + "/codes"): _*).distinct()
-        .write.mode("overwrite").parquet(s"$dir/codes")
-    }
+    IndexCommit.compactDistinct(s, path, "vectors", "codes")
 
   /** Compact at a live-segment cadence ([[LshIndex.maybeCompact]]). */
   def maybeCompact(
@@ -128,21 +120,9 @@ object VectorIndex {
     * update. Vectors and codes publish under ONE marker, so the two
     * serving copies can never drift apart.
     */
-  def append(s: SparkSession, path: String, batch: DataFrame): Unit = {
-    val cents = readCentroids(s, path)
-    val id = IndexCommit.reserve(s, path)
-    val dir = IndexCommit.versionDir(path, id)
-    Similarity.assignCells(
-      batch.select(col("vec_id"), col("v")), "v", cents, 1)
-      .select("vec_id", "cell", "v")
-      .write.mode("overwrite").parquet(s"$dir/vectors")
-    Similarity.assignCells(
-      Similarity.withInt8Codes(batch.select(col("vec_id"), col("v"))),
-      "v", cents, 1)
-      .select("vec_id", "cell", "scale", "q")
-      .write.mode("overwrite").parquet(s"$dir/codes")
-    IndexCommit.commit(s, path, id)
-  }
+  def append(s: SparkSession, path: String, batch: DataFrame): Unit =
+    writeSegment(s, path, batch.select(col("vec_id"), col("v")),
+      readCentroids(s, path))
 
   /** The persisted coarse quantizer, driver-resident (numCells rows by
     * construction).
@@ -166,7 +146,8 @@ object VectorIndex {
     val cents = readCentroids(s, path)
     val probes = Similarity.assignCells(
       queries.select(col("query_id"), col("qv")), "qv", cents, nprobe)
-    val members = s.read.parquet(segDirs(s, path).map(_ + "/vectors"): _*)
+    val members = s.read.parquet(IndexCommit.liveDirs(
+      s, path, "vector index segment").map(_ + "/vectors"): _*)
     val w = Window.partitionBy("query_id")
       .orderBy(col("score").desc, col("vec_id"))
     probes.join(members, "cell")
@@ -194,7 +175,8 @@ object VectorIndex {
     val cents = readCentroids(s, path)
     val probes = Similarity.assignCells(
       queries.select(col("query_id"), col("qv")), "qv", cents, nprobe)
-    val members = s.read.parquet(segDirs(s, path).map(_ + "/codes"): _*)
+    val members = s.read.parquet(IndexCommit.liveDirs(
+      s, path, "vector index segment").map(_ + "/codes"): _*)
       .select(col("vec_id"), col("cell"),
         expr("transform(q, x -> CAST(x AS DOUBLE))").as("qd"))
     val w = Window.partitionBy("query_id")

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.ops.IndexCommit
+
 /** Applied-batch-id ledger: zero-length markers under
   * `<root>/stream_ledger/<batchId>` — the [[graft.ops.IndexCommit]]
   * marker economics applied to micro-batch ids. Every stream whose
@@ -85,19 +87,63 @@ private[graft] object BatchLedger {
     */
   def ingest(
       s: SparkSession, indexPath: String, batchId: Long,
-      batchIsEmpty: => Boolean,
+      batchIsEmpty: => Boolean, family: Family,
       maxSegments: Option[Int], vacuumKeepGens: Option[Int],
       ledgerKeepLast: Int = DefaultKeepLast)(
       append: => Unit)(
-      maybeCompact: Int => Option[Long],
-      vacuum: (SparkSession, String, Int) => Seq[Long]): Unit =
+      maybeCompact: Int => Option[Long]): Unit = {
+    family.check(maxSegments, vacuumKeepGens, ledgerKeepLast)
     appliedOnce(s, indexPath, batchId) {
       if (!batchIsEmpty) {
         append
-        cadence(s, indexPath, maxSegments, vacuumKeepGens,
-          ledgerKeepLast)(maybeCompact, vacuum)
+        cadence(s, indexPath, family, maxSegments, vacuumKeepGens,
+          ledgerKeepLast)(maybeCompact)
       }
     }
+  }
+
+  /** How an index family is maintained on the [[cadence]]: the vacuum
+    * it runs after a compact, and the smallest compact bound and
+    * vacuum keep that its `maybeCompact` and `vacuum` accept.
+    */
+  final case class Family(
+      vacuum: (SparkSession, String, Int) => Seq[Long],
+      minCompact: Int, minKeep: Int) {
+
+    /** Reject maintenance values the cadence would refuse only AFTER
+      * a batch is appended: the append commits, the cadence throws,
+      * the ledger never marks the id, and every restart appends the
+      * batch again and dies the same way. [[ingest]] runs this before
+      * its append, and every maintain, ingest or export entry point
+      * before its query starts.
+      */
+    def check(
+        compactAt: Option[Int], vacuumKeep: Option[Int],
+        ledgerKeepLast: Int = DefaultKeepLast): Unit = {
+      compactAt.foreach(n => require(n >= minCompact,
+        s"compact cadence must be at least $minCompact, got $n"))
+      vacuumKeep.foreach(k => require(k >= minKeep,
+        s"vacuum keep must be at least $minKeep, got $k"))
+      require(ledgerKeepLast >= 1, "ledgerKeepLast must be positive")
+    }
+  }
+
+  /** Segment-union indexes: a compact needs two live segments, and
+    * the generations-graced [[graft.ops.IndexCommit.vacuumSuperseded]]
+    * may keep none.
+    */
+  val Segments = Family(IndexCommit.vacuumSuperseded, 2, 0)
+
+  /** [[graft.ops.ClusterIndex]] versions: a compact needs two versions;
+    * the positional [[graft.ops.IndexCommit.vacuum]] (safe right after
+    * a compact, whose version is FULL) keeps at least one.
+    */
+  val ClusterVersions = Family(IndexCommit.vacuum, 2, 1)
+
+  /** [[graft.ops.CorpusSnapshot]] delta chains: a compact may fire at
+    * one delta; the positional vacuum keeps at least one version.
+    */
+  val SnapshotChain = Family(IndexCommit.vacuum, 1, 1)
 
   /** Retire markers older than the newest `keepLast` batch ids.
     *
@@ -136,24 +182,19 @@ private[graft] object BatchLedger {
   /** The compact-cadence tail of [[ingest]], reusable where the batch
     * body has extra legs (the probe-then-ingest streams, the export
     * stream): fire the index's `maybeCompact` at the live-segment
-    * bound, then `vacuum` with `vacuumKeepGens`, then the marker
-    * prune — all three maintenance legs share one cadence so a
+    * bound, then the family's vacuum with `vacuumKeepGens`, then the
+    * marker prune — all three maintenance legs share one cadence so a
     * long-lived stream bounds segments, superseded disk, AND ledger
-    * file count together. Segment-union indexes pass the
-    * generations-graced [[graft.ops.IndexCommit.vacuumSuperseded]];
-    * the version-publishing streams pass
-    * [[graft.ops.IndexCommit.vacuum]], safe right after a compact
-    * because the compact's version is FULL.
+    * file count together.
     */
   def cadence(
-      s: SparkSession, indexPath: String,
+      s: SparkSession, indexPath: String, family: Family,
       maxSegments: Option[Int], vacuumKeepGens: Option[Int],
       ledgerKeepLast: Int = DefaultKeepLast)(
-      maybeCompact: Int => Option[Long],
-      vacuum: (SparkSession, String, Int) => Seq[Long]): Unit =
+      maybeCompact: Int => Option[Long]): Unit =
     maxSegments.foreach { ms =>
       maybeCompact(ms).foreach { _ =>
-        vacuumKeepGens.foreach(vacuum(s, indexPath, _))
+        vacuumKeepGens.foreach(family.vacuum(s, indexPath, _))
         prune(s, indexPath, ledgerKeepLast)
       }
     }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{IndexCommit, VectorIndex}
+import graft.ops.VectorIndex
 
 /** Continuous ANN retrieval: arriving query vectors probe a persisted
   * IVF index ([[graft.ops.VectorIndex]]) one micro-batch at a time —
@@ -74,10 +74,12 @@ object StreamingAnn {
       trigger: Trigger = Trigger.AvailableNow(),
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
       applyIngestBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
     }
+  }
 
   /** One ingestion micro-batch ([[StreamingDedup.applyIngestBatch]]'s
     * shape). Package-visible for synchronous spec driving.
@@ -90,10 +92,10 @@ object StreamingAnn {
       vacuumKeepGens: Option[Int] = Some(1),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit =
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
-      batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
+      batch.isEmpty, BatchLedger.Segments, maxSegments, vacuumKeepGens,
+      ledgerKeepLast)(
       VectorIndex.append(batch.sparkSession, indexPath, batch))(
-      VectorIndex.maybeCompact(batch.sparkSession, indexPath, _),
-      IndexCommit.vacuumSuperseded)
+      VectorIndex.maybeCompact(batch.sparkSession, indexPath, _))
 
   /** The accumulated results table across every micro-batch so far;
     * empty (typed) before the first micro-batch commits — see

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{ClusterIndex, IndexCommit}
+import graft.ops.ClusterIndex
 
 /** Continuous dedup INGESTION: arriving documents are folded into the
   * persisted [[graft.ops.ClusterIndex]] one micro-batch at a time —
@@ -72,11 +72,13 @@ object StreamingCluster {
       maxVersions: Option[Int] = Some(DefaultMaxVersions),
       vacuumKeep: Option[Int] = Some(DefaultVacuumKeep),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.ClusterVersions.check(maxVersions, vacuumKeep, ledgerKeepLast)
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       applyBatch(batch, indexPath, threshold, batchId, maxVersions,
         vacuumKeep, ledgerKeepLast)
     }
+  }
 
   /** One micro-batch: skip ids the ledger already holds (exactly-once
     * under replay), skip empty batches (an empty append would publish
@@ -98,9 +100,9 @@ object StreamingCluster {
     // the compact cadence caps resolution at maxVersions sidecar reads;
     // when a compact fired the newest version is FULL, so the bounded
     // vacuum is safe and caps disk at maxVersions + vacuumKeep versions
-    BatchLedger.ingest(s, indexPath, batchId, batch.isEmpty, maxVersions,
-      vacuumKeep, ledgerKeepLast)(
+    BatchLedger.ingest(s, indexPath, batchId, batch.isEmpty,
+      BatchLedger.ClusterVersions, maxVersions, vacuumKeep, ledgerKeepLast)(
       ClusterIndex.append(s, indexPath, batch, threshold))(
-      ClusterIndex.maybeCompact(s, indexPath, _), IndexCommit.vacuum)
+      ClusterIndex.maybeCompact(s, indexPath, _))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{CacheScope, IndexCommit, LshIndex}
+import graft.ops.{CacheScope, LshIndex}
 
 /** Continuous near-duplicate detection: arriving documents probe a
   * persisted MinHash-LSH index ([[graft.ops.LshIndex]]) one micro-batch
@@ -129,10 +129,12 @@ object StreamingDedup {
       trigger: Trigger = Trigger.AvailableNow(),
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       applyIngestBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
     }
+  }
 
   /** Continuous PROBE-THEN-INGEST in one stream — the production
     * shape [[graft.ops.LshIndex.append]]'s docs describe: each
@@ -167,6 +169,7 @@ object StreamingDedup {
       guardEvery: Int = DefaultGuardEvery
   ): StreamingQuery = {
     requireGuardEvery(guardMaxDocFreq, guardEvery)
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       applyProbeIngestBatch(batch, indexPath, outPath, threshold,
         batchId, maxSegments, vacuumKeepGens)
@@ -193,6 +196,7 @@ object StreamingDedup {
       vacuumKeepGens: Option[Int] = Some(1),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit = {
     val s = batch.sparkSession
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens, ledgerKeepLast)
     BatchLedger.appliedOnce(s, indexPath, batchId) {
       val scope = new CacheScope
       try {
@@ -202,9 +206,8 @@ object StreamingDedup {
       } finally scope.release()
       if (!batch.isEmpty) {
         LshIndex.append(s, indexPath, batch)
-        BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-          ledgerKeepLast)(LshIndex.maybeCompact(s, indexPath, _),
-          IndexCommit.vacuumSuperseded)
+        BatchLedger.cadence(s, indexPath, BatchLedger.Segments, maxSegments,
+          vacuumKeepGens, ledgerKeepLast)(LshIndex.maybeCompact(s, indexPath, _))
       }
     }
   }
@@ -227,10 +230,10 @@ object StreamingDedup {
       vacuumKeepGens: Option[Int] = Some(1),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit =
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
-      batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
+      batch.isEmpty, BatchLedger.Segments, maxSegments, vacuumKeepGens,
+      ledgerKeepLast)(
       LshIndex.append(batch.sparkSession, indexPath, batch))(
-      LshIndex.maybeCompact(batch.sparkSession, indexPath, _),
-      IndexCommit.vacuumSuperseded)
+      LshIndex.maybeCompact(batch.sparkSession, indexPath, _))
 
   /** One micro-batch: probe and write the batch's pair directory.
     * Returns the pair count. Package-visible so the spec can drive

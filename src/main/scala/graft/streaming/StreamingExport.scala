@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{ClusterIndex, CorpusSnapshot, Filtering, IndexCommit,
-  SigIndex, TrainPrep}
+import graft.ops.{ClusterIndex, CorpusSnapshot, Filtering, SigIndex,
+  TrainPrep}
 
 /** The composed last mile AS A STREAM: the ingestion halves
   * ([[StreamingIngest]], [[StreamingCluster]], [[StreamingLm]],
@@ -80,12 +80,14 @@ object StreamingExport {
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast,
       lookupMaxIds: Int = DefaultLookupMaxIds,
       maxBatchRows: Long = SigIndex.DefaultMaxProbeBatchRows
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.SnapshotChain.check(maxChain, vacuumKeep, ledgerKeepLast)
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       applyBatch(batch, clusterIdx, knIdx, snapRoot, batchId, headMax,
         middleMax, nShards, maxBytes, maxChain, vacuumKeep,
         ledgerKeepLast, lookupMaxIds, maxBatchRows)
     }
+  }
 
   /** One export micro-batch (see [[exportStream]]). Package-visible
     * for synchronous spec driving.
@@ -106,6 +108,7 @@ object StreamingExport {
       lookupMaxIds: Int = DefaultLookupMaxIds,
       maxBatchRows: Long = SigIndex.DefaultMaxProbeBatchRows): Unit = {
     val s = batch.sparkSession
+    BatchLedger.SnapshotChain.check(maxChain, vacuumKeep, ledgerKeepLast)
     BatchLedger.appliedOnce(s, snapRoot, batchId) {
       // the batch lineage feeds six actions (emptiness, the size
       // precondition's bounded count, ids, LM gate, split, survivor
@@ -131,10 +134,9 @@ object StreamingExport {
           if (!survivors.isEmpty) {
             StreamingSnapshot.publish(s, survivors, snapRoot, nShards,
               maxBytes)
-            BatchLedger.cadence(s, snapRoot, maxChain, vacuumKeep,
-              ledgerKeepLast)(
-              CorpusSnapshot.maybeCompact(s, snapRoot, _, nShards, maxBytes),
-              IndexCommit.vacuum)
+            BatchLedger.cadence(s, snapRoot, BatchLedger.SnapshotChain,
+              maxChain, vacuumKeep, ledgerKeepLast)(
+              CorpusSnapshot.maybeCompact(s, snapRoot, _, nShards, maxBytes))
           }
         }
       } finally {

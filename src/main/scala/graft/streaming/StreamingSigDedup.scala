@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{IndexCommit, PerceptualHash, SigIndex}
+import graft.ops.{PerceptualHash, SigIndex}
 
 /** Continuous MEDIA near-duplicate detection: arriving clips probe a
   * persisted perceptual-signature index ([[graft.ops.SigIndex]]) one
@@ -97,11 +97,13 @@ object StreamingSigDedup {
       sigsOf: DataFrame => DataFrame = PerceptualHash.signatures,
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(clips, checkpointDir, trigger) { (batch, batchId) =>
       applyIngestBatch(batch, indexPath, batchId, sigsOf, maxSegments,
         vacuumKeepGens)
     }
+  }
 
   /** One ingestion micro-batch: skip ids the ledger holds
     * (exactly-once under replay), skip empty batches (an empty append
@@ -121,10 +123,10 @@ object StreamingSigDedup {
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast
   ): Unit =
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
-      batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
+      batch.isEmpty, BatchLedger.Segments, maxSegments, vacuumKeepGens,
+      ledgerKeepLast)(
       SigIndex.append(batch.sparkSession, indexPath, sigsOf(batch)))(
-      SigIndex.maybeCompact(batch.sparkSession, indexPath, _),
-      IndexCommit.vacuumSuperseded)
+      SigIndex.maybeCompact(batch.sparkSession, indexPath, _))
 
   /** Continuous PROBE-THEN-INGEST in one stream — the media twin of
     * [[StreamingDedup.probeAndMaintainStream]]: each micro-batch is
@@ -147,11 +149,13 @@ object StreamingSigDedup {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1),
       maxBandFreq: Option[Long] = None
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(clips, checkpointDir, trigger) { (batch, batchId) =>
       applyProbeIngestBatch(batch, indexPath, outPath, maxHamming,
         batchId, sigsOf, maxSegments, vacuumKeepGens, maxBandFreq)
     }
+  }
 
   /** One probe-then-ingest micro-batch (see
     * [[probeAndMaintainStream]]). Package-visible for synchronous
@@ -169,6 +173,7 @@ object StreamingSigDedup {
       maxBandFreq: Option[Long] = None,
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit = {
     val s = batch.sparkSession
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens, ledgerKeepLast)
     BatchLedger.appliedOnce(s, indexPath, batchId) {
       // one decode for both legs: the cached signatures feed the
       // probe's batch side AND the appended segment
@@ -180,9 +185,9 @@ object StreamingSigDedup {
           .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         if (!batch.isEmpty) {
           SigIndex.append(s, indexPath, sigs)
-          BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-            ledgerKeepLast)(SigIndex.maybeCompact(s, indexPath, _),
-            IndexCommit.vacuumSuperseded)
+          BatchLedger.cadence(s, indexPath, BatchLedger.Segments,
+            maxSegments, vacuumKeepGens, ledgerKeepLast)(
+            SigIndex.maybeCompact(s, indexPath, _))
         }
       } finally sigs.unpersist()
     }

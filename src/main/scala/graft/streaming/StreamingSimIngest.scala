@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.{IndexCommit, SimSigIndex}
+import graft.ops.SimSigIndex
 
 /** Continuous EMBEDDING ingestion: arriving (vec_id, v) vectors are
   * signed batch-side and folded into the persisted hyperplane-
@@ -38,10 +38,12 @@ object StreamingSimIngest {
       trigger: Trigger = Trigger.AvailableNow(),
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1)
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
       applyBatch(batch, indexPath, batchId, maxSegments, vacuumKeepGens)
     }
+  }
 
   /** One micro-batch: ledger-skip replayed ids, skip empty batches,
     * else [[SimSigIndex.append]] (batch-only signing under the frozen
@@ -57,10 +59,10 @@ object StreamingSimIngest {
       vacuumKeepGens: Option[Int] = Some(1),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit =
     BatchLedger.ingest(batch.sparkSession, indexPath, batchId,
-      batch.isEmpty, maxSegments, vacuumKeepGens, ledgerKeepLast)(
+      batch.isEmpty, BatchLedger.Segments, maxSegments, vacuumKeepGens,
+      ledgerKeepLast)(
       SimSigIndex.append(batch.sparkSession, indexPath, batch))(
-      SimSigIndex.maybeCompact(batch.sparkSession, indexPath, _),
-      IndexCommit.vacuumSuperseded)
+      SimSigIndex.maybeCompact(batch.sparkSession, indexPath, _))
 
   /** Continuous PROBE-THEN-INGEST in one stream — the embedding twin
     * of [[StreamingDedup.probeAndMaintainStream]] (text) and
@@ -96,11 +98,13 @@ object StreamingSimIngest {
       maxSegments: Option[Int] = Some(DefaultMaxSegments),
       vacuumKeepGens: Option[Int] = Some(1),
       maxBandFreq: Option[Long] = None
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens)
     MicroBatch.start(vectors, checkpointDir, trigger) { (batch, batchId) =>
       applyProbeIngestBatch(batch, indexPath, outPath, threshold,
         numBands, batchId, maxSegments, vacuumKeepGens, maxBandFreq)
     }
+  }
 
   /** One probe-then-ingest micro-batch (see
     * [[probeAndMaintainStream]]). Package-visible for synchronous
@@ -118,6 +122,7 @@ object StreamingSimIngest {
       maxBandFreq: Option[Long] = None,
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast): Unit = {
     val s = batch.sparkSession
+    BatchLedger.Segments.check(maxSegments, vacuumKeepGens, ledgerKeepLast)
     BatchLedger.appliedOnce(s, indexPath, batchId) {
       // persist: the micro-batch lineage feeds at least three actions
       // (requireProbeSized's bounded count, the probe/pair write, the
@@ -134,9 +139,9 @@ object StreamingSimIngest {
           .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         if (!b.isEmpty) {
           SimSigIndex.append(s, indexPath, b)
-          BatchLedger.cadence(s, indexPath, maxSegments, vacuumKeepGens,
-            ledgerKeepLast)(SimSigIndex.maybeCompact(s, indexPath, _),
-            IndexCommit.vacuumSuperseded)
+          BatchLedger.cadence(s, indexPath, BatchLedger.Segments,
+            maxSegments, vacuumKeepGens, ledgerKeepLast)(
+            SimSigIndex.maybeCompact(s, indexPath, _))
         }
       } finally {
         b.unpersist()

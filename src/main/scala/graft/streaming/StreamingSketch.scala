@@ -99,20 +99,16 @@ object StreamingSketch {
     * is stage-then-rename, so a torn write reads as absent); streams
     * started before the text sidecar froze it as a one-row parquet
     * DIR, read via `legacyCols` — a zero-row dir (that format's torn
-    * write) also reads as None.
+    * write) reads as no values, hence None.
     */
   private def readMetaVals(
       s: SparkSession, outPath: String,
-      legacyCols: Seq[String]): Option[Seq[Int]] = {
+      legacyCols: String*): Option[Seq[Int]] = {
     val p = new org.apache.hadoop.fs.Path(s"$outPath/meta")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else if (fs.getFileStatus(p).isDirectory)
-      (try s.read.parquet(p.toString).collect().headOption
-       catch { case _: org.apache.spark.sql.AnalysisException => None })
-        .map(r => legacyCols.map(c => r.getAs[Int](c)))
-    else Some(graft.ops.IndexCommit.readTextSidecar(s, p.toString)
-      .map(_.toInt))
+    else Some(graft.ops.IndexCommit.readTextSidecar(
+      s, p.toString, legacyCols: _*).map(_.toInt)).filter(_.nonEmpty)
   }
 
   private def writeMetaVals(
@@ -122,14 +118,14 @@ object StreamingSketch {
 
   private[graft] def cmsMeta(
       s: SparkSession, outPath: String): (Int, Int) = {
-    val v = readMetaVals(s, outPath, Seq("depth", "width")).getOrElse(
+    val v = readMetaVals(s, outPath, "depth", "width").getOrElse(
       sys.error(s"no CMS stream meta under $outPath — nothing written yet"))
     (v(0), v(1))
   }
 
   private def ensureCmsMeta(
       s: SparkSession, outPath: String, depth: Int, width: Int): Unit =
-    readMetaVals(s, outPath, Seq("depth", "width")) match {
+    readMetaVals(s, outPath, "depth", "width") match {
       case Some(Seq(d0, w0)) =>
         require(d0 == depth && w0 == width,
           s"CMS stream at $outPath was started with shape ${d0}x$w0; " +
@@ -178,13 +174,13 @@ object StreamingSketch {
     }
 
   private[graft] def kmvK(s: SparkSession, outPath: String): Int =
-    readMetaVals(s, outPath, Seq("k")).getOrElse(
+    readMetaVals(s, outPath, "k").getOrElse(
       sys.error(s"no KMV stream meta under $outPath — nothing written yet")
     ).head
 
   private def ensureKmvMeta(
       s: SparkSession, outPath: String, k: Int): Unit =
-    readMetaVals(s, outPath, Seq("k")) match {
+    readMetaVals(s, outPath, "k") match {
       case Some(Seq(k0)) =>
         require(k0 == k,
           s"KMV stream at $outPath was started with k=$k0; " +

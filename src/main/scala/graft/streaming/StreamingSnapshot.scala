@@ -58,11 +58,13 @@ object StreamingSnapshot {
       maxChain: Option[Int] = Some(DefaultMaxChain),
       vacuumKeep: Option[Int] = Some(DefaultVacuumKeep),
       ledgerKeepLast: Int = BatchLedger.DefaultKeepLast
-  ): StreamingQuery =
+  ): StreamingQuery = {
+    BatchLedger.SnapshotChain.check(maxChain, vacuumKeep, ledgerKeepLast)
     MicroBatch.start(docs, checkpointDir, trigger) { (batch, batchId) =>
       applyBatch(batch, root, nShards, maxBytes, batchId, maxChain,
         vacuumKeep, ledgerKeepLast)
     }
+  }
 
   /** One micro-batch: skip ledgered ids and empty batches (an empty
     * publish would land a contentless version per replayed empty
@@ -84,11 +86,10 @@ object StreamingSnapshot {
     // the compact cadence caps the resolve chain at maxChain deltas; a
     // compact's version is FULL, so the bounded vacuum after it is safe
     // and caps disk at maxChain + vacuumKeep versions
-    BatchLedger.ingest(s, root, batchId, batch.isEmpty, maxChain,
-      vacuumKeep, ledgerKeepLast)(
+    BatchLedger.ingest(s, root, batchId, batch.isEmpty,
+      BatchLedger.SnapshotChain, maxChain, vacuumKeep, ledgerKeepLast)(
       publish(s, batch.select("doc_id", "text"), root, nShards, maxBytes))(
-      CorpusSnapshot.maybeCompact(s, root, _, nShards, maxBytes),
-      IndexCommit.vacuum)
+      CorpusSnapshot.maybeCompact(s, root, _, nShards, maxBytes))
   }
 
   /** Publish `docs` as the next version under `root`: FULL on a root

@@ -284,4 +284,62 @@ class IndexCommitSpec extends SparkSpec {
     IndexCommit.writeTextSidecar(spark, legacy, Seq("16"))
     assert(IndexCommit.readTextSidecar(spark, legacy) == Seq("16"))
   }
+
+  test("publish: a body that throws leaves no marker, and the id stays " +
+    "retired") {
+    val root = tmp("ic_publish")
+    val first = IndexCommit.publish(spark, root) { (_, dir) =>
+      spark.range(3).write.parquet(s"$dir/rel")
+    }
+    assert(IndexCommit.committedIds(spark, root) == Seq(first))
+    val current = IndexCommit.currentDir(spark, root)
+    var failedId = -1L
+    val e = intercept[IllegalStateException] {
+      IndexCommit.publish(spark, root) { (id, dir) =>
+        failedId = id
+        spark.range(5).write.parquet(s"$dir/rel")
+        throw new IllegalStateException("writer died")
+      }
+    }
+    assert(e.getMessage == "writer died")
+    assert(failedId > first)
+    assert(IndexCommit.committedIds(spark, root) == Seq(first),
+      "a failed body must commit no marker")
+    assert(IndexCommit.currentDir(spark, root) == current)
+    val next = IndexCommit.publish(spark, root) { (_, dir) =>
+      spark.range(7).write.parquet(s"$dir/rel")
+    }
+    assert(next > failedId, "the failed body's id is never reused")
+    assert(IndexCommit.committedIds(spark, root) == Seq(first, next))
+  }
+
+  test("readTextSidecar: pre-r13 parquet directories read through " +
+    "legacyCols; a directory without them is rejected") {
+    import spark.implicits._
+    val root = tmp("ic_legacy")
+    // one row with a null column (a CorpusSnapshot full-version
+    // lineage): non-null values only
+    Seq(("full", None: Option[Long])).toDF("kind", "parent")
+      .coalesce(1).write.parquet(s"$root/meta")
+    assert(IndexCommit.readTextSidecar(
+      spark, s"$root/meta", "kind", "parent") == Seq("full"))
+    Seq(("delta", Some(4L))).toDF("kind", "parent")
+      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+    assert(IndexCommit.readTextSidecar(
+      spark, s"$root/meta", "kind", "parent") == Seq("delta", "4"))
+    // many rows of one column (a ClusterIndex part list), row order
+    Seq(3, 0, 7).toDF("part").coalesce(1).write.parquet(s"$root/partlist")
+    assert(IndexCommit.readTextSidecar(spark, s"$root/partlist", "part")
+      == Seq("3", "0", "7"))
+    // zero rows: that format's torn write reads as nothing
+    Seq.empty[Int].toDF("k").coalesce(1).write.parquet(s"$root/empty")
+    assert(IndexCommit.readTextSidecar(spark, s"$root/empty", "k") == Nil)
+    new java.io.File(s"$root/bare").mkdirs()
+    assert(IndexCommit.readTextSidecar(spark, s"$root/bare", "k") == Nil)
+    // no legacy form known: the directory is rejected by name
+    val e = intercept[IllegalArgumentException] {
+      IndexCommit.readTextSidecar(spark, s"$root/partlist")
+    }
+    assert(e.getMessage.contains("is a directory, not a sidecar"))
+  }
 }

@@ -167,28 +167,29 @@ class JdbcStagingSpec extends SparkSpec {
     for ((update, insert) <- modes) {
       // the whole op, as the spreadsheet flow runs it: validate, plan,
       // stage and apply; returns the settled counts, the table after
-      // the merge and its digest, and V10's own jobs
+      // the merge and its digest, and the jobs of building the
+      // Importer (V1, then V10)
       def op(delta: DataFrame): ((Long, Long), Seq[Seq[Any]], Seq[Seq[Any]], Int) = {
         resetGroupTable(url)
         val (imp, init) = SparkEvents.during(spark)(
           new Importer(spark.read.jdbc(url, "t", props), delta,
-            table = "t", tablePk = Seq("id"), eagerValidate = false))
-        val (_, v10) = SparkEvents.during(spark)(imp.validateUniqueKeys())
+            table = "t", tablePk = Seq("id")))
         val (counts, write) = SparkEvents.during(spark) {
           val r = imp.run(update, insert)
           sink.write(r, delta, MergeSpec("t", imp.joinOn, imp.subset,
             insertUnmatched = insert, updateMatched = update))
           (r.rowCountUpdated, r.rowCountInserted)
         }
-        if (delta eq local) assert(init.jobs + v10.jobs + write.jobs == 0,
-          s"local delta ran Spark jobs: init ${init.jobs}, V10 ${v10.jobs}, write ${write.jobs}")
+        if (delta eq local) assert(init.jobs + write.jobs == 0,
+          s"local delta ran Spark jobs: init ${init.jobs}, write ${write.jobs}")
         (counts, query(url, "select id, a, b from t order by id"),
-          query(url, "select count(*), bit_xor(hash(id, a, b)) from t"), v10.jobs)
+          query(url, "select count(*), bit_xor(hash(id, a, b)) from t"), init.jobs)
       }
       val clue = s"run(update=$update, insert=$insert)"
       val (counts, table, digest, v10Local) = op(local)
       val (pqCounts, pqTable, pqDigest, v10Parquet) = op(fromParquet)
-      assert(v10Local == 0 && v10Parquet > 0, s"$clue V10 jobs $v10Local, $v10Parquet")
+      assert(v10Local == 0 && v10Parquet > 0,
+        s"$clue init (V1, V10) jobs $v10Local, $v10Parquet")
       assert(counts == ((if (update) 500L else 0L, if (insert) 501L else 0L)), clue)
       assert(pqCounts == counts, clue)
       assert(table == expectedTable(update, insert), clue)

@@ -6,8 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.ops.BloomIndex
-import graft.streaming.{StreamingDecontaminate, StreamingDedup}
+import graft.ops.{BloomIndex, IndexCommit, LshIndex}
+import graft.streaming.{BatchLedger, StreamingAnn, StreamingCluster,
+  StreamingDecontaminate, StreamingDedup, StreamingExport,
+  StreamingSigDedup, StreamingSimIngest, StreamingSnapshot}
 
 /** Pins for the shared micro-batch scaffolding: batch output read back
   * through the writer's filesystem, and stream arguments rejected
@@ -70,6 +72,63 @@ class MicroBatchSpec extends SparkSpec {
         assert(e2.getMessage.contains("guardEvery"))
       }
       assert(started.isEmpty, "no query may start with a zero cadence")
+    } finally started.foreach(_.stop())
+  }
+
+  test("bad maintenance values fail before a batch is appended or a " +
+    "query starts") {
+    import spark.implicits._
+    // the ingest path: before the check, the segment committed first
+    // and only the cadence threw, so every replay appended it again
+    val idx = tmp("lsh_maint")
+    LshIndex.build(spark, sf(), idx,
+      docFilter = Some(col("doc_id") % 50 === 0))
+    val ids = IndexCommit.committedIds(spark, idx)
+    val batch = docs.filter(col("doc_id") % 50 === 1).select("doc_id", "text")
+    val e = intercept[IllegalArgumentException](
+      StreamingDedup.applyIngestBatch(batch, idx, 0L, maxSegments = Some(1)))
+    assert(IndexCommit.committedIds(spark, idx) == ids,
+      "a rejected batch must commit no segment")
+    assert(!BatchLedger.has(spark, idx, 0L))
+    assert(e.getMessage.contains("compact cadence"))
+
+    // the entry points reject before MicroBatch.start
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val stream = MemoryStream[(Long, String)].toDF().toDF("doc_id", "text")
+    val before = spark.streams.active.map(_.id).toSet
+    def started = spark.streams.active.filterNot(q => before(q.id))
+    val p = tmp("paths")
+    val starts: Seq[(String, () => Any)] = Seq(
+      "dedup maintain" -> (() => StreamingDedup.maintainStream(
+        stream, p, tmp("ck"), maxSegments = Some(1))),
+      "dedup probe+maintain" -> (() => StreamingDedup.probeAndMaintainStream(
+        stream, p, p, tmp("ck"), vacuumKeepGens = Some(-1))),
+      "sig maintain" -> (() => StreamingSigDedup.maintainStream(
+        stream, p, tmp("ck"), maxSegments = Some(0))),
+      "sig probe+maintain" -> (() =>
+        StreamingSigDedup.probeAndMaintainStream(
+          stream, p, p, tmp("ck"), vacuumKeepGens = Some(-1))),
+      "sim maintain" -> (() => StreamingSimIngest.maintainStream(
+        stream, p, tmp("ck"), maxSegments = Some(1))),
+      "sim probe+maintain" -> (() =>
+        StreamingSimIngest.probeAndMaintainStream(
+          stream, p, p, tmp("ck"), vacuumKeepGens = Some(-1))),
+      "ann maintain" -> (() => StreamingAnn.maintainStream(
+        stream, p, tmp("ck"), maxSegments = Some(1))),
+      "cluster maintain" -> (() => StreamingCluster.maintainStream(
+        stream, p, tmp("ck"), maxVersions = Some(1))),
+      "cluster vacuum" -> (() => StreamingCluster.maintainStream(
+        stream, p, tmp("ck"), vacuumKeep = Some(0))),
+      "snapshot ingest" -> (() => StreamingSnapshot.ingestStream(
+        stream, p, tmp("ck"), maxChain = Some(0))),
+      "snapshot ledger" -> (() => StreamingSnapshot.ingestStream(
+        stream, p, tmp("ck"), ledgerKeepLast = 0)),
+      "export" -> (() => StreamingExport.exportStream(
+        stream, p, p, p, tmp("ck"), vacuumKeep = Some(0))))
+    try {
+      for ((name, start) <- starts)
+        withClue(name)(intercept[IllegalArgumentException](start()))
+      assert(started.isEmpty, "no query may start with a bad value")
     } finally started.foreach(_.stop())
   }
 }

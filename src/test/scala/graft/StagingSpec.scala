@@ -13,41 +13,6 @@ class StagingSpec extends SparkSpec {
     assert(sliced.columns.toSeq == Seq("l_orderkey", "l_quantity"))
   }
 
-  test("S8 scale path: bucketed tables join without any Exchange") {
-    Seq("orders_bkt", "delta_bkt").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(s"spark-warehouse/$t")
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(loc)
-      }
-    }
-    val orders = spark.read.parquet(s"${sf()}/orders.parquet")
-    val delta = orders.limit(500)
-      .selectExpr("o_orderkey", "o_totalprice * 2 AS o_totalprice")
-    Staging.writeBucketed(orders, "orders_bkt", Seq("o_orderkey"), 8)
-    Staging.writeBucketed(delta, "delta_bkt", Seq("o_orderkey"), 8)
-    // disable the small-table broadcast so the plan demonstrates the
-    // big-big case bucketing exists for: co-located SMJ, zero Exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("orders_bkt")
-        .join(spark.table("delta_bkt"), "o_orderkey")
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), plan)
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(plan.contains("Bucketed: true"), plan)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE orders_bkt")
-      spark.sql("DROP TABLE delta_bkt")
-    }
-  }
-
   test("V2: unknown dialect rejected with sorted available list") {
     val e = intercept[IllegalArgumentException] {
       SqlGen.requireDialect("mysql")
